@@ -332,6 +332,116 @@ def test_orphan_snapshots_ignored_and_cleaned(spark, tmp_path, corpus_frames):
     assert not (tmp_path / "orph" / "trace" / "round=00000099").exists()
 
 
+@pytest.mark.parametrize("crash_at", ["publish", "commit"])
+def test_crash_between_round_write_and_commit(
+    spark, tmp_path, monkeypatch, corpus_frames, py_fixtures, crash_at
+):
+    """A crash after the round's single write and before its manifest
+    commit — mid-publish (one table renamed out of the staging dir, the
+    rest still staged) or after the whole publish — leaves debris that
+    readers never see and that clean_orphans() removes; the resumed crawl
+    then matches the simulator's trace, seen set and results."""
+    import os
+
+    from web_scraper_v1_spark.plans.crawl import TRACE_SCHEMA
+    from web_scraper_v1_spark.sources.snapshots import SnapshotStore
+
+    seeds_df, pages_df, _ = corpus_frames
+    seeds, pages, _ = py_fixtures
+    kwargs = dict(
+        batch_size=30, salt_buckets=4, discover_links=True, max_depth=2
+    )
+    run_dir = tmp_path / f"crash_{crash_at}"
+    eng = CrawlEngine(spark, str(run_dir), **kwargs)
+    eng.run(seeds_df, pages_df, max_rounds=1)
+    n_trace = eng.trace().count()
+
+    class Crash(Exception):
+        pass
+
+    with monkeypatch.context() as m:
+        if crash_at == "commit":
+            def commit_round(*args, **kwargs):
+                raise Crash
+
+            m.setattr(eng.store, "commit_round", commit_round)
+        else:
+            real_rename, renamed = os.rename, []
+
+            def rename(src, dst):
+                if renamed:
+                    raise Crash
+                renamed.append(dst)
+                real_rename(src, dst)
+
+            m.setattr(os, "rename", rename)
+        with pytest.raises(Crash):
+            eng.run(seeds_df, pages_df, max_rounds=2)
+
+    debris = sorted(run_dir.rglob("round=00000001"))
+    assert any(p.parent.name == "trace" for p in debris)
+    if crash_at == "publish":
+        assert any(p.parent.name == "_staging" for p in debris)
+    # readers see round 0 only
+    store = SnapshotStore(str(run_dir))
+    assert store.last_round() == 0
+    assert store.read(spark, "trace", TRACE_SCHEMA).count() == n_trace
+    removed = {os.path.normpath(p) for p in store.clean_orphans()}
+    assert {os.path.normpath(str(p)) for p in debris} <= removed
+    assert not list(run_dir.rglob("round=00000001"))
+
+    resumed = CrawlEngine(spark, str(run_dir), **kwargs)
+    stats = resumed.run(seeds_df, pages_df)
+    assert stats[0].round == 1
+    sim = fx.simulate_crawl(
+        seeds, pages, batch_size=30, discover_links=True, max_depth=2
+    )
+    _assert_trace_equal(_trace_df_to_rows(resumed.trace()), sim.trace)
+    assert {r.url for r in resumed.seen().collect()} == sim.seen_urls
+    golden = {fx.canonicalize_url(p["url"]): p["text"] for p in pages}
+    results = resumed.results().collect()
+    assert sorted(r.url for r in results) == sorted(sim.seen_urls)
+    for row in results:
+        got = "\n".join([row.user_agent, row.ip_address, row.forwarded_host])
+        assert got == golden[row.url], row.url
+
+
+def test_round_job_budget(spark, tmp_path, monkeypatch, corpus_frames):
+    """One corpus-mode round of the fixture crawl (link discovery on) runs
+    within a fixed Spark job budget: the plan is computed once, the
+    lineage is cut after fetch+parse, one prefix-sum pass sequences the
+    trace and the discovered links, one write lands all five tables and
+    the Bloom add is a driver-side insert. The round runs 19 jobs; the
+    budget of 20 leaves one for AQE stage-timing jitter. The same round
+    ran 35 jobs when each phase re-planned the lineage, each table had its
+    own write, sequencing took two prefix-sum passes and the Bloom add its
+    own treeAggregate."""
+    seeds_df, pages_df, _ = corpus_frames
+    # frames an earlier test left cached (a crashed run keeps its seeds
+    # frame) would change which jobs materialize what
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    group = "test-round-job-budget"
+    real = CrawlEngine._run_round
+
+    def grouped(self, *args, **kwargs):
+        sc.setJobGroup(group, "one crawl round")
+        try:
+            return real(self, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(CrawlEngine, "_run_round", grouped)
+    eng = CrawlEngine(
+        spark, str(tmp_path / "jobs"), batch_size=30, salt_buckets=4,
+        discover_links=True, max_depth=2,
+    )
+    stats = eng.run(seeds_df, pages_df, max_rounds=1)
+    assert stats and stats[0].discovered > 0
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 20, n_jobs
+
+
 def test_lineage_metrics_recorded(spark, tmp_path, corpus_frames):
     seeds_df, pages_df, _ = corpus_frames
     eng = CrawlEngine(spark, str(tmp_path / "lin"), batch_size=7)

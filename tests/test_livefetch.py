@@ -162,11 +162,15 @@ def test_crawl_engine_live_mode_trace_parity(spark, tmp_path):
     n_pages, n_hosts = 60, 4
     pages_fx = fx.generate_pages(n_pages, n_hosts)
     served = {}  # path -> fixture body bytes
+    gets = [0]  # GETs served, 200 or 404
+    gets_lock = threading.Lock()
 
     class _Corpus(BaseHTTPRequestHandler):
         protocol_version = "HTTP/1.1"
 
         def do_GET(self):
+            with gets_lock:
+                gets[0] += 1
             body = served.get(self.path)
             if body is None:
                 self.send_response(404)
@@ -219,7 +223,13 @@ def test_crawl_engine_live_mode_trace_parity(spark, tmp_path):
         eng = CrawlEngine(
             spark, str(tmp_path / "live_run"), batch_size=10, fetcher=fetcher
         )
-        eng.run(seeds_df)
+        stats = eng.run(seeds_df)
+        # a live fetch runs once: one GET per selected URL, so a re-planned
+        # lineage or an evicted cache re-sending HTTP shows up here
+        with gets_lock:
+            assert gets[0] == sum(
+                st.wave_size - st.robots_blocked for st in stats
+            )
         sim = fx.simulate_crawl(seeds_local, pages_local, batch_size=10)
         got = [
             dict(seq=r.seq, url=r.url, attempt=r.attempt, outcome=r.outcome)

@@ -86,8 +86,8 @@ def test_unbounded_wave_is_never_broadcast(spark, tmp_path):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan_u = plan_of(unbounded._wave_join(pages, wave)[0])
-        plan_b = plan_of(bounded._wave_join(pages, wave)[0])
+        plan_u = plan_of(unbounded._wave_join(pages, wave))
+        plan_b = plan_of(bounded._wave_join(pages, wave))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "BroadcastExchange" not in plan_u

@@ -20,8 +20,12 @@ two-phase scan:
 
 The only driver-side data is one long per partition — at 4096 partitions
 that is 32 KiB regardless of input size, so the pattern holds at 10^10
-rows. Used by the crawl engine for trace sequencing and for assigning
-enqueue order (queue_seq) to newly discovered frontier URLs.
+rows. The crawl engine runs it ONCE per round, over the union of the
+round's task rows and its freshly discovered links (a leading kind column
+keeps every task before every link): the offsets give trace sequence
+numbers and the discovered links' enqueue order (queue_seq) together, and
+the per-kind totals (``totals_by``) give the round's attempt and discovery
+counts from the same collect.
 """
 
 from __future__ import annotations
@@ -45,10 +49,15 @@ def global_prefix_sum(
     weight: Column,
     out_col: str,
     num_partitions: int | None = None,
-) -> DataFrame:
+    totals_by: str | None = None,
+) -> DataFrame | tuple[DataFrame, dict]:
     """Adds ``out_col`` = sum of ``weight`` over all rows strictly before
     this row in the total order given by ``order_cols`` (which must be a
     total order — ties would make the prefix sum nondeterministic).
+
+    With ``totals_by`` set, returns ``(df, totals)`` where ``totals`` maps
+    each value of that column to its summed weight — read off the same
+    per-partition totals collect, so it costs no extra job.
 
     No single-partition stage: the widest window is partitioned by the
     range-bucket id, and the driver only ever sees per-partition totals.
@@ -63,13 +72,22 @@ def global_prefix_sum(
         .persist()
     )
     _PERSISTED.append(ranged)
-    totals = ranged.groupBy("_pid").agg(F.sum("_w").alias("_t")).collect()
+    keys = ["_pid"] + ([totals_by] if totals_by is not None else [])
+    rows = ranged.groupBy(*keys).agg(F.sum("_w").alias("_t")).collect()
+    per_pid: dict[int, int] = {}
+    by: dict = {}
+    for row in rows:
+        t = row["_t"] or 0
+        per_pid[row["_pid"]] = per_pid.get(row["_pid"], 0) + t
+        if totals_by is not None:
+            by[row[totals_by]] = by.get(row[totals_by], 0) + t
+    if not per_pid:  # empty input: keep the schema contract
+        out = df.withColumn(out_col, F.lit(0).cast("long"))
+        return (out, by) if totals_by is not None else out
     offsets, acc = [], 0
-    for row in sorted(totals, key=lambda r: r["_pid"]):
-        offsets.append((row["_pid"], acc))
-        acc += row["_t"] or 0
-    if not offsets:  # empty input: keep the schema contract
-        return df.withColumn(out_col, F.lit(0).cast("long"))
+    for pid in sorted(per_pid):
+        offsets.append((pid, acc))
+        acc += per_pid[pid]
     off_df = spark.createDataFrame(offsets, "_pid INT, _poff LONG")
     w = (
         Window.partitionBy("_pid")
@@ -77,8 +95,9 @@ def global_prefix_sum(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     local = F.coalesce(F.sum("_w").over(w), F.lit(0))
-    return (
+    out = (
         ranged.join(F.broadcast(off_df), "_pid")
         .withColumn(out_col, (F.col("_poff") + local).cast("long"))
         .drop("_pid", "_poff", "_w")
     )
+    return (out, by) if totals_by is not None else out

@@ -21,9 +21,11 @@ Design for 10^10 URLs:
   rows actually hash into (candidates repartitioned by shard touch ~1
   shard per task). The driver never holds more than the shards it is
   currently merging.
-* the build is distributed: one (S x words) bitmap block per partition,
-  OR-merged tree-wise (``treeAggregate`` — north rule), depth-limited so
-  driver traffic stays logarithmic in partition count.
+* the (re)load build is distributed: one (S x words) bitmap block per
+  partition, OR-merged tree-wise (``treeAggregate`` — north rule),
+  depth-limited so driver traffic stays logarithmic in partition count.
+  A crawl round's increment is bounded by its wave, so ``add`` inserts
+  its keys into the driver-held bitmap from one Arrow collect instead.
 * no false negatives by construction, so exactness is preserved (bloom is
   a prefilter only — SURVEY.md §7 hard part (c)); candidates that are
   definitely-new (bloom miss) bypass the anti-join shuffle entirely.
@@ -165,12 +167,20 @@ class ShardedBloom:
         bit = np.uint64(1) << (pos & np.uint64(63))
         return word, bit
 
-    def add(self, keys: np.ndarray) -> None:
+    def add(self, keys: np.ndarray) -> np.ndarray:
+        """Insert keys; returns the mask of shards whose bits changed (so
+        only those need re-broadcast)."""
+        changed = np.zeros(self.n_shards, dtype=bool)
         if len(keys) == 0:
-            return
+            return changed
         word, bit = self._scatter_indices(keys)
+        word, bit = word.ravel(), bit.ravel()
         flat = self.bits2d.reshape(-1)
-        np.bitwise_or.at(flat, word.ravel(), bit.ravel())
+        fresh = (flat[word] & bit) == 0
+        shard = word[fresh] // np.uint64(self.words_per_shard)
+        changed[shard.astype(np.int64)] = True
+        np.bitwise_or.at(flat, word, bit)
+        return changed
 
     def contains(self, keys: np.ndarray) -> np.ndarray:
         if len(keys) == 0:
@@ -178,13 +188,6 @@ class ShardedBloom:
         word, bit = self._scatter_indices(keys)
         flat = self.bits2d.reshape(-1)
         return ((flat[word] & bit) != 0).all(axis=0)
-
-    def merge_bits(self, bits2d: np.ndarray) -> np.ndarray:
-        """OR another (S x words) block in; returns the mask of shards the
-        merge actually changed (so only those need re-broadcast)."""
-        changed = (bits2d & ~self.bits2d).any(axis=1)
-        self.bits2d |= bits2d
-        return changed
 
 
 def build_sharded_bits(
@@ -659,16 +662,19 @@ class SeenSet:
     def set_exact(self, seen_df: DataFrame) -> None:
         """Swap the exact side (e.g. to a freshly committed snapshot read)
         WITHOUT rebuilding the bloom — used when the bloom has already been
-        updated incrementally via ``add``."""
+        updated incrementally via ``add``. Without a TTL the exact table
+        only grows, so once non-empty it stays so and no probe job runs."""
         self._seen_df = seen_df
-        self._nonempty = bool(seen_df.take(1))
+        if not (self._nonempty and self.ttl_rounds is None):
+            self._nonempty = bool(seen_df.take(1))
 
     def add(self, new_df: DataFrame, round_id: int = 0) -> None:
         """Register newly seen rows (url_hash, url). The exact table is the
-        caller's snapshot append; here we fold the round's hashes into the
-        round's bloom generation (distributed build over the politeness-
-        bounded round, driver OR-merge) and re-broadcast ONLY the shards
-        that changed."""
+        caller's snapshot append; here the round's hashes — bounded by the
+        round's wave — come to the driver in ONE Arrow collect and are
+        inserted into the driver-held filter (the round's bloom generation,
+        or the cuckoo table), a per-window incremental update with no
+        distributed build. Only the shards that changed are re-broadcast."""
         self._seen_df = (
             new_df.select("url_hash", "url")
             if self._seen_df is None
@@ -679,31 +685,22 @@ class SeenSet:
         self._nonempty = True
         if not self.use_bloom:
             return
+        keys = (
+            new_df.select("url_hash").toArrow().column(0).to_numpy()
+            .astype(np.int64)
+        )
         if self.filter_kind == "cuckoo":
             if self._cuckoo is None:
                 self._cuckoo = ShardedCuckoo(
                     self.n_shards, self.cuckoo_buckets_per_shard
                 )
-            increment = build_sharded_cuckoo(
-                new_df,
-                "url_hash",
-                self.n_shards,
-                self.cuckoo_buckets_per_shard,
-            )
-            changed = self._cuckoo.merge(increment)
+            self._cuckoo.add(keys)
+            changed = np.zeros(self.n_shards, dtype=bool)
+            changed[_shard_of(keys, self.n_shards)] = True
             self._publish_cuckoo(changed)
             return
         g = self._gen_of(round_id)
-        bloom = self._gen_for(g)
-        round_bits = build_sharded_bits(
-            new_df,
-            "url_hash",
-            self.n_shards,
-            self.bits_per_shard,
-            self.n_hashes,
-        )
-        changed = bloom.merge_bits(round_bits)
-        self._publish(g, changed)
+        self._publish(g, self._gen_for(g).add(keys))
 
     def delete_keys(self, deleted_df: DataFrame) -> None:
         """KEYED delete (cuckoo kind): remove specific (url_hash, url) rows

@@ -7,20 +7,32 @@ loop (/root/reference/cmd/transmitter/main.go:173-218):
       → robots broadcast-join (disallow prefixes + crawl_delay_s)
       → per-host window top-k ordered by (priority, queue_seq), budget =
         min(host_budget, crawl-delay token budget), salted vs skew
-      → "fetch" = join against the page corpus (O7: the sandbox fetch is a
-         join; a live fetch would be pooled HTTP in mapInPandas)
+        [the plan: every pending row tagged selected | deferred | blocked,
+         computed once]
+      → "fetch" = semi-join of the page corpus against the wave (O7: the
+         sandbox fetch is a join; a live fetch is pooled HTTP in
+         mapInPandas), met by the wave in one left join
       → vectorized extraction UDF (O8, byte-identical)
+      → retry expansion (O6: deterministic failures take retry_limit
+         attempts, exhausted -> dropped)
+        [the task rows: lineage cut by a local checkpoint — nothing after
+         this point re-plans or re-runs the fetch]
+      → one accounting aggregation (outcome counts, bytes, deferred)
       → link discovery (O2 frontier growth: Link: lines → canonicalize →
         dedup vs all-enqueued → next-round frontier rows at depth+1)
-      → retry expansion (O6: attempts column + posexplode — deterministic
-         failures re-emit retry_limit attempt rows, exhausted -> dropped)
-      → append trace / seen / results / processed / frontier snapshots
-        + lineage (one accounting aggregation per round)
+      → ONE prefix-sum pass over task rows ∪ fresh links: trace seqs and
+        discovered queue_seqs together
+      → ONE write of the trace / processed / seen / results / frontier
+        snapshots, then the manifest commit
+      → driver-side Bloom add of the round's keys
 
 Batch barriers (queue.go:64-71 / worker_manager.go:131-138) become Spark
 action boundaries: one committed round == one drained batch. The identity
 epoch counter increments once per round where the reference rotates Tor
-identity (main.go:201-218) — control plane only, recorded in lineage.
+identity (main.go:201-218) — control plane only, recorded in lineage. Each
+phase's jobs carry the description ``crawl r=<round> <phase>`` (phases
+select/fetch, account, sequence, write, seen-add), so Spark's event log
+names the phase of every job.
 
 Crash safety / resume: all writes land as uncommitted snapshot dirs and are
 published atomically by the manifest commit at the end of the round; a rerun
@@ -47,7 +59,7 @@ from web_scraper_v1_spark.operators.frontier import (
 )
 from web_scraper_v1_spark.operators.ordering import global_prefix_sum
 from web_scraper_v1_spark.operators.seen import SeenSet
-from web_scraper_v1_spark.sources.snapshots import SnapshotStore
+from web_scraper_v1_spark.sources.snapshots import TABLE_COL, SnapshotStore
 
 TRACE_SCHEMA = T.StructType(
     [
@@ -115,6 +127,17 @@ FRONTIER_SCHEMA = T.StructType(
     ]
 )
 
+# the columns of a round's single snapshot write: every table's, by name
+# (a name shared by two tables has one type)
+ROUND_LOG_FIELDS = {
+    f.name: f.dataType
+    for schema in (
+        TRACE_SCHEMA, PROCESSED_SCHEMA, SEEN_SCHEMA, RESULTS_SCHEMA,
+        FRONTIER_SCHEMA,
+    )
+    for f in schema.fields
+}
+
 # engine-side twin of fixtures.LINK_PREFIX link lines: one capture per
 # ``Link: <url>`` body line (the parser ignores unknown prefixes, so link
 # lines never affect byte-identical extraction)
@@ -123,6 +146,11 @@ LINK_LINE_RX = r"(?m)^Link: (.*)$"
 
 @dataclass
 class RoundStats:
+    """One committed round's lineage. ``duration_s`` spans the round from
+    its start up to just before the manifest commit: planning, fetch,
+    parse, accounting, sequencing and the snapshot write. The commit and
+    the Bloom add that follow it fall outside."""
+
     round: int
     wave_size: int
     fetched: int
@@ -232,7 +260,6 @@ class CrawlEngine:
         # way a missing/failed row (join miss or status != 200,
         # job_processor.go:130-132) retries then drops identically.
         self.fetcher = fetcher
-        self._live_fetched: DataFrame | None = None  # per-round, see _wave_join
         self.processed_set = SeenSet(
             spark,
             n_bits=bloom_bits,
@@ -349,7 +376,6 @@ class CrawlEngine:
             pages_prepared = pages.select(
                 U.canonicalize(F.col("url")).alias("canonical_url"),
                 F.col("html"),
-                F.octet_length(F.col("html")).alias("page_bytes"),
             )
 
         next_round, next_seq, next_queue_seq = self._load_state()
@@ -408,61 +434,103 @@ class CrawlEngine:
         return stats
 
     def _wave_join(
-        self, pages_prepared: DataFrame, selected: DataFrame
-    ) -> tuple[DataFrame, DataFrame | None]:
-        """The fetch join (O7): wave side broadcast only when
-        ``self.broadcast_wave`` (see __init__); otherwise a shuffle
-        equi-join on canonical_url. Returns (hits, failures): in live
-        mode ``failures`` carries (canonical_url, error_kind) for the
-        non-200/transport rows so the round lineage can attribute
-        failure modes (the reference logs the error class,
-        job_processor.go:126-132); None in corpus mode, where a miss has
-        exactly one cause (absent from the corpus)."""
-        # a prior round that raised after its fetch persisted (fetch/parse/
-        # commit error) never reached its release site — drop the stranded
-        # frame before overwriting the reference, or it leaks one persisted
-        # DataFrame per failed round
-        self._release_live_fetched()
-        wave = F.broadcast(selected) if self.broadcast_wave else selected
-        if self.fetcher is not None:
-            # live mode: fetch the wave over the network, keep the 200s as
-            # the "corpus side" (bounded by the wave, so the same join
-            # strategy reasoning applies), join task metadata back on.
-            # Persisted: the hits join and the failure-kind tally both
-            # read it, and a network fetch must run ONCE per round (a
-            # real deployment would also checkpoint the fetched wave to
-            # the store before parsing — same commit protocol).
-            fetched = self.fetcher(selected).persist()
-            self._live_fetched = fetched
-            fetched_ok = fetched.filter(
-                F.col("status") == F.lit(200)
+        self, pages_prepared: DataFrame | None, selected: DataFrame
+    ) -> DataFrame:
+        """The fetch (O7), met by the wave: every selected row, plus html,
+        page_bytes, ``_ok`` and ``error_kind`` from its fetch row (null
+        when it has none — absent from the corpus, or dropped by a custom
+        fetcher). ``_ok`` marks a usable response (a corpus hit, or a live
+        status 200); ``error_kind`` attributes a live failure (timeout |
+        refused | transport | non200 — the reference logs the error class,
+        job_processor.go:126-132).
+
+        Corpus mode fetches by a semi-join of the corpus against the
+        wave's keys, live mode by mapping the wave through the fetcher.
+        Both the wave's keys and the fetch rows are broadcast only when
+        ``self.broadcast_wave`` (see __init__): the corpus never shuffles,
+        and otherwise every join shuffles on canonical_url (the runtime
+        bloom-filter join prunes the corpus scan from the wave side)."""
+        if self.fetcher is None:
+            keys = selected.select("canonical_url")
+            fetched = pages_prepared.join(
+                F.broadcast(keys) if self.broadcast_wave else keys,
+                "canonical_url",
+                "left_semi",
             ).select(
                 "canonical_url",
                 "html",
-                F.octet_length("html").alias("page_bytes"),
+                F.lit(True).alias("_ok"),
+                F.lit(None).cast("string").alias("error_kind"),
             )
-            failures = fetched.filter(F.col("status") != F.lit(200))
-            if "error_kind" in fetched.columns:
-                failures = failures.select("canonical_url", "error_kind")
-            else:  # custom fetcher predating the failure taxonomy
-                failures = failures.select(
-                    "canonical_url",
-                    F.lit("transport").alias("error_kind"),
+        else:
+            # one partition per task slot, each host's URLs in one
+            # partition: as many requests in flight as there are slots
+            fetched = self.fetcher(
+                selected.repartition(
+                    self.spark.sparkContext.defaultParallelism, "host"
                 )
-            return fetched_ok.join(wave, "canonical_url", "inner"), failures
-        return pages_prepared.join(wave, "canonical_url", "inner"), None
+            )
+            ok = F.col("status") == F.lit(200)
+            # a custom fetcher predating the failure taxonomy has no
+            # error_kind
+            kind = (
+                F.col("error_kind")
+                if "error_kind" in fetched.columns
+                else F.lit(None).cast("string")
+            )
+            fetched = fetched.select(
+                "canonical_url",
+                "html",
+                ok.alias("_ok"),
+                F.when(~ok, F.coalesce(kind, F.lit("transport"))).alias(
+                    "error_kind"
+                ),
+            )
+        fetched = fetched.withColumn("page_bytes", F.octet_length("html"))
+        if not self.broadcast_wave:
+            return selected.join(fetched, "canonical_url", "left")
+        # a bounded wave parses in one partition per task slot: each
+        # partition costs the extraction UDF a Python worker round trip
+        slots = self.spark.sparkContext.defaultParallelism
+        return selected.coalesce(slots).join(
+            F.broadcast(fetched), "canonical_url", "left"
+        )
 
     def _run_round(
         self,
         r: int,
         seq_base: int,
         pending: DataFrame,
-        pages_prepared: DataFrame,
+        pages_prepared: DataFrame | None,
         robots: DataFrame | None,
         enqueued_all: DataFrame | None = None,
         next_queue_seq: int = 0,
     ) -> RoundStats | None:
+        try:
+            return self._round_body(
+                r, seq_base, pending, pages_prepared, robots, enqueued_all,
+                next_queue_seq,
+            )
+        finally:
+            self.spark.sparkContext.setJobDescription(None)
+            ordering.release_cached()
+
+    def _round_body(
+        self, r, seq_base, pending, pages_prepared, robots, enqueued_all,
+        next_queue_seq,
+    ) -> RoundStats | None:
         t0 = time.monotonic()
+        sc = self.spark.sparkContext
+
+        def phase(name: str) -> None:
+            # names each job in Spark's event log by its round and phase
+            sc.setJobDescription(f"crawl r={r} {name}")
+
+        # -- plan: robots, then the per-host top-k wave, computed ONCE. One
+        # locally checkpointed frame holds every pending row with its state
+        # (selected | deferred | blocked); the branches below are filters
+        # of it and never re-plan its lineage.
+        phase("select/fetch")
         checked = apply_robots(pending, robots)
         budget_col = None
         if self.round_duration_s is not None:
@@ -489,156 +557,95 @@ class CrawlEngine:
             salt_buckets=self.salt_buckets,
             budget_col=budget_col,
         )
-        selected = ranked.filter(F.col("selected")).drop("selected").cache()
-        deferred_rows = ranked.filter(~F.col("selected"))
-        blocked = checked.filter(F.col("robots_blocked"))
+        task_cols = (
+            "queue_seq", "priority", "depth", "canonical_url", "url_hash",
+            "host",
+        )
+        planned = (
+            ranked.select(
+                *task_cols,
+                F.when(F.col("selected"), F.lit("selected"))
+                .otherwise(F.lit("deferred"))
+                .alias("_state"),
+            )
+            .unionByName(
+                checked.filter(F.col("robots_blocked")).select(
+                    *task_cols, F.lit("blocked").alias("_state")
+                )
+            )
+            .localCheckpoint(eager=False)
+        )
+        selected = planned.filter(F.col("_state") == "selected")
 
-        # -- fetch = join wave against the corpus. When a host budget
-        # provably bounds the wave (self.broadcast_wave), broadcast it so
-        # the 100 TB corpus never shuffles: an inner broadcast-hash join
-        # finds hits, misses come from a broadcast anti-join of the wave
-        # against the hit keys. With NO budget the wave can be the whole
-        # pending frontier — unbroadcastable at 10^10 URLs — so both joins
-        # fall back to shuffle equi-joins on canonical_url (the runtime
-        # bloom-filter join injected from the wave side prunes the corpus
-        # scan; AQE picks the physical strategy from runtime sizes).
-        hits, fetch_failures = self._wave_join(pages_prepared, selected)
-        if self.broadcast_wave and self.fetcher is None:
-            # the broadcast join keeps the corpus scan and the Arrow
-            # extraction UDF in ONE stage — measured bimodally 3-10x
-            # slower on this VM at >=16 tasks (BENCH.md §4), and on a
-            # real cluster it couples scan IO with Python CPU. The wave
-            # bounds the hit set, so one cheap exchange moves the parse
-            # stage off the scan. (The shuffle-join path already has an
-            # exchange here; the live-fetch path never scans parquet.)
-            hits = hits.repartition("canonical_url")
-        parsed = hits.withColumn(
+        # -- fetch + parse, then cut the lineage: every later action plans
+        # over this flat frame, and a live fetch can never be re-sent by a
+        # re-planned action or an evicted cache.
+        joined = self._wave_join(pages_prepared, selected)
+        r_col = F.col("r")
+        hit = F.coalesce(F.col("_ok"), F.lit(False))
+        ok = hit & ~r_col["parse_error"]
+        # a failure finalizes after retry_limit attempts (deterministic
+        # sandbox: every retry fails identically), worker.go:81-95
+        fetch_rows = joined.withColumn(
             "r", extract_receiver_response(F.col("html"))
         ).select(
-            "queue_seq",
-            "priority",
-            "depth",
-            "canonical_url",
-            "url_hash",
-            "host",
-            "page_bytes",
-            # outlink discovery source: JVM-side regex over the body
-            # (link lines are ignored by the byte-parity extractor);
-            # skipped entirely when discovery is off
-            (
-                F.regexp_extract_all(
-                    F.decode("html", "UTF-8"), F.lit(LINK_LINE_RX), 1
+            *task_cols,
+            F.when(ok, F.lit("fetched"))
+            .otherwise(F.lit("failing"))
+            .alias("outcome_kind"),
+            F.when(ok, F.lit(1))
+            .otherwise(F.lit(self.retry_limit))
+            .alias("n_attempts"),
+            r_col["user_agent"].alias("user_agent"),
+            r_col["ip_address"].alias("ip_address"),
+            r_col["forwarded_host"].alias("forwarded_host"),
+            F.when(hit, F.col("page_bytes")).alias("page_bytes"),
+            # corpus mode: a miss has one cause, absence from the corpus
+            F.when(hit, F.when(r_col["parse_error"], F.lit("parse")))
+            .otherwise(
+                F.coalesce(
+                    "error_kind",
+                    F.lit("miss" if self.fetcher is None else "transport"),
                 )
+            )
+            .alias("error_kind"),
+            # outlink discovery source: JVM-side regex over the body (link
+            # lines are ignored by the byte-parity extractor)
+            *(
+                [
+                    F.regexp_extract_all(
+                        F.decode("html", "UTF-8"), F.lit(LINK_LINE_RX), 1
+                    ).alias("outlinks")
+                ]
                 if self.discover_links
-                else F.array().cast("array<string>")
-            ).alias("outlinks"),
-            F.col("r.user_agent").alias("user_agent"),
-            F.col("r.ip_address").alias("ip_address"),
-            F.col("r.forwarded_host").alias("forwarded_host"),
-            F.col("r.parse_error").alias("parse_error"),
-        ).cache()
-        hit_keys = parsed.select("canonical_url")
-        misses = selected.join(
-            F.broadcast(hit_keys) if self.broadcast_wave else hit_keys,
-            "canonical_url",
-            "left_anti",
+                else []
+            ),
         )
-        if fetch_failures is not None:
-            # live mode: attach the fetcher's failure-mode attribution
-            # (timeout | refused | transport | non200); the failure frame
-            # is wave-bounded, same join-strategy reasoning as the wave
-            misses = misses.join(
-                F.broadcast(fetch_failures)
-                if self.broadcast_wave
-                else fetch_failures,
-                "canonical_url",
-                "left",
-            ).withColumn(
-                "error_kind", F.coalesce("error_kind", F.lit("transport"))
-            )
-        else:
-            # corpus mode: a miss has exactly one cause — the URL is
-            # absent from the corpus (the status != 200 analog)
-            misses = misses.withColumn("error_kind", F.lit("miss"))
-        misses = misses.select(
-            "queue_seq",
-            "priority",
-            "canonical_url",
-            "url_hash",
-            "host",
-            F.lit(None).cast("long").alias("page_bytes"),
-            F.lit(None).cast("string").alias("user_agent"),
-            F.lit(None).cast("string").alias("ip_address"),
-            F.lit(None).cast("string").alias("forwarded_host"),
-            F.lit(True).alias("parse_error"),
-            "error_kind",
-        )
-        fetch_rows = (
-            parsed.drop("depth", "outlinks")
-            .withColumn(
-                "error_kind",
-                F.when(F.col("parse_error"), F.lit("parse")),
-            )
-            .unionByName(misses)
-        )
-
-        # -- task rows: one per finalized task, with its attempt count.
-        # fetch-or-parse failure => retried then dropped (deterministic
-        # sandbox: every retry fails identically), worker.go:81-95.
-        common = [
-            "queue_seq",
-            "priority",
-            "canonical_url",
-            "url_hash",
-            "host",
-            "outcome_kind",
-            "n_attempts",
-            "user_agent",
-            "ip_address",
-            "forwarded_host",
-            "page_bytes",
-            "error_kind",
-        ]
-        ok = ~F.col("parse_error")
-        fetched_rows = (
-            fetch_rows.withColumn(
-                "outcome_kind",
-                F.when(ok, F.lit("fetched")).otherwise(F.lit("failing")),
-            )
-            .withColumn(
-                "n_attempts",
-                F.when(ok, F.lit(1)).otherwise(F.lit(self.retry_limit)),
-            )
-            .select(*common)
-        )
-        blocked_rows = blocked.select(
-            "queue_seq",
-            "priority",
-            "canonical_url",
-            "url_hash",
-            "host",
+        blocked_rows = planned.filter(F.col("_state") == "blocked").select(
+            *task_cols,
             F.lit("blocked").alias("outcome_kind"),
             F.lit(1).alias("n_attempts"),
-            F.lit(None).cast("string").alias("user_agent"),
-            F.lit(None).cast("string").alias("ip_address"),
-            F.lit(None).cast("string").alias("forwarded_host"),
-            F.lit(None).cast("long").alias("page_bytes"),
-            F.lit(None).cast("string").alias("error_kind"),
         )
-        task_rows = fetched_rows.unionByName(blocked_rows).cache()
+        task_rows = fetch_rows.unionByName(
+            blocked_rows, allowMissingColumns=True
+        )
+        if self.broadcast_wave:
+            # every later job over the flat frame runs this few tasks
+            task_rows = task_rows.coalesce(sc.defaultParallelism)
+        task_rows = task_rows.localCheckpoint(eager=True)
 
-        # -- ONE accounting aggregation per round: outcome counts, attempt
-        # and byte sums, per-partition histogram, and the deferred count
-        # all come from a single grouped collect over (kind, partition) —
-        # the result is <= kinds x partitions rows, driver-tiny. This also
-        # materializes the task_rows cache.
+        # -- ONE accounting aggregation: outcome counts, attempt and byte
+        # sums, the per-partition histogram and the deferred count from a
+        # single grouped collect over (kind, partition) — <= kinds x
+        # partitions rows, driver-tiny.
+        phase("account")
         accounting = task_rows.select(
             "outcome_kind",
             "error_kind",
             F.col("n_attempts").cast("long").alias("att"),
             F.coalesce("page_bytes", F.lit(0)).cast("long").alias("bytes"),
         ).unionByName(
-            deferred_rows.select(
+            planned.filter(F.col("_state") == "deferred").select(
                 F.lit("deferred").alias("outcome_kind"),
                 F.lit(None).cast("string").alias("error_kind"),
                 F.lit(0).cast("long").alias("att"),
@@ -680,166 +687,135 @@ class CrawlEngine:
         n_blocked = by_kind.get("blocked", 0)
         n_tasks = n_fetched + n_dropped + n_blocked
         if n_tasks == 0:
-            selected.unpersist()
-            parsed.unpersist()
-            task_rows.unpersist()
-            self._release_live_fetched()
             return None
 
-        # -- global sequential trace ((priority, queue) order): each task
-        # occupies n_attempts consecutive seqs. The prefix sum over the
-        # global order is computed shuffle-parallel (range partition +
-        # per-partition windows + driver prefix of per-partition totals,
-        # operators/ordering.py) — no single-partition sort even when the
-        # wave is the whole unbudgeted frontier.
-        exploded = (
-            global_prefix_sum(
-                task_rows,
-                ("priority", "queue_seq"),
-                F.col("n_attempts"),
-                "_start",
-            )
-            .select(
-                "*",
-                F.posexplode(F.sequence(F.lit(1), F.col("n_attempts"))).alias(
-                    "_i", "attempt"
-                ),
-            )
-            .withColumn(
-                "outcome",
-                F.when(F.col("outcome_kind") == "fetched", F.lit("fetched"))
-                .when(F.col("outcome_kind") == "blocked", F.lit("robots_blocked"))
-                .when(
-                    F.col("attempt") < F.lit(self.retry_limit),
-                    F.lit("failed"),
-                )
-                .otherwise(F.lit("dropped")),
-            )
-            .withColumn(
-                "seq",
-                F.lit(seq_base) + F.col("_start") + F.col("attempt") - 1,
-            )
+        # -- sequencing, ONE prefix-sum pass: the round's task rows (kind
+        # 0, (priority, queue_seq) order, each occupying n_attempts
+        # consecutive trace seqs) and its freshly discovered links (kind
+        # 1, parent-trace order, one enqueue slot each) share a global
+        # exclusive prefix sum, computed shuffle-parallel
+        # (operators/ordering.py — no single-partition sort even when the
+        # wave is the whole unbudgeted frontier). The per-kind totals give
+        # the discovery count.
+        phase("sequence")
+        seq_in = task_rows.select(
+            "*",
+            F.lit(0).alias("_kind"),
+            F.col("priority").alias("_o1"),
+            F.col("queue_seq").alias("_o2"),
+            F.lit(0).alias("_o3"),
+            F.col("n_attempts").alias("_weight"),
         )
-        trace_df = exploded.select(
-            F.col("seq").cast("long"),
-            F.lit(r).cast("int").alias("round"),
-            F.lit(r).cast("int").alias("identity_epoch"),
-            F.col("canonical_url").alias("url"),
-            "host",
-            F.col("attempt").cast("int"),
-            "outcome",
-        )
-
-        seen_df = (
-            task_rows.filter(F.col("outcome_kind") == "fetched")
-            .select(
-                "url_hash",
-                F.col("canonical_url").alias("url"),
-                F.lit(r).cast("int").alias("round"),
-            )
-        )
-        results_df = task_rows.filter(
-            F.col("outcome_kind") == "fetched"
-        ).select(
-            F.col("canonical_url").alias("url"),
-            "user_agent",
-            "ip_address",
-            "forwarded_host",
-            F.lit(r).cast("int").alias("round"),
-        )
-        processed_df = task_rows.select(
-            "url_hash",
-            F.col("canonical_url").alias("url"),
-            F.lit(r).cast("int").alias("round"),
-            F.when(F.col("outcome_kind") == "fetched", "fetched")
-            .when(F.col("outcome_kind") == "blocked", "robots_blocked")
-            .otherwise("dropped")
-            .alias("outcome"),
-        )
-
-        # -- link discovery: fetched pages' outlinks become next-round
-        # frontier rows (O2 frontier growth). Dedup is two-stage: first
-        # occurrence within the round's discoveries (window keyed by the
-        # canonical URL, parent-trace order), then an anti-join against
-        # everything ever enqueued; enqueue order (queue_seq) is assigned
-        # by the same scalable prefix-sum as the trace.
-        n_discovered = 0
-        frontier_add = None
         if self.discover_links:
-            cand = parsed.filter(~F.col("parse_error")).select(
-                F.col("priority").alias("parent_prio"),
-                F.col("queue_seq").alias("parent_seq"),
-                F.col("depth").alias("parent_depth"),
-                F.posexplode("outlinks").alias("link_idx", "target"),
+            seq_in = seq_in.drop("outlinks").unionByName(
+                self._discover(task_rows, enqueued_all),
+                allowMissingColumns=True,
             )
-            cand = (
-                cand.withColumn(
-                    "canonical_url", U.canonicalize(F.col("target"))
-                )
-                .withColumn("url_hash", U.url_hash(F.col("canonical_url")))
-                .withColumn("host", U.host(F.col("target")))
-                .withColumn("path", U.path(F.col("target")))
-                .withColumn("depth", (F.col("parent_depth") + 1).cast("int"))
-            )
-            if self.max_depth is not None:
-                cand = cand.filter(F.col("depth") <= self.max_depth)
-            w_first = Window.partitionBy("canonical_url").orderBy(
-                "parent_prio", "parent_seq", "link_idx"
-            )
-            firsts = (
-                cand.withColumn("_rn", F.row_number().over(w_first))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-            fresh = firsts.join(
-                enqueued_all.select("url_hash", "canonical_url"),
-                ["url_hash", "canonical_url"],
-                "left_anti",
-            )
-            assigned = global_prefix_sum(
-                fresh,
-                ("parent_prio", "parent_seq", "link_idx"),
-                F.lit(1),
-                "_rank",
-            )
-            frontier_add = assigned.select(
-                (F.lit(next_queue_seq) + F.col("_rank"))
-                .cast("long")
-                .alias("queue_seq"),
-                F.lit(0).cast("int").alias("priority"),
-                F.col("depth"),
-                "canonical_url",
-                "url_hash",
-                "host",
-                "path",
-                F.lit(r + 1).cast("int").alias("arrival_round"),
-            ).cache()
-            n_discovered = frontier_add.count()
+        prefixed, totals = global_prefix_sum(
+            seq_in,
+            ("_kind", "_o1", "_o2", "_o3"),
+            F.col("_weight"),
+            "_start",
+            totals_by="_kind",
+        )
+        n_discovered = totals.get(1, 0)
 
-        # -- write snapshots (invisible until the manifest commit below);
-        # seen/processed/frontier are host-bucket-partitioned when enabled
-        def _write(df, table, host_expr=None):
-            if self.host_buckets and host_expr is not None:
-                return self.store.write_snapshot(
-                    df.withColumn("host_bucket", self._bucket_expr(host_expr)),
-                    table,
-                    r,
-                    partition_by="host_bucket",
-                )
-            return self.store.write_snapshot(df, table, r)
-
-        url_host = U.host(F.col("url"))
-        tables = {
-            "trace": _write(trace_df, "trace"),
-            "processed": _write(processed_df, "processed", url_host),
-        }
-        if n_fetched:
-            tables["seen"] = _write(seen_df, "seen", url_host)
-            tables["results"] = _write(results_df, "results")
-        if n_discovered:
-            tables["frontier"] = _write(
-                frontier_add, "frontier", F.col("host")
+        # -- the round's five tables, written by ONE Spark write (invisible
+        # until the manifest commit below). One projection turns each
+        # sequenced row into its output rows — n_attempts trace rows plus a
+        # processed/seen/results row for a task, a frontier row for a link
+        # — as superset-schema structs, exploded into one frame; seen/
+        # processed/frontier are host-bucket-partitioned when enabled. The
+        # projection is SQL text: one planner call instead of a few hundred
+        # Column calls, each a driver round trip.
+        phase("write")
+        bucketed = ("processed", "seen", "frontier")
+        if self.host_buckets:
+            prefixed = prefixed.select(
+                "*",
+                self._bucket_expr(U.host(F.col("canonical_url"))).alias(
+                    "_url_bucket"
+                ),
+                self._bucket_expr(F.col("host")).alias("_host_bucket"),
             )
+
+        def row(table: str, bucket: str = "NULL", **cols: str) -> str:
+            fields = [f"'{TABLE_COL}', '{table}'"] + [
+                f"'{n}', CAST({cols.get(n, 'NULL')} AS {t.simpleString()})"
+                for n, t in ROUND_LOG_FIELDS.items()
+            ]
+            if self.host_buckets:
+                fields.append(f"'host_bucket', CAST({bucket} AS INT)")
+            return f"named_struct({', '.join(fields)})"
+
+        outcome = (
+            "CASE WHEN outcome_kind = 'fetched' THEN 'fetched'"
+            " WHEN outcome_kind = 'blocked' THEN 'robots_blocked'"
+        )
+        trace = row(
+            "trace",
+            seq=f"{seq_base} + _start + a - 1",
+            round=str(r),
+            identity_epoch=str(r),
+            url="canonical_url",
+            host="host",
+            attempt="a",
+            outcome=f"{outcome} WHEN a < {self.retry_limit} THEN 'failed'"
+            " ELSE 'dropped' END",
+        )
+        tasks = [
+            row(
+                "processed", "_url_bucket", url_hash="url_hash",
+                url="canonical_url", round=str(r),
+                outcome=f"{outcome} ELSE 'dropped' END",
+            ),
+            "IF(outcome_kind = 'fetched', "
+            + row(
+                "seen", "_url_bucket", url_hash="url_hash",
+                url="canonical_url", round=str(r),
+            )
+            + ", NULL)",
+            "IF(outcome_kind = 'fetched', "
+            + row(
+                "results", url="canonical_url", user_agent="user_agent",
+                ip_address="ip_address", forwarded_host="forwarded_host",
+                round=str(r),
+            )
+            + ", NULL)",
+        ]
+        tables = ["trace", "processed", "seen", "results"]
+        links = "array()"
+        if self.discover_links:
+            links = "array(" + row(
+                "frontier",
+                "_host_bucket",
+                queue_seq=f"{next_queue_seq - totals.get(0, 0)} + _start",
+                priority="0",
+                depth="depth",
+                canonical_url="canonical_url",
+                url_hash="url_hash",
+                host="host",
+                path="path",
+                arrival_round=str(r + 1),
+            ) + ")"
+            tables.append("frontier")
+        out = prefixed.selectExpr(
+            "inline(filter(IF(_kind = 0, concat("
+            f"transform(sequence(1, n_attempts), a -> {trace}), "
+            f"array({', '.join(tasks)})), {links}), x -> x IS NOT NULL))"
+        )
+        if self.broadcast_wave:
+            # a budget bounds the round's output as it bounds the wave:
+            # one file per table (and host bucket) is enough
+            out = out.coalesce(1)
+        tables = self.store.write_snapshot(
+            out,
+            tables,
+            r,
+            partition_by={t: "host_bucket" for t in bucketed}
+            if self.host_buckets
+            else None,
+        )
 
         st = RoundStats(
             round=r,
@@ -878,19 +854,61 @@ class CrawlEngine:
             },
         )
         # fold the round's finalized keys into the round's bloom generation
-        # (distributed build over the bounded wave, driver-side OR-merge)
-        self.processed_set.add(processed_df, round_id=r)
-
-        selected.unpersist()
-        parsed.unpersist()
-        if frontier_add is not None:
-            frontier_add.unpersist()
-        task_rows.unpersist()
-        self._release_live_fetched()
-        ordering.release_cached()
+        # (driver-side insert from one collect of the flat task rows)
+        phase("seen-add")
+        self.processed_set.add(
+            task_rows.select("url_hash", F.col("canonical_url").alias("url")),
+            round_id=r,
+        )
         return st
 
-    def _release_live_fetched(self) -> None:
-        if self._live_fetched is not None:
-            self._live_fetched.unpersist()
-            self._live_fetched = None
+    def _discover(
+        self, task_rows: DataFrame, enqueued_all: DataFrame
+    ) -> DataFrame:
+        """Link discovery (O2 frontier growth): fetched pages' outlinks
+        become next-round frontier candidates, in the sequencing pass's
+        kind-1 shape. Dedup is two-stage: first occurrence within the
+        round's discoveries (window keyed by the canonical URL, parent-
+        trace order), then an anti-join against everything ever enqueued."""
+        cand = task_rows.filter(F.col("outcome_kind") == "fetched").select(
+            F.col("priority").alias("parent_prio"),
+            F.col("queue_seq").alias("parent_seq"),
+            (F.col("depth") + 1).cast("int").alias("depth"),
+            F.posexplode("outlinks").alias("link_idx", "target"),
+        )
+        target = F.col("target")
+        canonical = U.canonicalize(target)
+        cand = cand.select(
+            "*",
+            canonical.alias("canonical_url"),
+            U.url_hash(canonical).alias("url_hash"),
+            U.host(target).alias("host"),
+            U.path(target).alias("path"),
+        )
+        if self.max_depth is not None:
+            cand = cand.filter(F.col("depth") <= self.max_depth)
+        w_first = Window.partitionBy("canonical_url").orderBy(
+            "parent_prio", "parent_seq", "link_idx"
+        )
+        firsts = (
+            cand.withColumn("_rn", F.row_number().over(w_first))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+        fresh = firsts.join(
+            enqueued_all.select("url_hash", "canonical_url"),
+            ["url_hash", "canonical_url"],
+            "left_anti",
+        )
+        return fresh.select(
+            "canonical_url",
+            "url_hash",
+            "host",
+            "path",
+            "depth",
+            F.lit(1).alias("_kind"),
+            F.col("parent_prio").alias("_o1"),
+            F.col("parent_seq").alias("_o2"),
+            F.col("link_idx").alias("_o3"),
+            F.lit(1).alias("_weight"),
+        )

@@ -85,6 +85,12 @@ def build_session(
         # prunes the corpus scan from the wave side when the fetch join
         # runs as a shuffle join (unbounded-wave config, plans/crawl.py)
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+        # PySpark 4 records the Python call site of every Column/DataFrame
+        # call for error messages, at three extra driver round trips per
+        # call; a crawl round builds a few thousand of them, which cost
+        # seconds of driver time per round. Errors keep the JVM plan and
+        # stack either way.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -14,6 +14,17 @@ Layout::
       trace/round=00000003/*.parquet # one snapshot dir per (table, round)
       seen/round=00000003/*.parquet
       ...
+      _staging/round=00000003/       # a multi-table write in flight
+
+A crawl round writes all of its tables with ONE Spark write: the rows of
+every table go out together, ``partitionBy`` the table name, into
+``_staging/round=R/_table=<table>/``; each table's subdir is then renamed
+to its ``<table>/round=R`` snapshot dir and the staging dir is removed,
+all before the manifest commit. A multi-table snapshot's parquet files
+carry the union of the tables' columns (a table's unused columns are
+null); readers project their table's schema, so the layout seen by
+``read``, ``read_as_of``, ``rollback``, ``compact`` and ``clean_orphans``
+is the per-table one above.
 
 Each round record also keeps its own table->path map, giving the two other
 Iceberg table-format affordances the engine relies on: time travel
@@ -25,8 +36,9 @@ The manifest maps table -> [committed snapshot dirs] plus per-round metadata
 (the RabbitMQ "batch" analog: one crawl round == one committed snapshot set,
 replacing the at-most-once auto-ack stream at
 /root/reference/internal/message/consumer/rabbitmq_consumer.go:59 with
-exactly-once batch commits). A crash mid-round leaves orphan dirs that are
-never referenced by the manifest and are ignored (and cleaned) on resume.
+exactly-once batch commits). A crash mid-round leaves orphan dirs — staged
+or already renamed — that are never referenced by the manifest and are
+ignored (and cleaned) on resume.
 
 At 10^10-URL scale each table is additionally hash-partitioned by
 ``host_bucket`` inside a snapshot: ``write_snapshot(partition_by=
@@ -41,9 +53,16 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+# the column naming each row's table in a multi-table write
+TABLE_COL = "_table"
+STAGING_DIR = "_staging"
+# the partition dir Spark writes for a null partition value
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 class SnapshotStore:
@@ -77,27 +96,69 @@ class SnapshotStore:
     def write_snapshot(
         self,
         df: DataFrame,
-        table: str,
+        table: str | Sequence[str],
         round_id: int,
-        partition_by: str | None = None,
-    ) -> str:
-        """Write one snapshot dir; NOT visible to readers until
-        ``commit_round`` lands the manifest. ``partition_by`` hash-buckets
-        the snapshot's files by that column (host_bucket at scale) so
-        per-bucket readers prune whole directories."""
-        path = self.snapshot_dir(table, round_id)
+        partition_by: str | dict[str, str] | None = None,
+    ) -> str | dict[str, str]:
+        """Write snapshot dirs; NOT visible to readers until
+        ``commit_round`` lands the manifest.
+
+        ``table`` names one table: ``df`` is written to its snapshot dir,
+        whose path is returned; ``partition_by`` hash-buckets the files by
+        that column (host_bucket at scale) so per-bucket readers prune
+        whole directories.
+
+        ``table`` lists several tables: ``df`` carries a ``TABLE_COL``
+        column naming each row's table, and all of them are written by ONE
+        Spark write (see the module docstring); returns ``{table: path}``
+        for the tables that got rows. ``partition_by`` then maps the
+        partitioned tables to their (shared) partition column; the other
+        tables' rows must hold null in it."""
+        if isinstance(table, str):
+            path = self._fresh_dir(self.snapshot_dir(table, round_id))
+            writer = df.write.mode("overwrite")
+            if partition_by is not None:
+                writer = writer.partitionBy(partition_by)
+                self._mark_partitioned(table, partition_by)
+            writer.parquet(path)
+            return path
+        parts = partition_by or {}
+        pcols = sorted(set(parts.values()))
+        assert len(pcols) <= 1, "partitioned tables must share one column"
+        staging = self._fresh_dir(
+            os.path.join(self.run_dir, STAGING_DIR, f"round={round_id:08d}")
+        )
+        df.write.mode("overwrite").partitionBy(TABLE_COL, *pcols).parquet(
+            staging
+        )
+        paths = {}
+        for name in table:
+            src = os.path.join(staging, f"{TABLE_COL}={name}")
+            if not os.path.isdir(src):  # the table got no rows
+                continue
+            if name in parts:
+                self._mark_partitioned(name, parts[name])
+            elif pcols:  # a flat table's rows sit in the null partition
+                src = os.path.join(src, f"{pcols[0]}={_NULL_PARTITION}")
+            dest = self._fresh_dir(self.snapshot_dir(name, round_id))
+            os.makedirs(os.path.dirname(dest), exist_ok=True)
+            os.rename(src, dest)
+            paths[name] = dest
+        shutil.rmtree(staging)
+        return paths
+
+    @staticmethod
+    def _fresh_dir(path: str) -> str:
         if os.path.exists(path):  # orphan from a crashed attempt
             shutil.rmtree(path)
-        writer = df.write.mode("overwrite")
-        if partition_by is not None:
-            writer = writer.partitionBy(partition_by)
-            # remembered (and committed with the round) so readers union
-            # the snapshot dirs instead of a single multi-root read: roots
-            # named round=N with partition subdirs beneath them trip
-            # Spark's conflicting-directory-structure detection
-            self._manifest["partitioned"][table] = partition_by
-        writer.parquet(path)
         return path
+
+    def _mark_partitioned(self, table: str, column: str) -> None:
+        # remembered (and committed with the round) so readers union the
+        # snapshot dirs instead of a single multi-root read: roots named
+        # round=N with partition subdirs beneath them trip Spark's
+        # conflicting-directory-structure detection
+        self._manifest["partitioned"][table] = column
 
     def commit_round(self, round_id: int, tables: dict[str, str], meta: dict) -> None:
         """Atomically publish all of a round's snapshots + its lineage row.
