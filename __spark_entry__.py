@@ -2,9 +2,10 @@
 
 ``entry(spark)`` runs the flagship crawl slice (seeds -> dedup -> politeness
 wave -> fetch-as-join -> vectorized extraction) on sf0.001; ``queries()`` /
-``oracle_sql()`` expose the full operator registry from
-``web_scraper_v1_spark.queries`` (SURVEY.md §2 coverage + the training-data
-pipeline layer), each Spark query paired with its exact DuckDB twin.
+``oracle_sql()`` expose the crawl system's operator registry from
+``web_scraper_v1_spark.queries`` (SURVEY.md §2 O-rows, the frontier, seen-set
+and politeness operators, and the stream plane), each Spark query paired
+with its exact DuckDB twin.
 """
 
 from __future__ import annotations
@@ -30,18 +31,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 + the
-    training-data pipeline layer (79 in round 5). Each callable takes
-    (spark, sf_dir) and returns a DataFrame; computed columns are aliased
-    to match the oracle.
-
-    ORDER MATTERS: the driver's correctness harness checks the FIRST 50
-    entries (observed cap, CORRECTNESS_r03), so the registry export order
-    is SELF-MAINTAINING: names sort by last-driver-verified round read
-    from the CORRECTNESS_r*.json artifacts (never-verified/new first),
-    with this round's operator-code refactors forced to the head
-    (queries.py::_REVERIFY); scripts/selfcheck.py checks all 79 with no
-    cap."""
+    """One entry per crawl-system operator, in definition order. Each
+    callable takes (spark, sf_dir) and returns a DataFrame; computed
+    columns are aliased to match the oracle. The registry stays within the
+    driver's 50-query correctness window (tests/test_plans.py asserts
+    it), so every entry is checked every time; scripts/selfcheck.py runs
+    the same check locally."""
     base = Q.queries()
 
     def _wrap(fn):
@@ -56,8 +51,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI-SQL twin per registry query — EVERY query in
-    ``queries()`` has an exact value-hash oracle (the formerly rows-only
-    trio ann_lsh / multimodal_features / winnow_fingerprint gained exact
-    oracles in round 2: deterministic planes/codec replayed as SQL
-    literals)."""
+    ``queries()`` has an exact value-hash oracle."""
     return Q.oracle_sql()

@@ -162,7 +162,6 @@ def test_ttl_recrawl_refetches_after_expiry(spark, tmp_path, corpus_dir):
         spark,
         str(tmp_path / "run_ttl"),
         batch_size=100,  # all seeds arrive in round 0
-        use_bloom=True,
         recrawl_after=2,
     )
     engine.run(seeds, pages, robots=None, max_rounds=3)
@@ -233,7 +232,6 @@ def test_ttl_recrawl_trace_parity_over_long_horizon(spark, tmp_path, corpus_dir)
         spark,
         str(tmp_path / "run_ttl_long"),
         batch_size=100,
-        use_bloom=True,
         recrawl_after=2,
     )
     engine.run(seeds, pages, robots=None, max_rounds=7)
@@ -249,9 +247,7 @@ def test_ttl_recrawl_trace_parity_over_long_horizon(spark, tmp_path, corpus_dir)
 def test_no_ttl_means_no_refetch(spark, tmp_path, corpus_dir):
     pages = read_pages(spark, corpus_dir)
     seeds = read_seeds(spark, corpus_dir).limit(6)
-    engine = CrawlEngine(
-        spark, str(tmp_path / "run_nottl"), batch_size=100, use_bloom=True
-    )
+    engine = CrawlEngine(spark, str(tmp_path / "run_nottl"), batch_size=100)
     engine.run(seeds, pages, robots=None, max_rounds=6)
     fetched = [r for r in engine.trace().collect() if r.outcome == "fetched"]
     urls = [r.url for r in fetched]

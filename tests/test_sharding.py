@@ -1,9 +1,7 @@
-"""Fleet-resize (rendezvous hashing) and size-balanced output sharding:
-the distribution properties the docstrings claim, checked on data."""
+"""Fleet-resize (rendezvous hashing): the distribution properties the
+docstrings claim, checked on data."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from web_scraper_v1_spark import queries as Q
 from web_scraper_v1_spark.operators.frontier import rendezvous_assign
@@ -38,21 +36,3 @@ def test_hrw_deterministic_and_in_range(spark):
     assert set(got.values()) <= set(range(7))
     # every worker gets SOME share of 200 keys (balance sanity)
     assert len(set(got.values())) == 7
-
-
-def test_snake_shard_token_balance(spark):
-    """Boustrophedon dealing of size-ranked docs: per-shard token totals
-    must differ by at most the largest single document."""
-    out = {
-        r["shard"]: r["tokens_total"]
-        for r in Q.queries()["shard_balance_snake"](spark, SF).collect()
-    }
-    assert set(out) == set(range(8))
-    d = spark.read.parquet(f"{SF}/documents.parquet")
-    max_doc = (
-        d.select(F.size(F.split(F.trim(F.lower("text")), r"\s+")).alias("n"))
-        .agg(F.max("n"))
-        .first()[0]
-    )
-    spread = max(out.values()) - min(out.values())
-    assert spread <= max_doc, (spread, max_doc)

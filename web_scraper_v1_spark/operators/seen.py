@@ -436,19 +436,6 @@ def build_sharded_cuckoo(
     return _wrap(merged)
 
 
-def cuckoo_contains_col(spark, cuckoo: ShardedCuckoo, key: Column) -> Column:
-    """Membership test column over per-shard broadcasts (lazy torrent
-    fetch: a task whose candidates are repartitioned by pmod(key, S) pulls
-    one shard table) — the cuckoo twin of ``bloom_contains_col``."""
-    bcs = [
-        spark.sparkContext.broadcast(cuckoo.table[s])
-        for s in range(cuckoo.n_shards)
-    ]
-    return _cuckoo_contains_from_broadcasts(
-        bcs, cuckoo.n_shards, cuckoo.buckets_per_shard, key
-    )
-
-
 def _cuckoo_contains_from_broadcasts(
     bcs: list, n_shards: int, buckets_per_shard: int, key: Column
 ) -> Column:

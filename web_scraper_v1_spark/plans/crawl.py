@@ -178,7 +178,6 @@ class CrawlEngine:
         retry_limit: int = 3,
         host_budget: int | None = None,
         salt_buckets: int = 16,
-        use_bloom: bool = True,
         bloom_bits: int = 1 << 23,
         recrawl_after: int | None = None,
         round_duration_s: float | None = None,
@@ -263,7 +262,6 @@ class CrawlEngine:
         self.processed_set = SeenSet(
             spark,
             n_bits=bloom_bits,
-            use_bloom=use_bloom,
             ttl_rounds=recrawl_after,
         )
 

@@ -30,14 +30,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from web_scraper_v1_spark.functions import text as TX
+from web_scraper_v1_spark.functions import urls as U
 from web_scraper_v1_spark.functions.extraction import (
     extract_receiver_response,
     golden_text,
 )
-from web_scraper_v1_spark.functions import urls as U
-from web_scraper_v1_spark.operators.dedup import _hash_shingles
 from web_scraper_v1_spark.operators.frontier import prepare_seeds
 from web_scraper_v1_spark.operators.seen import SeenSet
 
@@ -48,7 +47,13 @@ _WINNOW_POWERS = np.power(
 )
 
 
-from pyspark.sql import types as T  # noqa: E402
+def _hash_shingles(shingles) -> np.ndarray:
+    """Vectorized 64-bit string hashing (pandas' C-level SipHash-alike,
+    fixed key -> deterministic across runs and executors)."""
+    return pd.util.hash_array(
+        np.asarray(shingles, dtype=object), hash_key="web_scraper_v1_s"
+    )
+
 
 PARSE_FEATURES_SCHEMA = T.StructType(
     [
@@ -109,7 +114,6 @@ def fetch_parse_wave(
     seeds: DataFrame,
     pages: DataFrame,
     seen: DataFrame | None = None,
-    use_bloom: bool = True,
     seen_set: SeenSet | None = None,
     parse_features: bool = False,
 ) -> DataFrame:
@@ -127,7 +131,6 @@ def fetch_parse_wave(
         prepared,
         pages,
         seen=seen,
-        use_bloom=use_bloom,
         seen_set=seen_set,
         parse_features=parse_features,
     )
@@ -138,7 +141,6 @@ def fetch_parse_from_frontier(
     prepared: DataFrame,
     pages: DataFrame,
     seen: DataFrame | None = None,
-    use_bloom: bool = True,
     seen_set: SeenSet | None = None,
     parse_features: bool = False,
 ) -> DataFrame:
@@ -147,7 +149,7 @@ def fetch_parse_from_frontier(
     (plans/crawl.py), so per-wave work starts at seen-set filtering, not at
     re-preparing the whole frontier."""
     if seen_set is None and seen is not None:
-        seen_set = SeenSet(spark, n_bits=1 << 24, use_bloom=use_bloom)
+        seen_set = SeenSet(spark, n_bits=1 << 24)
         seen_set.load(seen)
     if seen_set is not None:
         prepared = seen_set.filter_new(prepared)
