@@ -2,7 +2,7 @@
 
 ``entry(spark)`` runs the flagship crawl slice (seeds -> dedup -> politeness
 wave -> fetch-as-join -> vectorized extraction) on sf0.001; ``queries()`` /
-``oracle_sql()`` expose the crawl system's operator registry from
+``oracle_sql()`` expose the crawl-system subset of the operator registry in
 ``web_scraper_v1_spark.queries`` (SURVEY.md §2 O-rows, the frontier, seen-set
 and politeness operators, and the stream plane), each Spark query paired
 with its exact DuckDB twin.
@@ -31,13 +31,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per crawl-system operator, in definition order. Each
-    callable takes (spark, sf_dir) and returns a DataFrame; computed
-    columns are aliased to match the oracle. The registry stays within the
-    driver's 50-query correctness window (tests/test_plans.py asserts
-    it), so every entry is checked every time; scripts/selfcheck.py runs
-    the same check locally."""
-    base = Q.queries()
+    """One entry per crawl-system operator (``queries.CRAWL_SYSTEM``), in
+    definition order. Each callable takes (spark, sf_dir) and returns a
+    DataFrame; computed columns are aliased to match the oracle. The
+    contract stays within the driver's 50-query correctness window
+    (tests/test_plans.py asserts it), so every entry is checked every
+    time; scripts/selfcheck.py runs the same check locally over the whole
+    registry."""
 
     def _wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -46,10 +46,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return run
 
-    return {name: _wrap(fn) for name, fn in base.items()}
+    return {
+        name: _wrap(fn)
+        for name, fn in Q.queries().items()
+        if name in Q.CRAWL_SYSTEM
+    }
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI-SQL twin per registry query — EVERY query in
+    """DuckDB-runnable ANSI-SQL twin per contract query — EVERY query in
     ``queries()`` has an exact value-hash oracle."""
-    return Q.oracle_sql()
+    return {
+        name: sql
+        for name, sql in Q.oracle_sql().items()
+        if name in Q.CRAWL_SYSTEM
+    }

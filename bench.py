@@ -21,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 HEADLINE = [
-    # crawl pipeline slice + frontier, seen-set and politeness ops
+    # crawl pipeline slice + frontier ops
     "crawl_slice",
     "per_host_wave",
     "priority_wave",
@@ -36,23 +36,119 @@ HEADLINE = [
     "aimd_crawl_delay",
     "link_extract",
     "frontier_growth",
-    "etld1_extract",
-    "rendezvous_shard",
-    "ip_politeness_cap",
-    "retry_backoff",
-    # stream plane
+    "host_pagerank",
+    "pagerank_priority_wave",
     "host_rate_window",
     "host_cumulative",
-    "dedup_stream_batch",
+    "anchor_text_agg",
+    "crawl_budget_alloc",
     # relational core
     "groupby_agg",
     "window_topk",
+    "window_running",
+    "sessionize",
+    "asof_join",
     "broadcast_join",
     "anti_join_seen",
+    "semi_join",
     "rollup_metrics",
+    "cube_metrics",
     "topk_global",
     "json_decode",
+    # text / training-data layer
+    "token_count",
+    "quality_score",
+    "lang_id",
+    "quality_filter",
+    "gopher_quality_filter",
+    "quality_classifier",
+    "stratified_sample",
+    "quality_percentiles",
+    "repetition_stats",
+    "pii_scrub",
+    "mojibake_fix",
+    "script_detect",
+    "soft404_detect",
+    "canonical_select",
+    "ccnet_buckets",
+    "canonical_link_collapse",
+    "opic_priority",
+    "wfq_schedule",
+    "focused_crawl_priority",
+    "fingerprint_md5",
     "dedup_exact",
+    "decontaminate",
+    "ngram_jaccard_dedup",
+    # right after ngram so the shared shingle cache is warm for both
+    "dedup_clusters",
+    "ngram_df_topk",
+    "dedup_pipeline",
+    "curation_pipeline",
+    "minhash_lsh_dedup",
+    "simhash_dedup",
+    "doc_embedding_pool",
+    "ann_bruteforce",
+    "ann_lsh",
+    "ann_ivf",
+    "embedding_neardup",
+    "embedding_neardup_t09",
+    "semdedup",
+    # WARC container layer (Common-Crawl ingestion path)
+    "warc_roundtrip",
+    "warc_file_roundtrip",
+    "cdx_index",
+    "sitemap_extract",
+    # mergeable sketches (frontier-scale distinct/frequency counting)
+    "hll_distinct",
+    "cms_heavy_hitters",
+    # frontier snapshot compaction (Iceberg merge-on-read fold)
+    "frontier_compact",
+    "winnow_fingerprint",
+    "dedup_stream_batch",
+    "decontaminate_hashed",
+    "segment_dedup",
+    "segment_dedup_hashed",
+    "unigram_surprisal",
+    "bigram_surprisal",
+    "recrawl_delta",
+    "recrawl_priority_wave",
+    "incremental_dedup",
+    "incremental_dedup_stored",
+    "shuffle_shards",
+    "pack_sequences",
+    "training_manifest",
+    "retry_backoff",
+    # round-5 curation additions
+    "dsir_select",
+    "domain_frequency_cap",
+    "dup_span_stats",
+    "dup_span_remove",
+    "mixture_token_budget",
+    "selection_manifest",
+    # round-5 late additions: link-graph twin signal, redirect chasing,
+    # token-weighted systematic sampling, public-suffix politeness keys
+    "hits_scores",
+    "redirect_resolve",
+    "sus_sample",
+    "etld1_extract",
+    # round-5 late additions: fleet-resize shard map, IP-level politeness
+    "rendezvous_shard",
+    "ip_politeness_cap",
+    # round-5 late additions: link-spam demotion
+    "host_trustrank",
+    # round-5 second-session additions: directed containment dedup,
+    # jusText-style boilerplate removal + extracted-text artifact,
+    # stored-CDX SURT range lookup, exact harmonic centrality,
+    # IVF-PQ compressed ANN, temperature mixture weighting
+    "containment_dedup",
+    "content_extract",
+    "content_extract_text",
+    "cdx_surt_range",
+    "host_harmonic_centrality",
+    "ann_ivfpq",
+    "ann_ivfpq_stored",
+    "mixture_temperature",
+    "warc_revisit",
 ]
 
 
@@ -93,6 +189,7 @@ def run_bench(spark, sf_dir: str, names: list[str]) -> dict[str, float]:
     import gc
 
     from web_scraper_v1_spark import queries as Q
+    from web_scraper_v1_spark.operators import dedup as DD
     from web_scraper_v1_spark.operators import ordering
 
     qs = Q.queries()
@@ -131,11 +228,12 @@ def run_bench(spark, sf_dir: str, names: list[str]) -> dict[str, float]:
         timings[name] = best
         if q_steal is not None:
             steal[name] = q_steal
-        ordering.release_cached()  # drop per-query persisted frames
+        DD.release_cached()  # drop per-query persisted shingles/signatures
+        ordering.release_cached()  # and persisted prefix-sum inputs
         # drop Python refs so the ContextCleaner can evict orphaned
-        # localCheckpoint/broadcast blocks before the next query is timed —
-        # block-manager pressure from one query otherwise bills GC time to
-        # its successors
+        # localCheckpoint/broadcast blocks (pagerank, cluster propagation)
+        # before the next query is timed — block-manager pressure from one
+        # query otherwise bills GC time to its successors
         del df
         gc.collect()
     return timings, cold, steal

@@ -1,7 +1,9 @@
-"""Local stand-in for the driver's correctness gate: runs every
-``queries()[name]`` on Spark and its ``oracle_sql()[name]`` on DuckDB at the
-given sf dir, compares row count, column names, and an order-insensitive
-value hash (rows sorted, columns sorted by name, values stringified).
+"""Local stand-in for the driver's correctness gate: runs every registry
+entry ``queries()[name]`` (the driver contract plus the rest of
+``web_scraper_v1_spark.queries``) on Spark and its ``oracle_sql()[name]``
+on DuckDB at the given sf dir, compares row count, column names, and an
+order-insensitive value hash (rows sorted, columns sorted by name, values
+stringified).
 
 Usage: python scripts/selfcheck.py [sf_dir] [query ...]
 """
@@ -19,7 +21,7 @@ import duckdb  # noqa: E402
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
-    "documents"
+    "documents embeddings"
 ).split()
 
 
@@ -49,20 +51,22 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    import __spark_entry__ as E
-    from web_scraper_v1_spark.session import build_session
+    from web_scraper_v1_spark import queries as Q
+    from web_scraper_v1_spark.session import build_session, ship_package
 
     spark = build_session("selfcheck")
+    ship_package(spark)
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
+    from web_scraper_v1_spark.operators import dedup as DD
     from web_scraper_v1_spark.operators import ordering
 
-    qs = E.queries()
-    oracles = E.oracle_sql()
+    qs = Q.queries()
+    oracles = Q.oracle_sql()
     n_pass = n_fail = 0
     for name, fn in qs.items():
         if only and name not in only:
@@ -72,6 +76,7 @@ def main():
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
+            DD.release_cached()
             ordering.release_cached()
         except Exception as ex:
             print(f"FAIL {name}: spark error: {ex}")

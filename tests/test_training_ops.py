@@ -1,5 +1,5 @@
 """Tests for the training-data pipeline layer: dedup strategies,
-similarity search, text analysis, multimodal plumbing.
+similarity search, text analysis.
 
 Strategy-agreement tests mirror the oracle contract: exact n-gram Jaccard is
 ground truth; MinHash+LSH and SimHash (verified) must reproduce it exactly
@@ -12,11 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from web_scraper_v1_spark.functions import text as TX
-from web_scraper_v1_spark.functions.multimodal import (
-    decode_media,
-    extract_features,
-    synthesize_media_from_documents,
-)
 from web_scraper_v1_spark.operators import dedup as DD
 from web_scraper_v1_spark.operators import similarity as SIM
 
@@ -194,107 +189,6 @@ def test_winnow_overlap(spark):
     # partial overlap detectable: shared prefix keeps shared fingerprints
     inter = len(out[1] & out[3]) / len(out[1])
     assert inter > 0.5
-
-
-def test_multimodal_plumbing(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    media = synthesize_media_from_documents(docs)
-    assert [f.name for f in media.schema.fields] == [
-        "media_id", "kind", "payload", "meta",
-    ]
-    feats = extract_features(media, use_fake=True)
-    rows = feats.collect()
-    assert len(rows) == docs.count()
-    for r in rows[:10]:
-        assert r.kind in ("image", "audio", "video")
-        assert len(r.feature) == 16
-        assert r.payload_bytes > 0
-    # codecs that genuinely need media libraries still raise through the
-    # declared seam (JPEG magic, for instance)
-    with pytest.raises(NotImplementedError):
-        decode_media(b"\xff\xd8\xff\xe0 not decodable", "image")
-
-
-def test_real_decoders_known_values():
-    """Hand-built 1x1 PPM and 2-sample WAV with known bytes: the real
-    decoders must parse the containers and produce the exact moment
-    features (exact-integer arithmetic, so equality is warranted)."""
-    from web_scraper_v1_spark.functions.multimodal import (
-        _decode_ppm,
-        _decode_wav,
-        ppm_from_text,
-        wav_from_text,
-    )
-
-    # 1x1 P6, pixel = (10, 20, 30); with a comment line in the header
-    ppm = b"P6\n# c\n1 1\n255\n" + bytes([10, 20, 30])
-    f = _decode_ppm(ppm)
-    assert f[0] == 1 / 10000.0 and f[1] == 1 / 10000.0
-    assert f[2] == 10 / 255.0 and f[3] == 20 / 255.0 and f[4] == 30 / 255.0
-    assert f[5] == 10 / 255.0 and f[6] == 30 / 255.0
-
-    # 2-sample PCM16 WAV at 8 kHz: samples -256, 512
-    samples = (-256).to_bytes(2, "little", signed=True) + (512).to_bytes(
-        2, "little", signed=True
-    )
-    fmt = (
-        b"fmt " + (16).to_bytes(4, "little")
-        + (1).to_bytes(2, "little") + (1).to_bytes(2, "little")
-        + (8000).to_bytes(4, "little") + (16000).to_bytes(4, "little")
-        + (2).to_bytes(2, "little") + (16).to_bytes(2, "little")
-    )
-    body = b"WAVE" + fmt + b"data" + (4).to_bytes(4, "little") + samples
-    wav = b"RIFF" + len(body).to_bytes(4, "little") + body
-    g = _decode_wav(wav)
-    assert g[0] == 8000 / 100000.0 and g[1] == 2 / 1e6
-    assert g[2] == 256 / (2 * 32768.0)
-    assert g[3] == -256 / 32768.0 and g[4] == 512 / 32768.0
-
-    # fixture generators emit containers the decoders accept
-    assert decode_media(ppm_from_text("abcd"), "image")[0] == 8 / 10000.0
-    assert decode_media(wav_from_text("abcd"), "audio")[0] == 16000 / 100000.0
-
-    # non-PCM16-mono WAV refuses loudly rather than mis-decoding
-    bad = (
-        b"fmt " + (16).to_bytes(4, "little")
-        + (1).to_bytes(2, "little") + (2).to_bytes(2, "little")  # stereo
-        + (8000).to_bytes(4, "little") + (32000).to_bytes(4, "little")
-        + (4).to_bytes(2, "little") + (16).to_bytes(2, "little")
-    )
-    body2 = b"WAVE" + bad + b"data" + (4).to_bytes(4, "little") + samples
-    with pytest.raises(ValueError, match="PCM16 mono"):
-        _decode_wav(b"RIFF" + len(body2).to_bytes(4, "little") + body2)
-
-
-def test_real_media_end_to_end(spark):
-    """use_fake=False through the full mapInPandas pipeline over valid
-    containers: every row decodes, image/audio features land in the
-    expected slots, and a null payload skips (feature None) instead of
-    crashing the batch."""
-    from web_scraper_v1_spark.functions.multimodal import (
-        MEDIA_SCHEMA,
-        synthesize_real_media_from_documents,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(20)
-    media = synthesize_real_media_from_documents(docs)
-    rows = {r.media_id: r for r in extract_features(media, use_fake=False).collect()}
-    assert len(rows) == 20
-    for mid, r in rows.items():
-        if mid % 2 == 0:
-            assert r.kind == "image" and r.payload_bytes == 107
-            assert r.feature[0] == 8 / 10000.0
-            assert 0.0 < r.feature[2] <= 1.0
-        else:
-            assert r.kind == "audio" and r.payload_bytes == 172
-            assert r.feature[0] == 16000 / 100000.0
-            assert r.feature[5] == 0.0
-
-    null_row = spark.createDataFrame(
-        [(999, "image", None, None)], MEDIA_SCHEMA
-    )
-    out = extract_features(null_row, use_fake=False).collect()
-    assert len(out) == 1 and out[0].feature is None
 
 
 def test_fingerprint_normalization(spark):
@@ -526,42 +420,6 @@ def test_quality_percentiles_matches_bruteforce(spark):
             expect = bins[math.ceil(p * n) - 1] / 10000.0
             assert row[col] == expect, (lang, col)
         assert row["p50"] <= row["p90"] <= row["p99"]
-
-
-def test_bm25_matches_python_bruteforce(spark):
-    """bm25_score (scan-side tf + one-row stats broadcast) must equal a
-    plain-Python BM25 with the same rational-idf formula."""
-    from web_scraper_v1_spark import queries as Q
-    from web_scraper_v1_spark.queries import _BM25_TERMS
-
-    got = {
-        r["doc_id"]: (r["dl"], r["score_c"])
-        for r in Q.queries()["bm25_score"](spark, SF).collect()
-    }
-    docs = {
-        r["doc_id"]: r["text"].strip().lower().split()
-        for r in spark.read.parquet(f"{SF}/documents.parquet").collect()
-    }
-    n = float(len(docs))
-    sum_dl = float(sum(len(w) for w in docs.values()))
-    dfs = {
-        t: float(sum(1 for w in docs.values() if t in w))
-        for t in _BM25_TERMS
-    }
-    for doc_id, w in docs.items():
-        dl = len(w)
-        score = 0
-        for t in _BM25_TERMS:
-            tf = float(w.count(t))
-            idf = ((n - dfs[t]) + 0.5) / (dfs[t] + 0.5)
-            denom = tf + (1.2 * (0.25 + (0.75 * (float(dl) / (sum_dl / n)))))
-            contrib = (idf * ((tf * 2.2) / denom)) * 1e9
-            # Spark round() is HALF_UP on positives; python round() is
-            # banker's — emulate HALF_UP
-            import math
-
-            score += int(math.floor(contrib + 0.5))
-        assert got[doc_id] == (dl, score), doc_id
 
 
 def test_decontaminate_matches_python_bruteforce(spark):
@@ -873,83 +731,6 @@ def test_dup_span_remove_keeps_canonical_copy(spark, tmp_path):
     # unrelated and sub-width docs pass through whole
     assert got[3][1] == got[3][0]
     assert got[4] == (3, 3, "tiny doc here")
-
-
-def test_resize_and_frame_walk_known_values():
-    """Resize + video-walk kernels against hand-computed pixels: a 2x2 P6
-    downsampled by 2 keeps exactly pixel (0,0); the 4-frame video
-    container walks to 4 frames whose pixel k is text byte (k+7f) mod L;
-    a truncated frame fails loudly instead of mis-parsing."""
-    import pytest as _pt
-
-    from web_scraper_v1_spark.functions.multimodal import (
-        _parse_ppm,
-        ppm_frame_from_text,
-        resize_ppm,
-        video_from_text,
-        PPM_W,
-        PPM_H,
-        VIDEO_FRAMES,
-    )
-
-    # 2x2 image, pixels (r,g,b) = (p, p+1, p+2) for p in 0,10,20,30
-    px = bytes(
-        b for p in (0, 10, 20, 30) for b in (p, p + 1, p + 2)
-    )
-    small = b"P6\n2 2\n255\n" + px
-    out = resize_ppm(small, factor=2)
-    w, h, opx, end = _parse_ppm(out)
-    assert (w, h) == (1, 1) and end == len(out)
-    assert list(opx) == [0, 1, 2]  # nearest-neighbor keeps (0,0)
-
-    # the video walk: every frame self-describing, offsets chain exactly
-    text = "the quick brown fox jumps over the lazy dog"
-    buf = video_from_text(text)
-    b = text.encode()
-    off = 0
-    for f in range(VIDEO_FRAMES):
-        w, h, fpx, off = _parse_ppm(buf, off)
-        assert (w, h) == (PPM_W, PPM_H)
-        n = PPM_W * PPM_H * 3
-        expect = [(b[(k + 7 * f) % len(b)]) for k in range(n)]
-        assert list(fpx) == expect
-    assert off == len(buf)
-    # each frame alone is also a valid standalone container
-    assert ppm_frame_from_text(text, 2) == buf[107 * 2 : 107 * 3]
-
-    # a truncated final frame raises, never silently yields a short frame
-    with _pt.raises(ValueError):
-        _parse_ppm(buf[:-1], 107 * (VIDEO_FRAMES - 1))
-
-
-def test_ahash_64_pixel_geometry_fits_int64():
-    """The classic 8x8 aHash geometry (64 resized pixels) can set bit 63;
-    the hash must store as the SIGNED 64-bit reinterpretation rather than
-    overflow the LongType column (review finding, round 5)."""
-    import numpy as np
-
-    from web_scraper_v1_spark.functions.multimodal import (
-        _parse_ppm,
-        resize_ppm,
-    )
-
-    w = h = 16
-    img = np.zeros((h, w, 3), dtype=np.uint8)
-    img[14, 14, :] = 255  # the LAST kept pixel after [::2, ::2]
-    payload = f"P6\n{w} {h}\n255\n".encode() + img.tobytes()
-    _, _, opx, _ = _parse_ppm(resize_ppm(payload, 2))
-    gray = opx.reshape(-1, 3).sum(axis=1, dtype=np.int64)
-    assert len(gray) == 64
-    total = int(gray.sum())
-    bits = 0
-    for i, gv in enumerate(gray[:64]):
-        if len(gray) * int(gv) > total:
-            bits |= 1 << i
-    if bits >= 1 << 63:
-        bits -= 1 << 64
-    # bit 63 was set and the signed reinterpretation fits int64
-    assert bits < 0
-    assert -(1 << 63) <= bits < (1 << 63)
 
 
 def test_mojibake_repair_roundtrip(spark):

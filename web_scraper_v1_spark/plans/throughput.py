@@ -37,6 +37,7 @@ from web_scraper_v1_spark.functions.extraction import (
     extract_receiver_response,
     golden_text,
 )
+from web_scraper_v1_spark.operators.dedup import _hash_shingles
 from web_scraper_v1_spark.operators.frontier import prepare_seeds
 from web_scraper_v1_spark.operators.seen import SeenSet
 
@@ -45,14 +46,6 @@ _BIT_VAL = (np.uint64(1) << _BIT_IDX).astype(np.uint64)
 _WINNOW_POWERS = np.power(
     np.uint64(257), np.arange(8, dtype=np.uint64)[::-1], dtype=np.uint64
 )
-
-
-def _hash_shingles(shingles) -> np.ndarray:
-    """Vectorized 64-bit string hashing (pandas' C-level SipHash-alike,
-    fixed key -> deterministic across runs and executors)."""
-    return pd.util.hash_array(
-        np.asarray(shingles, dtype=object), hash_key="web_scraper_v1_s"
-    )
 
 
 PARSE_FEATURES_SCHEMA = T.StructType(
