@@ -86,13 +86,6 @@ HEADLINE = [
     "curation_pipeline",
     "minhash_lsh_dedup",
     "simhash_dedup",
-    "doc_embedding_pool",
-    "ann_bruteforce",
-    "ann_lsh",
-    "ann_ivf",
-    "embedding_neardup",
-    "embedding_neardup_t09",
-    "semdedup",
     # WARC container layer (Common-Crawl ingestion path)
     "warc_roundtrip",
     "warc_file_roundtrip",
@@ -139,14 +132,12 @@ HEADLINE = [
     # round-5 second-session additions: directed containment dedup,
     # jusText-style boilerplate removal + extracted-text artifact,
     # stored-CDX SURT range lookup, exact harmonic centrality,
-    # IVF-PQ compressed ANN, temperature mixture weighting
+    # temperature mixture weighting
     "containment_dedup",
     "content_extract",
     "content_extract_text",
     "cdx_surt_range",
     "host_harmonic_centrality",
-    "ann_ivfpq",
-    "ann_ivfpq_stored",
     "mixture_temperature",
     "warc_revisit",
 ]

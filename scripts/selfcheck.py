@@ -20,8 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 
 TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
+    "region nation customer supplier part orders lineitem events documents"
 ).split()
 
 

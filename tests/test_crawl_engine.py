@@ -359,6 +359,7 @@ def test_crash_between_round_write_and_commit(
     class Crash(Exception):
         pass
 
+    spark.catalog.clearCache()
     with monkeypatch.context() as m:
         if crash_at == "commit":
             def commit_round(*args, **kwargs):
@@ -377,6 +378,8 @@ def test_crash_between_round_write_and_commit(
             m.setattr(os, "rename", rename)
         with pytest.raises(Crash):
             eng.run(seeds_df, pages_df, max_rounds=2)
+    # the crashed run released the seeds frame it cached
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     debris = sorted(run_dir.rglob("round=00000001"))
     assert any(p.parent.name == "trace" for p in debris)
@@ -417,8 +420,8 @@ def test_round_job_budget(spark, tmp_path, monkeypatch, corpus_frames):
     own write, sequencing took two prefix-sum passes and the Bloom add its
     own treeAggregate."""
     seeds_df, pages_df, _ = corpus_frames
-    # frames an earlier test left cached (a crashed run keeps its seeds
-    # frame) would change which jobs materialize what
+    # frames another test left cached would change which jobs
+    # materialize what
     spark.catalog.clearCache()
     sc = spark.sparkContext
     group = "test-round-job-budget"

@@ -97,86 +97,6 @@ def test_unbounded_wave_is_never_broadcast(spark, tmp_path):
     assert "LeftAnti" in plan
 
 
-def test_embedding_neardup_has_no_cartesian_product(spark):
-    """The registered near-dup query must be the bucketed sign-LSH plan —
-    no cross join anywhere (the all-pairs baseline is test-only)."""
-    df = Q.queries()["embedding_neardup"](spark, SF)
-    plan = plan_of(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_embedding_neardup_t09_bands_prune_subquadratically(spark):
-    """The production-regime entry (t=0.9, r=8-bit bands) must actually
-    PRUNE: the band-bucket candidate set over the registered query's own
-    augmented corpus stays a small fraction of all pairs (the t=0.45
-    stress twin is documented as unprunable; this one is the shape a real
-    pipeline runs), while still containing every planted >=0.9 pair."""
-    from web_scraper_v1_spark.operators.similarity import lsh_signatures
-
-    df = Q.queries()["embedding_neardup_t09"](spark, SF)
-    plan = plan_of(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-    base = spark.read.parquet(f"{SF}/embeddings.parquet").selectExpr(
-        "vec_id", "cast(embedding as array<double>) as embedding"
-    )
-    twins = base.filter("vec_id < 25").selectExpr(
-        "vec_id + 1000000 as vec_id",
-        "transform(embedding, (x, i) -> "
-        "x + 0.05D * element_at(embedding, ((i + 1) % 64) + 1)) as embedding",
-    )
-    aug = base.unionByName(twins)
-    n = aug.count()
-    sigs = lsh_signatures(aug, dim=64, n_planes=32)
-    buckets = sigs.select(
-        "id",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, 3), b -> struct("
-                "cast(b as int) as band, "
-                "shiftrightunsigned(sig, cast(b * 8 as int)) & 255"
-                " as band_key))"
-            )
-        ).alias("bk"),
-    ).select("id", "bk.band", "bk.band_key")
-    la = buckets.select("band", "band_key", F.col("id").alias("id_a"))
-    lb = buckets.select("band", "band_key", F.col("id").alias("id_b"))
-    cand = (
-        la.join(lb, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .count()
-    )
-    all_pairs = n * (n - 1) // 2
-    assert cand >= 25  # every planted pair is a candidate
-    assert cand < 0.05 * all_pairs, (cand, all_pairs)
-
-
-def test_neardup_verify_join_does_not_force_vector_broadcast(spark):
-    """The near-dup verifier's vector lookups must be size-driven, never
-    hint-broadcast: an unbounded embedding table cannot ship to every
-    executor. With auto-broadcast disabled, any BroadcastExchange left in
-    the plan could only come from a hint."""
-    from web_scraper_v1_spark.operators.similarity import lsh_neardup_pairs
-
-    embs = spark.range(0, 500).selectExpr(
-        "id as vec_id",
-        "transform(sequence(1, 8), j -> cast(pmod(id * j, 97) as float))"
-        " as embedding",
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = plan_of(lsh_neardup_pairs(embs, dim=8, threshold=0.9))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "BroadcastExchange" not in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_global_prefix_sum_has_no_single_partition_stage(spark):
     """Trace sequencing must never execute a single-partition global sort:
     the prefix sum is range-partitioned + per-partition windows + a driver
@@ -217,40 +137,6 @@ def test_whole_stage_codegen_relational(spark):
     executed = df._jdf.queryExecution().executedPlan().toString()
     # '*(n)' prefixes mark operators fused into WholeStageCodegen stage n
     assert "*(" in executed
-
-
-def test_ann_ivf_corpus_never_shuffles_before_probe_join(spark):
-    """IVF plan shape: centroid assignment is one Arrow-kernel map over
-    the corpus (behind a single decoupling repartition — never co-resident
-    with the scan), the probe side is the ONLY broadcast (queries x
-    n_probe rows), and nothing is a cartesian product. With auto-broadcast
-    disabled, any BroadcastExchange can only be the intended hints."""
-    from web_scraper_v1_spark.operators.similarity import ivf_ann_topk
-
-    embs = spark.range(0, 500).selectExpr(
-        "id as vec_id",
-        "transform(sequence(1, 8), j -> cast(pmod(id * j, 97) as float))"
-        " as embedding",
-    )
-    qids = embs.select("vec_id").filter(F.col("vec_id") < 5)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = plan_of(
-            ivf_ann_topk(embs, qids, dim=8, k=3, n_centroids=4, n_probe=2)
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # exactly the two intended broadcasts survive (query-id semi side and
-    # the probe set) — the corpus relation itself is never broadcast, and
-    # the only exchange after the corpus scan is the final top-k window's.
-    # "BroadcastExchange (" matches tree nodes only (the formatted detail
-    # section re-prints each node as "(N) BroadcastExchange").
-    assert plan.count("BroadcastExchange (") == 2, plan.count(
-        "BroadcastExchange ("
-    )
 
 
 def test_sessionize_single_shuffle(spark):
@@ -525,17 +411,6 @@ def test_quality_classifier_broadcast_model(spark):
     assert "SinglePartition" not in plan, plan
 
 
-def test_semdedup_broadcast_reps_no_pairs(spark):
-    """SemDeDup's scale contract: the representative table (<= 2^n_bits
-    rows by construction) broadcasts onto the corpus — one scan, a
-    broadcast-hash join, and NO pairwise structure anywhere (no
-    CartesianProduct, no corpus-side SortMergeJoin)."""
-    plan = plan_of(Q.queries()["semdedup"](spark, SF))
-    assert "CartesianProduct" not in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
-
-
 def test_blocklist_filter_broadcasts_list_side(spark):
     """The blocklist joins the URL stream as broadcast-hash keyed by host
     — the 100 TB fact side must never shuffle for the cheapest cut in
@@ -544,17 +419,6 @@ def test_blocklist_filter_broadcasts_list_side(spark):
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert "Exchange hashpartitioning" not in plan, plan
-
-
-def test_doc_embedding_pool_broadcast_table_partial_agg(spark):
-    """Embedding lookup ships the table to the data (broadcast-hash) and
-    pooling is map-side partial; the corpus never shuffles wider than the
-    pooled int64 columns."""
-    plan = plan_of(Q.queries()["doc_embedding_pool"](spark, SF))
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-    assert "partial_sum" in plan, plan
-    assert "SinglePartition" not in plan, plan
 
 
 def test_selection_manifest_composition_shape(spark):

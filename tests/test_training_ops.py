@@ -1,5 +1,5 @@
-"""Tests for the training-data pipeline layer: dedup strategies,
-similarity search, text analysis.
+"""Tests for the training-data pipeline layer: dedup strategies and text
+analysis.
 
 Strategy-agreement tests mirror the oracle contract: exact n-gram Jaccard is
 ground truth; MinHash+LSH and SimHash (verified) must reproduce it exactly
@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from web_scraper_v1_spark.functions import text as TX
 from web_scraper_v1_spark.operators import dedup as DD
-from web_scraper_v1_spark.operators import similarity as SIM
 
 SF = "/root/testdata/sf0.001"
 
@@ -75,79 +74,6 @@ def test_minhash_band_recall_math():
     assert p_miss < 1e-6
 
 
-def test_embedding_neardup_symmetric_threshold(spark):
-    embs = spark.read.parquet(f"{SF}/embeddings.parquet")
-    pairs = DD.embedding_neardup_pairs(embs, threshold=0.4).collect()
-    for r in pairs:
-        assert r.id_a < r.id_b
-        assert r.cosine >= 0.4
-
-
-def test_lsh_neardup_equals_allpairs_baseline(spark):
-    """The registered embedding_neardup runs the sign-LSH bucketed path;
-    the all-pairs crossJoin survives ONLY as this test's baseline. With
-    the deterministic planes, screen recall must be exactly 1.0 here."""
-    embs = spark.read.parquet(f"{SF}/embeddings.parquet")
-    exact = {
-        (r.id_a, r.id_b): r.cosine
-        for r in DD.embedding_neardup_pairs(embs, threshold=0.4).collect()
-    }
-    lsh = {
-        (r.id_a, r.id_b): r.cosine
-        for r in SIM.lsh_neardup_pairs(embs, dim=64, threshold=0.4).collect()
-    }
-    assert lsh == exact and exact  # identical pairs AND values, non-empty
-
-
-def test_ann_lsh_recall_vs_bruteforce(spark):
-    embs = spark.read.parquet(f"{SF}/embeddings.parquet")
-    qids = embs.select("vec_id").filter(F.col("vec_id") < 10)
-    brute = {
-        (r.query_id, r.neighbor_id)
-        for r in SIM.cosine_topk(embs, qids, k=5).collect()
-    }
-    approx = {
-        (r.query_id, r.neighbor_id)
-        for r in SIM.lsh_ann_topk(embs, qids, dim=64, k=5).collect()
-    }
-    recall = len(brute & approx) / len(brute)
-    # sign-LSH with 16 planes / 4 bands on random-ish vectors: modest but
-    # real recall; the pytest gate is that buckets do surface true
-    # neighbors far above chance (5/499 ≈ 1%). (The registry query keeps
-    # this cheap configuration because its DuckDB oracle replays it
-    # exactly — the quality gate lives in the tuned test below.)
-    assert recall >= 0.3, f"recall {recall}"
-
-
-def test_ann_lsh_tuned_recall(spark):
-    """Tuned sign-LSH (60 planes / 15 bands of 4 bits — a 61st+ plane
-    would overflow the signed-long signature): per-neighbor band-collision
-    probability 1-(1-p^4)^15 with p = 1 - acos(c)/pi ≈ 0.65 at this
-    corpus's neighbor cosines → expected recall ~0.95; gate at 0.8
-    (round-1 judge item: the 0.3 gate alone was too weak an ANN claim)."""
-    embs = spark.read.parquet(f"{SF}/embeddings.parquet")
-    qids = embs.select("vec_id").filter(F.col("vec_id") < 10)
-    brute = {
-        (r.query_id, r.neighbor_id)
-        for r in SIM.cosine_topk(embs, qids, k=5).collect()
-    }
-    tuned = {
-        (r.query_id, r.neighbor_id)
-        for r in SIM.lsh_ann_topk(
-            embs, qids, dim=64, k=5, n_planes=60, bands=15
-        ).collect()
-    }
-    recall = len(brute & tuned) / len(brute)
-    assert recall >= 0.8, f"tuned recall {recall}"
-
-
-def test_lsh_planes_deterministic():
-    a = SIM.hyperplanes(8, 4)
-    b = SIM.hyperplanes(8, 4)
-    assert a == b
-    assert all(-1.0 <= x < 1.0 for row in a for x in row)
-
-
 def test_quality_and_lang(spark):
     df = spark.createDataFrame(
         [
@@ -205,89 +131,6 @@ def test_fingerprint_normalization(spark):
     assert fps[0] == fps[1] == fps[2]
 
 
-def test_ann_ivf_recall_vs_bruteforce(spark):
-    """Registry IVF config (C=16, n_probe=4 — probing 1/4 of the lists):
-    recall far above the 5/499 ≈ 1% chance floor. These embeddings are
-    near-random (max pairwise cosine ~0.51) — the adversarial regime for
-    any coarse quantizer, true neighbors barely cluster; real document
-    embeddings cluster hard and need far fewer probes."""
-    embs = spark.read.parquet(f"{SF}/embeddings.parquet")
-    qids = embs.select("vec_id").filter(F.col("vec_id") < 10)
-    brute = {
-        (r.query_id, r.neighbor_id)
-        for r in SIM.cosine_topk(embs, qids, k=5).collect()
-    }
-    approx = {
-        (r.query_id, r.neighbor_id)
-        for r in SIM.ivf_ann_topk(embs, qids, dim=64, k=5).collect()
-    }
-    recall = len(brute & approx) / len(brute)
-    assert recall >= 0.4, f"recall {recall}"
-
-
-def test_ann_ivf_tuned_recall(spark):
-    """Tuned IVF (C=16, n_probe=12): recall >= 0.8 vs the exact baseline —
-    same quality gate as the tuned sign-LSH config. On this near-random
-    corpus that takes probing 3/4 of the lists (see the registry test's
-    regime note — no coarse quantizer prunes unclustered vectors well;
-    clustered real embeddings need n_probe << C); the oracle-gated
-    registry config stays at C=16/4."""
-    embs = spark.read.parquet(f"{SF}/embeddings.parquet")
-    qids = embs.select("vec_id").filter(F.col("vec_id") < 10)
-    brute = {
-        (r.query_id, r.neighbor_id)
-        for r in SIM.cosine_topk(embs, qids, k=5).collect()
-    }
-    tuned = {
-        (r.query_id, r.neighbor_id)
-        for r in SIM.ivf_ann_topk(
-            embs, qids, dim=64, k=5, n_centroids=16, n_probe=12
-        ).collect()
-    }
-    recall = len(brute & tuned) / len(brute)
-    assert recall >= 0.8, f"tuned recall {recall}"
-
-
-def test_ann_ivf_kmeans_training(spark):
-    """The distributed spherical-k-means quantizer (the ivf_centroids
-    training seam): on the near-random sf0.001 embeddings it must at
-    least hold the sampled quantizer's quality at n_probe=8 (measured:
-    sampled 0.74, kmeans@5iter 0.82 — clustering barely exists to find,
-    so the gate is recall >= 0.70 with noise margin for cross-partition
-    float-sum order), and training on the deterministic id-hash half
-    sample (train_mod=2) must produce usable centroids too."""
-    embs = spark.read.parquet(f"{SF}/embeddings.parquet")
-    qids = embs.select("vec_id").filter(F.col("vec_id") < 10)
-    brute = {
-        (r.query_id, r.neighbor_id)
-        for r in SIM.cosine_topk(embs, qids, k=5).collect()
-    }
-    cents = SIM.ivf_centroids_kmeans(embs, 16, n_iter=5)
-    assert len(cents) == 16 and all(len(v) == 64 for _, v in cents)
-    got = {
-        (r.query_id, r.neighbor_id)
-        for r in SIM.ivf_ann_topk(
-            embs, qids, dim=64, k=5, n_centroids=16, n_probe=8,
-            centroids=cents,
-        ).collect()
-    }
-    recall = len(brute & got) / len(brute)
-    assert recall >= 0.70, f"kmeans recall {recall}"
-
-    sampled_cents = SIM.ivf_centroids_kmeans(
-        embs, 16, n_iter=1, train_mod=2
-    )
-    got2 = {
-        (r.query_id, r.neighbor_id)
-        for r in SIM.ivf_ann_topk(
-            embs, qids, dim=64, k=5, n_centroids=16, n_probe=8,
-            centroids=sampled_cents,
-        ).collect()
-    }
-    recall2 = len(brute & got2) / len(brute)
-    assert recall2 >= 0.5, f"half-sample-trained recall {recall2}"
-
-
 def test_shingle_cache_verifies_hits_and_bounds_size(spark):
     """The shared shingle cache is keyed by a 32-bit semanticHash: a hit
     must be VERIFIED with sameSemantics (collision -> recompute, never
@@ -316,74 +159,6 @@ def test_shingle_cache_verifies_hits_and_bounds_size(spark):
         assert not src.sameSemantics(frames[0]) or src is frames[0]
     DD.release_all()
     assert len(DD._SHINGLE_CACHE) == 0
-
-
-def test_kmeans_exact_int_is_shuffle_order_bit_stable(spark):
-    """exact_int=True trains BIT-IDENTICAL centroids regardless of
-    partitioning: the per-coordinate sums are quantized int64 terms
-    aggregated as decimal(38,0) (the PageRank trick), so combine order
-    cannot perturb the means. Trained twice under different
-    spark.sql.shuffle.partitions — every float must match exactly (the
-    float path makes no such guarantee, which is why it is not
-    oracle-gated)."""
-    embs = spark.read.parquet(f"{SF}/embeddings.parquet")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        a = SIM.ivf_centroids_kmeans(embs, 8, n_iter=3, exact_int=True)
-        spark.conf.set("spark.sql.shuffle.partitions", "29")
-        b = SIM.ivf_centroids_kmeans(embs, 8, n_iter=3, exact_int=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    assert a == b  # exact float equality, all 8 x 64 coordinates
-    # and the exact-int quantizer is materially the float quantizer:
-    # 1e-9-resolution quantization cannot move a centroid coordinate
-    spark.conf.set("spark.sql.shuffle.partitions", prev)
-    f = SIM.ivf_centroids_kmeans(embs, 8, n_iter=3, exact_int=False)
-    for (cid_a, va), (cid_f, vf) in zip(a, f):
-        assert cid_a == cid_f
-        for x, y in zip(va, vf):
-            assert abs(x - y) < 1e-6
-
-
-def test_ivf_stored_index_probe_matches_inflight(spark, tmp_path):
-    """The stored-index path (ivf_index_write -> partitionBy(cid) parquet,
-    ivf_probe_topk -> cid-IN partition-pruned read) must return EXACTLY
-    the in-flight ivf_ann_topk result for the same quantizer, and the
-    probe read's plan must carry the cid partition filter (only the
-    probed inverted-list directories are listed/read)."""
-    embs = spark.read.parquet(f"{SF}/embeddings.parquet")
-    # 3 queries x n_probe=4 touches at most 12 of the 16 inverted lists,
-    # so the pruning assertion below is a guaranteed strict subset
-    qids = embs.select("vec_id").filter(F.col("vec_id") < 3)
-    idx_path = str(tmp_path / "ivf_index")
-    cents = SIM.ivf_index_write(embs, idx_path, n_centroids=16)
-    inflight = {
-        tuple(r)
-        for r in SIM.ivf_ann_topk(
-            embs, qids, dim=64, k=5, centroids=cents
-        ).collect()
-    }
-    probed_df = SIM.ivf_probe_topk(
-        spark, idx_path, embs, qids, cents, k=5, n_probe=4
-    )
-    probed = {tuple(r) for r in probed_df.collect()}
-    assert probed == inflight
-
-    # pruning is real: the index scan carries a cid IN (...) PARTITION
-    # filter (directory-level pruning at listing time, not a data filter)
-    # whose probe list is a strict subset of the stored inverted lists
-    import glob
-    import re
-
-    plan = probed_df._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[cid#\d+L? IN \(([^)]*)\)", plan)
-    assert m, plan
-    probed_cids = {c.strip() for c in m.group(1).split(",")}
-    all_cids = {
-        d.split("cid=")[1] for d in glob.glob(f"{idx_path}/cid=*")
-    }
-    assert probed_cids < all_cids  # strict subset: unprobed lists unread
 
 
 def test_quality_percentiles_matches_bruteforce(spark):
@@ -845,56 +620,3 @@ def test_boilerplate_two_pass_classes(spark):
     assert rows[(2, 0)] == ("bad", "bad")
     assert rows[(2, 1)] == ("neargood", "bad")    # both neighbours bad
     assert rows[(2, 2)] == ("bad", "bad")
-
-
-def test_ann_ivfpq_refined_recall(spark):
-    """IVF-PQ with the exact refine stage must recover most of plain
-    IVF's recall while scoring candidates from 8-byte codes only
-    (measured 0.52 vs 0.58 at sf0.01, brute-force baseline)."""
-    from web_scraper_v1_spark.operators import similarity as SIM
-
-    embs = spark.read.parquet(
-        "/root/testdata/sf0.01/embeddings.parquet"
-    )
-    qids = embs.select("vec_id").filter(F.col("vec_id") < 20)
-    pq = {
-        (r.query_id, r.neighbor_id)
-        for r in SIM.ivfpq_ann_topk(embs, qids, dim=64, k=5).collect()
-    }
-    bf = {
-        (r.query_id, r.neighbor_id)
-        for r in SIM.cosine_topk(embs, qids, k=5).collect()
-    }
-    ivf = {
-        (r.query_id, r.neighbor_id)
-        for r in SIM.ivf_ann_topk(embs, qids, dim=64, k=5).collect()
-    }
-    recall_pq = len(pq & bf) / len(bf)
-    recall_ivf = len(ivf & bf) / len(bf)
-    assert recall_pq >= 0.4
-    assert recall_pq >= 0.75 * recall_ivf  # refine closes the PQ gap
-    # the shortlist is a strict subset of the probe pool, so PQ can
-    # never exceed the probe ceiling
-    assert recall_pq <= recall_ivf + 1e-9
-
-
-def test_ivfpq_stored_index_matches_inflight(spark, tmp_path):
-    """The persisted-index probe must return exactly the in-flight
-    ivfpq_ann_topk rows, and the index read must partition-prune to the
-    probed cids."""
-    embs = spark.read.parquet(f"{SF}/embeddings.parquet")
-    qids = embs.select("vec_id").filter(F.col("vec_id") < 20)
-    path = str(tmp_path / "ivfpq")
-    cents, cbs = SIM.ivfpq_index_write(embs, path)
-    stored = SIM.ivfpq_probe_topk(spark, path, embs, qids, cents, cbs, k=5)
-    inflight = SIM.ivfpq_ann_topk(embs, qids, dim=64, k=5)
-    assert sorted(map(tuple, stored.collect())) == sorted(
-        map(tuple, inflight.collect())
-    )
-    # the codes store never contains vectors — 8 small ints per row
-    import pyspark.sql.types as T
-
-    idx = spark.read.parquet(path)
-    assert set(idx.columns) == {"cid", "id", "codes"}
-    codes_field = [f for f in idx.schema.fields if f.name == "codes"][0]
-    assert isinstance(codes_field.dataType, T.ArrayType)

@@ -4,7 +4,7 @@ The reference has NO dedup (SURVEY.md O17 — its live loop refetches the same
 URL 11x, /root/reference/cmd/transmitter/main.go:179-187; its TTL cache,
 internal/cache/in_memory.go, is the only seen-set-shaped structure). A
 100 TB web-text engine needs document-level dedup as a first-class stage.
-Five strategies, all expressed Spark-first:
+Four strategies, all expressed Spark-first:
 
 * exact        — fingerprint groupBy (one shuffle on a 128-bit key);
 * n-gram Jaccard — exact pair detection via an *inverted shingle index*
@@ -14,9 +14,7 @@ Five strategies, all expressed Spark-first:
                  buckets; only bucket-colliding candidates are verified;
 * SimHash      — 64-bit bit-vote sketch, same vectorized hashing; 16x4-bit
                  band blocking guarantees every pair within Hamming
-                 distance 15 collides in >=1 band (pigeonhole);
-* embedding    — cosine near-dup, exact all-pairs for verification scale and
-                 the LSH-bucketed path in operators/similarity.py for 100 TB.
+                 distance 15 collides in >=1 band (pigeonhole).
 
 Scale notes: every strategy's shuffle is keyed on tokens/buckets, not docs,
 so hot shingles are the skew risk — ``ngram_jaccard_pairs`` drops shingles
@@ -810,45 +808,3 @@ def simhash_pairs(
     )
     return _verified_pairs(candidates, shingled, threshold)
 
-
-def embedding_neardup_pairs(
-    embs: DataFrame,
-    threshold: float = 0.45,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact all-pairs cosine near-dup (the verification-scale baseline;
-    the LSH-bucketed scale path lives in operators/similarity.py). Norms
-    are precomputed once per vector; the pair join carries only
-    (id, vec, norm). All arithmetic in double with left-to-right folds so
-    the DuckDB oracle's list_cosine_similarity agrees to rounding."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = embs.select(
-        F.col(id_col).alias("id"),
-        v.alias("v"),
-        F.sqrt(
-            F.aggregate(
-                v, F.lit(0.0), lambda acc, x: acc + x * x
-            )
-        ).alias("norm"),
-    )
-    a = base.select(
-        F.col("id").alias("id_a"), F.col("v").alias("va"),
-        F.col("norm").alias("na"),
-    )
-    b = base.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(dot / (F.col("na") * F.col("nb")), 4))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )

@@ -1,8 +1,8 @@
 """Distributed connected components over near-dup pair graphs.
 
-The dedup strategies (operators/dedup.py, operators/similarity.py) emit
-PAIRS (id_a, id_b); a curation pipeline needs CLUSTERS — one canonical
-document kept per transitively-connected group. (The reference has no
+The dedup strategies (operators/dedup.py) emit PAIRS (id_a, id_b); a
+curation pipeline needs CLUSTERS — one canonical document kept per
+transitively-connected group. (The reference has no
 dedup at all, SURVEY.md O17; this is part of the training-data layer the
 engine adds on top.)
 

@@ -178,12 +178,10 @@ class CrawlEngine:
         retry_limit: int = 3,
         host_budget: int | None = None,
         salt_buckets: int = 16,
-        bloom_bits: int = 1 << 23,
         recrawl_after: int | None = None,
         round_duration_s: float | None = None,
         discover_links: bool = False,
         max_depth: int | None = None,
-        broadcast_wave: bool | None = None,
         host_buckets: int | None = None,
         fetcher=None,
     ):
@@ -221,12 +219,9 @@ class CrawlEngine:
         # driver/executor OOM at 10^10 URLs, so the unbounded config uses a
         # shuffle equi-join instead (the skinny-join shape of
         # plans/throughput.py; Spark's runtime bloom-filter join prunes the
-        # corpus scan from the wave side). ``broadcast_wave`` overrides the
-        # auto choice — a real deployment would also compare
-        # k * n_distinct_hosts against the broadcast threshold.
-        if broadcast_wave is None:
-            broadcast_wave = host_budget is not None
-        self.broadcast_wave = broadcast_wave
+        # corpus scan from the wave side). A real deployment would also
+        # compare k * n_distinct_hosts against the broadcast threshold.
+        self.broadcast_wave = host_budget is not None
         # Host-bucket partitioning (north rule: partitioning handled
         # explicitly): when set, the seen/processed/frontier snapshots are
         # written partitionBy(host_bucket = pmod(xxhash64(host), B)), so a
@@ -253,17 +248,14 @@ class CrawlEngine:
                     "matching config or compact/migrate the store first"
                 )
         # Live-fetch seam (O7): ``fetcher`` maps the selected wave
-        # DataFrame to (canonical_url, status, html) — e.g.
+        # DataFrame to (canonical_url, status, html, error_kind), with
+        # error_kind set on every status != 200 row — e.g.
         # sources/livefetch.live_fetch over real HTTP. None = sandbox
         # fetch-as-join against the page corpus passed to run(). Either
         # way a missing/failed row (join miss or status != 200,
         # job_processor.go:130-132) retries then drops identically.
         self.fetcher = fetcher
-        self.processed_set = SeenSet(
-            spark,
-            n_bits=bloom_bits,
-            ttl_rounds=recrawl_after,
-        )
+        self.processed_set = SeenSet(spark, ttl_rounds=recrawl_after)
 
     # -- state ------------------------------------------------------------
     def _load_state(self) -> tuple[int, int, int | None]:
@@ -363,73 +355,81 @@ class CrawlEngine:
             .select(*FRONTIER_COLS)
             .cache()
         )
-        max_arrival = (
-            prepared.agg(F.max("arrival_round")).collect()[0][0] or 0
-        )
-        # the fetch universe, canonical-keyed; urls are unique by corpus
-        # construction (one row per page). With a live fetcher the corpus
-        # is the network — pages is unused.
-        pages_prepared = None
-        if pages is not None:
-            pages_prepared = pages.select(
-                U.canonicalize(F.col("url")).alias("canonical_url"),
-                F.col("html"),
+        # released on every exit: a round that raises must not leave the
+        # seeds frame in the session's cache
+        try:
+            max_arrival = (
+                prepared.agg(F.max("arrival_round")).collect()[0][0] or 0
+            )
+            # the fetch universe, canonical-keyed; urls are unique by
+            # corpus construction (one row per page). With a live fetcher
+            # the corpus is the network — pages is unused.
+            pages_prepared = None
+            if pages is not None:
+                pages_prepared = pages.select(
+                    U.canonicalize(F.col("url")).alias("canonical_url"),
+                    F.col("html"),
+                )
+
+            next_round, next_seq, next_queue_seq = self._load_state()
+            if next_queue_seq is None:
+                # enqueue counter starts after the raw seed ordinals (dup
+                # seeds consume ordinals too — the simulator's enumerate
+                # order)
+                next_queue_seq = seeds.count() if self.discover_links else 0
+            if self.discover_links and next_round > 0:
+                m = (
+                    self.frontier().agg(F.max("arrival_round")).collect()[0][0]
+                )
+                if m is not None:
+                    max_arrival = max(max_arrival, m)
+            self.processed_set.load(
+                self._processed_live(next_round), round_id=next_round
             )
 
-        next_round, next_seq, next_queue_seq = self._load_state()
-        if next_queue_seq is None:
-            # enqueue counter starts after the raw seed ordinals (dup seeds
-            # consume ordinals too — the simulator's enumerate order)
-            next_queue_seq = seeds.count() if self.discover_links else 0
-        if self.discover_links and next_round > 0:
-            m = self.frontier().agg(F.max("arrival_round")).collect()[0][0]
-            if m is not None:
-                max_arrival = max(max_arrival, m)
-        self.processed_set.load(
-            self._processed_live(next_round), round_id=next_round
-        )
-
-        stats: list[RoundStats] = []
-        r = next_round
-        while r < max_rounds:
-            if r != next_round:
-                # refresh the exact seen side for THIS round from committed
-                # snapshots (keeps the logical plan flat across rounds, and
-                # applies TTL expiry even across empty rounds); the bloom is
-                # maintained incrementally inside _run_round, and expired
-                # generations are dropped here (deletable-filter path)
-                self.processed_set.set_exact(self._processed_live(r))
-                self.processed_set.expire(r)
-            enqueued_all = prepared
-            if self.discover_links:
-                enqueued_all = prepared.unionByName(self.frontier())
-            pending = self.processed_set.filter_new(
-                enqueued_all.filter(
-                    F.col("arrival_round") <= F.lit(r)
-                ).withColumn("url", F.col("canonical_url"))
-            )
-            st = self._run_round(
-                r, next_seq, pending, pages_prepared, robots,
-                enqueued_all=enqueued_all, next_queue_seq=next_queue_seq,
-            )
-            if st is None:
-                if r > max_arrival and self.recrawl_after is None:
-                    break
-                # empty round before all seeds have arrived (or between a
-                # fetch and its TTL expiry under a recrawl policy): commit
-                # nothing, advance; with recrawl_after set, max_rounds is
-                # the crawl horizon (matches the simulator's empty-batch
-                # no-op)
+            stats: list[RoundStats] = []
+            r = next_round
+            while r < max_rounds:
+                if r != next_round:
+                    # refresh the exact seen side for THIS round from
+                    # committed snapshots (keeps the logical plan flat across
+                    # rounds, and applies TTL expiry even across empty
+                    # rounds); the bloom is maintained incrementally inside
+                    # _run_round, and expired generations are dropped here
+                    # (deletable-filter path)
+                    self.processed_set.set_exact(self._processed_live(r))
+                    self.processed_set.expire(r)
+                enqueued_all = prepared
+                if self.discover_links:
+                    enqueued_all = prepared.unionByName(self.frontier())
+                pending = self.processed_set.filter_new(
+                    enqueued_all.filter(
+                        F.col("arrival_round") <= F.lit(r)
+                    ).withColumn("url", F.col("canonical_url"))
+                )
+                st = self._run_round(
+                    r, next_seq, pending, pages_prepared, robots,
+                    enqueued_all=enqueued_all, next_queue_seq=next_queue_seq,
+                )
+                if st is None:
+                    if r > max_arrival and self.recrawl_after is None:
+                        break
+                    # empty round before all seeds have arrived (or between
+                    # a fetch and its TTL expiry under a recrawl policy):
+                    # commit nothing, advance; with recrawl_after set,
+                    # max_rounds is the crawl horizon (matches the
+                    # simulator's empty-batch no-op)
+                    r += 1
+                    continue
+                stats.append(st)
+                next_seq = st.seq_end + 1
+                next_queue_seq += st.discovered
+                if st.discovered:
+                    max_arrival = max(max_arrival, r + 1)
                 r += 1
-                continue
-            stats.append(st)
-            next_seq = st.seq_end + 1
-            next_queue_seq += st.discovered
-            if st.discovered:
-                max_arrival = max(max_arrival, r + 1)
-            r += 1
-        prepared.unpersist()
-        return stats
+            return stats
+        finally:
+            prepared.unpersist()
 
     def _wave_join(
         self, pages_prepared: DataFrame | None, selected: DataFrame
@@ -469,20 +469,11 @@ class CrawlEngine:
                 )
             )
             ok = F.col("status") == F.lit(200)
-            # a custom fetcher predating the failure taxonomy has no
-            # error_kind
-            kind = (
-                F.col("error_kind")
-                if "error_kind" in fetched.columns
-                else F.lit(None).cast("string")
-            )
             fetched = fetched.select(
                 "canonical_url",
                 "html",
                 ok.alias("_ok"),
-                F.when(~ok, F.coalesce(kind, F.lit("transport"))).alias(
-                    "error_kind"
-                ),
+                F.when(~ok, F.col("error_kind")).alias("error_kind"),
             )
         fetched = fetched.withColumn("page_bytes", F.octet_length("html"))
         if not self.broadcast_wave:

@@ -8,7 +8,7 @@ Oracle-parity rules observed throughout (the driver hash-compares values):
 * double SUMs are avoided — money/metric aggregates use the exact-integer
   trick: per-row ``CAST(round(x * 10^k) AS BIGINT)`` (bit-identical per-row
   IEEE arithmetic in both engines) summed as int64;
-* single-row double arithmetic (ratios, cosines) is written with identical
+* single-row double arithmetic (ratios) is written with identical
   operation order in both engines, then rounded;
 * regex/text expressions restrict to constructs with identical Spark/DuckDB
   semantics (inputs trimmed before '\\s+' splits; DuckDB replaces get the
@@ -37,7 +37,6 @@ from web_scraper_v1_spark.functions import urls as U
 from web_scraper_v1_spark.functions.boilerplate import classify_blocks
 from web_scraper_v1_spark.functions.extraction import extract_receiver_response
 from web_scraper_v1_spark.operators import dedup as DD
-from web_scraper_v1_spark.operators import similarity as SIM
 from web_scraper_v1_spark.operators import sketches as SK
 from web_scraper_v1_spark.operators.frontier import (
     per_host_topk,
@@ -3102,391 +3101,6 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return DD.simhash_pairs(_t(spark, sf_dir, "documents"), threshold=0.8)
 
 
-@_q(
-    "embedding_neardup",
-    """
-    WITH v AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-    )
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(list_dot_product(a.e, b.e)
-                 / (sqrt(list_dot_product(a.e, a.e))
-                    * sqrt(list_dot_product(b.e, b.e))), 4) AS cosine
-    FROM v a JOIN v b ON a.vec_id < b.vec_id
-    WHERE round(list_dot_product(a.e, b.e)
-          / (sqrt(list_dot_product(a.e, a.e))
-             * sqrt(list_dot_product(b.e, b.e))), 4) >= 0.45
-    """,
-)
-def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs via sign-LSH banding + exact
-    within-bucket verification (operators/similarity.lsh_neardup_pairs).
-    The oracle is the exact all-pairs result: the deterministic planes are
-    tuned so screen recall is 1.0 on this corpus, and verification makes
-    precision exact — same contract as the MinHash/SimHash strategies. The
-    all-pairs crossJoin baseline survives only as the pytest twin
-    (operators/dedup.embedding_neardup_pairs); the registered plan
-    contains no cartesian product (asserted in tests/test_plans.py)."""
-    return SIM.lsh_neardup_pairs(
-        _t(spark, sf_dir, "embeddings"), dim=64, threshold=0.45
-    )
-
-
-@_q(
-    "embedding_neardup_t09",
-    """
-    WITH base AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-    ), twins AS (
-      SELECT vec_id + 1000000 AS vec_id,
-             [e[i] + 0.05 * e[(i % 64) + 1] FOR i IN range(1, 65)] AS e
-      FROM base WHERE vec_id < 25
-    ), v AS (
-      SELECT * FROM base UNION ALL SELECT * FROM twins
-    )
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(list_dot_product(a.e, b.e)
-                 / (sqrt(list_dot_product(a.e, a.e))
-                    * sqrt(list_dot_product(b.e, b.e))), 4) AS cosine
-    FROM v a JOIN v b ON a.vec_id < b.vec_id
-    WHERE round(list_dot_product(a.e, b.e)
-          / (sqrt(list_dot_product(a.e, a.e))
-             * sqrt(list_dot_product(b.e, b.e))), 4) >= 0.9
-    """,
-)
-def q_embedding_neardup_t09(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION near-dup regime (round-4 verdict item 2): t=0.9 with
-    r=8-bit bands (n_planes=32, bands=4), where sign-LSH actually prunes —
-    at cos 0.9 the angular radius is 25.8 deg, per-band collision
-    p^8 = 0.29 for threshold pairs and ~1/256 for random ones, so band
-    buckets discard the corpus instead of replaying it (asserted
-    sub-quadratic in tests/test_plans.py). The t=0.45 twin above stays
-    registered as the adversarial stress query; THIS entry is what a real
-    pipeline runs and what the bench headlines.
-
-    The natural corpus's max cosine is ~0.51, so the ≥0.9 pair set is
-    planted deterministically IN BOTH ENGINES: each vec_id < 25 gets a
-    twin (id + 1,000,000) mixed as e[i] + 0.05*e[(i+1) mod 64] — identical
-    correctly-rounded double ops in Spark and DuckDB, cosine ≈ 0.9988 —
-    and the oracle is the exact all-pairs scan of the augmented table.
-    Screen recall at this regime is deterministic (fixed md5-derived
-    planes, fixed vectors) and verified 25/25 by the hash gate itself."""
-    base = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    twins = base.filter(F.col("vec_id") < 25).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.expr(
-            "transform(embedding, (x, i) -> "
-            "x + 0.05D * element_at(embedding, ((i + 1) % 64) + 1))"
-        ).alias("embedding"),
-    )
-    return SIM.lsh_neardup_pairs(
-        base.unionByName(twins), dim=64, threshold=0.9,
-        n_planes=32, bands=4,
-    )
-
-
-@_q(
-    "ann_bruteforce",
-    """
-    WITH v AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-    ), q AS (
-      SELECT * FROM v WHERE vec_id < 20
-    ), scored AS (
-      SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,
-             round(list_dot_product(q.e, v.e)
-                   / (sqrt(list_dot_product(q.e, q.e))
-                      * sqrt(list_dot_product(v.e, v.e))), 6) AS c6
-      FROM q JOIN v ON v.vec_id <> q.vec_id
-    )
-    SELECT query_id, neighbor_id,
-           CAST(row_number() OVER (PARTITION BY query_id
-                ORDER BY c6 DESC, neighbor_id) AS INT) AS rank,
-           round(c6, 4) AS cosine
-    FROM scored
-    QUALIFY rank <= 5
-    """,
-)
-def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-5 cosine neighbors for 20 query vectors: broadcast query
-    side, JVM-side dot products, per-query window top-k."""
-    embs = _t(spark, sf_dir, "embeddings")
-    qids = embs.select("vec_id").filter(F.col("vec_id") < 20)
-    return SIM.cosine_topk(embs, qids, k=5)
-
-
-# -- ann_lsh: the hyperplanes are deterministic (md5-derived), so the
-# WHOLE approximate algorithm is SQL-expressible: the oracle inlines the
-# identical plane matrix as literals and reproduces signature -> banded
-# candidates -> exact-cosine top-k. repr() floats round-trip exactly in
-# both engines.
-
-from web_scraper_v1_spark.operators.similarity import hyperplanes  # noqa: E402
-
-
-def _ann_lsh_oracle(dim: int = 64, n_planes: int = 16, bands: int = 4) -> str:
-    planes = hyperplanes(dim, n_planes)
-    bits = bits_per_band = n_planes // bands
-    mask = (1 << bits_per_band) - 1
-    sig_terms = " + ".join(
-        f"(CASE WHEN list_dot_product(e, [{', '.join(repr(c) for c in row)}])"
-        f" >= 0 THEN {1 << p} ELSE 0 END)"
-        for p, row in enumerate(planes)
-    )
-    assert bits  # silence lint
-    return f"""
-    WITH v AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-    ), sig AS (
-      SELECT vec_id, e, {sig_terms} AS sig FROM v
-    ), bands AS (
-      SELECT vec_id, e, t.band,
-             (sig >> (t.band * {bits_per_band})) & {mask} AS band_key
-      FROM sig CROSS JOIN generate_series(0, {bands - 1}) AS t(band)
-    ), cand AS (
-      SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS id
-      FROM bands q JOIN bands c
-        ON q.band = c.band AND q.band_key = c.band_key
-      WHERE q.vec_id < 20 AND c.vec_id <> q.vec_id
-    ), scored AS (
-      SELECT cand.query_id, cand.id AS neighbor_id,
-             round(list_dot_product(qe.e, ce.e)
-                   / (sqrt(list_dot_product(qe.e, qe.e))
-                      * sqrt(list_dot_product(ce.e, ce.e))), 6) AS c6
-      FROM cand
-      JOIN v qe ON qe.vec_id = cand.query_id
-      JOIN v ce ON ce.vec_id = cand.id
-    )
-    SELECT query_id, neighbor_id,
-           CAST(row_number() OVER (PARTITION BY query_id
-                ORDER BY c6 DESC, neighbor_id) AS INT) AS rank,
-           round(c6, 4) AS cosine
-    FROM scored
-    QUALIFY rank <= 5
-    """
-
-
-@_q("ann_lsh", _ann_lsh_oracle())
-def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-LSH bucketed ANN top-k. Approximate BUT deterministic: the
-    md5-derived planes are pure functions of (plane, dim), so the DuckDB
-    oracle replays the identical algorithm (literal plane matrix, same
-    banding, exact cosine within buckets) — a full value-hash gate, not a
-    recall bound."""
-    embs = _t(spark, sf_dir, "embeddings")
-    qids = embs.select("vec_id").filter(F.col("vec_id") < 20)
-    return SIM.lsh_ann_topk(embs, qids, dim=64, k=5)
-
-
-# -- ann_ivf: the coarse quantizer is a deterministic sample (the C
-# vectors with the smallest md5(id)), so the WHOLE inverted-file
-# algorithm — train -> assign -> probe -> exact re-rank — replays in SQL.
-
-
-def _ann_ivf_oracle(n_centroids: int = 16, n_probe: int = 4) -> str:
-    return f"""
-    WITH v AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-    ), cent AS (
-      SELECT vec_id AS cid, e AS ce FROM v
-      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_centroids}
-    ), scored_c AS (
-      SELECT v.vec_id, cent.cid,
-             round(list_dot_product(v.e, cent.ce)
-                   / (sqrt(list_dot_product(v.e, v.e))
-                      * sqrt(list_dot_product(cent.ce, cent.ce))), 6) AS c6
-      FROM v CROSS JOIN cent
-    ), assigned AS (
-      SELECT vec_id, cid FROM scored_c
-      QUALIFY row_number() OVER (PARTITION BY vec_id
-              ORDER BY c6 DESC, cid) = 1
-    ), probes AS (
-      SELECT vec_id AS query_id, cid FROM scored_c
-      WHERE vec_id < 20
-      QUALIFY row_number() OVER (PARTITION BY vec_id
-              ORDER BY c6 DESC, cid) <= {n_probe}
-    ), cand AS (
-      SELECT p.query_id, a.vec_id AS id
-      FROM probes p JOIN assigned a ON a.cid = p.cid
-      WHERE a.vec_id <> p.query_id
-    ), scored AS (
-      SELECT cand.query_id, cand.id AS neighbor_id,
-             round(list_dot_product(qe.e, ce.e)
-                   / (sqrt(list_dot_product(qe.e, qe.e))
-                      * sqrt(list_dot_product(ce.e, ce.e))), 6) AS c6
-      FROM cand
-      JOIN v qe ON qe.vec_id = cand.query_id
-      JOIN v ce ON ce.vec_id = cand.id
-    )
-    SELECT query_id, neighbor_id,
-           CAST(row_number() OVER (PARTITION BY query_id
-                ORDER BY c6 DESC, neighbor_id) AS INT) AS rank,
-           c6 AS cosine
-    FROM scored
-    QUALIFY rank <= 5
-    """
-
-
-def _ann_ivfpq_oracle(
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    n_sub: int = 8,
-    sub_dim: int = 8,
-    k: int = 5,
-    rerank_r: int = 50,
-) -> str:
-    lo = f"s.m * {sub_dim} + 1"
-    hi = f"s.m * {sub_dim} + {sub_dim + 1}"
-    dim = n_sub * sub_dim
-    return f"""
-    WITH v AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-    ), cent AS (
-      SELECT vec_id AS cid, e AS ce FROM v
-      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_centroids}
-    ), cb AS (
-      SELECT CAST(row_number() OVER (
-               ORDER BY md5(CAST(cid AS VARCHAR)), cid) - 1 AS INT) AS j,
-             [ce[k] / sqrt(list_dot_product(ce, ce))
-              for k in range(1, {dim + 1})] AS nce
-      FROM cent
-    ), nvv AS (
-      SELECT vec_id,
-             [e[k] / sqrt(list_dot_product(e, e))
-              for k in range(1, {dim + 1})] AS ne
-      FROM v
-    ), subs AS (
-      SELECT CAST(unnest(range(0, {n_sub})) AS INT) AS m
-    ), enc AS (
-      SELECT nvv.vec_id, s.m, cb.j,
-             round(list_sum([(nvv.ne[k] - cb.nce[k])
-                             * (nvv.ne[k] - cb.nce[k])
-                             for k in range({lo}, {hi})]), 6) AS d2
-      FROM nvv CROSS JOIN subs s CROSS JOIN cb
-    ), codes AS (
-      SELECT vec_id, m, j FROM enc
-      QUALIFY row_number() OVER (PARTITION BY vec_id, m
-              ORDER BY d2, j) = 1
-    ), scored_c AS (
-      SELECT v.vec_id, cent.cid,
-             round(list_dot_product(v.e, cent.ce)
-                   / (sqrt(list_dot_product(v.e, v.e))
-                      * sqrt(list_dot_product(cent.ce, cent.ce))), 6) AS c6
-      FROM v CROSS JOIN cent
-    ), assigned AS (
-      SELECT vec_id, cid FROM scored_c
-      QUALIFY row_number() OVER (PARTITION BY vec_id
-              ORDER BY c6 DESC, cid) = 1
-    ), probes AS (
-      SELECT vec_id AS query_id, cid FROM scored_c
-      WHERE vec_id < 20
-      QUALIFY row_number() OVER (PARTITION BY vec_id
-              ORDER BY c6 DESC, cid) <= {n_probe}
-    ), wtab AS (
-      SELECT q.vec_id AS query_id, s.m, cb.j,
-             CAST(round(1000000.0 * list_sum(
-               [q.e[k] * cb.nce[k] for k in range({lo}, {hi})]))
-               AS BIGINT) AS wt
-      FROM v q CROSS JOIN subs s CROSS JOIN cb
-      WHERE q.vec_id < 20
-    ), cand AS (
-      SELECT p.query_id, a.vec_id AS id
-      FROM probes p JOIN assigned a ON a.cid = p.cid
-      WHERE a.vec_id <> p.query_id
-    ), adc AS (
-      SELECT c.query_id, c.id, CAST(SUM(w.wt) AS BIGINT) AS adc_x1e6
-      FROM cand c
-      JOIN codes cd ON cd.vec_id = c.id
-      JOIN wtab w ON w.query_id = c.query_id
-       AND w.m = cd.m AND w.j = cd.j
-      GROUP BY c.query_id, c.id
-    ), shortlist AS (
-      SELECT query_id, id FROM adc
-      QUALIFY row_number() OVER (PARTITION BY query_id
-              ORDER BY adc_x1e6 DESC, id) <= {rerank_r}
-    ), rescored AS (
-      SELECT s.query_id, s.id AS neighbor_id,
-             round(list_dot_product(qe.e, ce.e)
-                   / (sqrt(list_dot_product(qe.e, qe.e))
-                      * sqrt(list_dot_product(ce.e, ce.e))), 6) AS c6
-      FROM shortlist s
-      JOIN v qe ON qe.vec_id = s.query_id
-      JOIN v ce ON ce.vec_id = s.id
-    )
-    SELECT query_id, neighbor_id,
-           CAST(row_number() OVER (PARTITION BY query_id
-                ORDER BY c6 DESC, neighbor_id) AS INT) AS rank,
-           c6 AS cosine
-    FROM rescored
-    QUALIFY rank <= {k}
-    """
-
-
-@_q("ann_ivfpq", _ann_ivfpq_oracle())
-def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ top-k (FAISS's memory-compressed production index shape,
-    Jégou et al. 2011): coarse-quantizer probing exactly as ``ann_ivf``,
-    then candidates scored from their 8-subspace PQ codes via an
-    integer asymmetric-distance table — 8 bytes per corpus vector
-    instead of 256, and the scored path is int64 end-to-end, so the
-    oracle's full train/encode/probe/ADC replay is hash-exact. Recall
-    vs the exact baseline is additionally pytest-gated
-    (operators/similarity.ivfpq_ann_topk)."""
-    embs = _t(spark, sf_dir, "embeddings")
-    qids = embs.select("vec_id").filter(F.col("vec_id") < 20)
-    return SIM.ivfpq_ann_topk(embs, qids, dim=64, k=5)
-
-
-# corpus plan -> (source frame, (index path, centroids, codebooks)) —
-# the stored-index cadence: ingest once per session, probe per query.
-_IVFPQ_INDEX_CACHE: dict[int, tuple[DataFrame, tuple]] = {}
-
-
-@_q("ann_ivfpq_stored", _ann_ivfpq_oracle())
-def q_ann_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``ann_ivfpq`` through the PERSISTED index — the deployment shape:
-    (id, codes) written once ``partitionBy(cid)`` (8 bytes of PQ code
-    per vector in the store, never the vector), probes pushed into the
-    read as a literal partition filter, ADC scoring from stored codes,
-    and the refine join fetching real vectors from the base table only
-    for the ADC top-50. Identical results to the in-flight path by
-    construction (same kernels, same ordering), so the same oracle
-    carries over — what this row adds is the write -> partition-pruned
-    probe -> refine round trip (operators/similarity.ivfpq_index_write /
-    ivfpq_probe_topk)."""
-    import tempfile
-
-    embs = _t(spark, sf_dir, "embeddings")
-    key = embs.semanticHash()
-    hit = _IVFPQ_INDEX_CACHE.get(key)
-    if hit is not None and embs.sameSemantics(hit[0]):
-        path, cents, cbs = hit[1]
-    else:
-        path = tempfile.mkdtemp(prefix="spark_graft_ivfpq_index_")
-        cents, cbs = SIM.ivfpq_index_write(embs, path)
-        _IVFPQ_INDEX_CACHE[key] = (embs, (path, cents, cbs))
-    qids = embs.select("vec_id").filter(F.col("vec_id") < 20)
-    return SIM.ivfpq_probe_topk(spark, path, embs, qids, cents, cbs, k=5)
-
-
-@_q("ann_ivf", _ann_ivf_oracle())
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF (inverted-file) bucketed ANN top-k — the second canonical ANN
-    scale path next to sign-LSH: a C-centroid coarse quantizer partitions
-    the corpus into inverted lists; queries exactly score only their
-    n_probe nearest lists. Corpus-side assignment is a literal-expression
-    map (no shuffle, no Python); the quantizer is deterministic (smallest
-    md5(id) sample — the k-means training path is implemented as
-    operators/similarity.ivf_centroids_kmeans, pytest-gated), so the
-    oracle replays
-    train/assign/probe/re-rank end-to-end — a full value-hash gate."""
-    embs = _t(spark, sf_dir, "embeddings")
-    qids = embs.select("vec_id").filter(F.col("vec_id") < 20)
-    return SIM.ivf_ann_topk(embs, qids, dim=64, k=5)
-
-
 # --------------------------------------------------------------------------
 # Rows-only queries (genuinely non-SQL-expressible; weaker driver check)
 # --------------------------------------------------------------------------
@@ -4893,78 +4507,6 @@ def q_url_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "doc_embedding_pool",
-    f"""
-    WITH tok AS (
-      SELECT doc_id,
-             regexp_split_to_array(trim(lower(text)), '\\s+') AS w
-      FROM documents
-    ), occ AS (
-      SELECT doc_id, unnest(w) AS s FROM tok
-    ), b AS (
-      SELECT doc_id, {_MD5_BUCKET_DUCK} AS b FROM occ
-    ), emb AS (
-      SELECT CAST(r AS BIGINT) AS b,
-             [CAST((r * 31 + j * 17) % 201 AS BIGINT) - 100
-              for j in range(0, 8)] AS v
-      FROM range(256) t(r)
-    ), pooled AS (
-      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-             {", ".join(
-                 f"CAST(sum(v[{j + 1}]) AS BIGINT) AS e{j}"
-                 for j in range(8)
-             )}
-      FROM b JOIN emb USING (b) GROUP BY doc_id
-    )
-    SELECT * FROM pooled
-    """,
-)
-def q_doc_embedding_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The embedding-GENERATION stage that feeds the ANN/semdedup layer:
-    hashed-token embedding lookup + sum-pooling per document (the
-    fastText sentence-vector construction — token hashes into a fixed
-    vocabulary bucket, each bucket carries a trained dense vector, the
-    document embedding pools them). The 256 x 8 embedding table derives
-    arithmetically from the bucket id so the oracle replays it exactly
-    (integer components; SUM pooling instead of mean keeps the repo-wide
-    no-double-sums rule — mean is sum/n_tokens downstream whenever a
-    consumer wants it). Shape at 100 TB: tokens compact to
-    per-(doc, bucket) counts in one scan, the embedding table broadcasts
-    (a real 10^5 x 300-float table is ~120 MB — still broadcast range),
-    pooling is one map-side-partial aggregation; the corpus never
-    shuffles wider than 8 int64 columns."""
-    d = _t(spark, sf_dir, "documents")
-    occ = (
-        d.select("doc_id", TX.tokens(F.col("text")).alias("w"))
-        .select("doc_id", F.explode("w").alias("s"))
-        .select("doc_id", F.expr(_MD5_BUCKET_SPARK).alias("b"))
-    )
-    compact = occ.groupBy("doc_id", "b").agg(
-        F.count("*").cast("long").alias("n")
-    )
-    emb = spark.range(256).select(
-        F.col("id").cast("long").alias("b"),
-        *[
-            ((F.col("id") * 31 + j * 17) % 201 - 100)
-            .cast("long")
-            .alias(f"c{j}")
-            for j in range(8)
-        ],
-    )
-    return (
-        compact.join(F.broadcast(emb), "b")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n").cast("long").alias("n_tokens"),
-            *[
-                F.sum(F.expr(f"n * c{j}")).cast("long").alias(f"e{j}")
-                for j in range(8)
-            ],
-        )
-    )
-
-
-@_q(
     "gopher_quality_filter",
     f"""
     WITH tok AS (
@@ -5126,68 +4668,6 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.sum(F.expr("n * wgt")).cast("long").alias("score"))
         .withColumn("keep", F.col("score") > 0)
-    )
-
-
-@_q(
-    "semdedup",
-    f"""
-    WITH base AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-    ), twins AS (
-      SELECT vec_id + 1000000 AS vec_id,
-             [e[i] + 0.05 * e[(i % 64) + 1] FOR i IN range(1, 65)] AS e
-      FROM base WHERE vec_id < 25
-    ), v AS (
-      SELECT * FROM base UNION ALL SELECT * FROM twins
-    ), bk AS (
-      SELECT vec_id, e,
-             CAST({SIM.semdedup_bucket_expr(64, 8, idx="e[{}]")}
-                  AS BIGINT) AS bucket
-      FROM v
-    ), reps AS (
-      SELECT bucket, min(vec_id) AS rep_id FROM bk GROUP BY bucket
-    ), repv AS (
-      SELECT r.bucket, r.rep_id, b.e AS re
-      FROM reps r JOIN bk b ON b.vec_id = r.rep_id
-    )
-    SELECT m.vec_id, m.bucket, r.rep_id,
-           round(list_dot_product(m.e, r.re)
-                 / (sqrt(list_dot_product(m.e, m.e))
-                    * sqrt(list_dot_product(r.re, r.re))), 4) AS cosine,
-           (m.vec_id = r.rep_id
-            OR round(list_dot_product(m.e, r.re)
-                     / (sqrt(list_dot_product(m.e, m.e))
-                        * sqrt(list_dot_product(r.re, r.re))), 4) < 0.9)
-             AS keep
-    FROM bk m JOIN repv r USING (bucket)
-    """,
-)
-def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, public): semantic dedup by clustering
-    — drop any embedding whose cosine to its CLUSTER REPRESENTATIVE
-    reaches 0.9, keeping one exemplar per semantic neighborhood. Linear
-    in corpus size where pairwise near-dup is quadratic-at-worst: the
-    canonical web-scale move when 'roughly one copy per meaning' is
-    enough (operators/similarity.semdedup_keep; cluster surrogate
-    documented there — production clusters with
-    ivf_centroids_kmeans(exact_int=True)). The corpus's natural max
-    cosine is ~0.51, so the dropped set is planted deterministically in
-    both engines with the ``embedding_neardup_t09`` twin construction
-    (vec_id < 25 -> mixed copy at id+10^6, cosine ~0.9988)."""
-    base = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("embedding"),
-    )
-    twins = base.filter(F.col("vec_id") < 25).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.expr(
-            "transform(embedding, (x, i) -> "
-            "x + 0.05D * element_at(embedding, ((i + 1) % 64) + 1))"
-        ).alias("embedding"),
-    )
-    return SIM.semdedup_keep(
-        base.unionByName(twins), dim=64, threshold=0.9, n_bits=8
     )
 
 
@@ -7465,7 +6945,7 @@ def q_opic_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # politeness operators, and the stream plane (O9/O10/O16). This subset is
 # the driver contract (``__spark_entry__.queries()``); it fits the driver's
 # 50-query correctness window, so every entry is checked every round. The
-# rest of the registry (training-data curation, near-dup, ANN, link graph,
+# rest of the registry (training-data curation, near-dup, link graph,
 # WARC, sketches) is checked against its oracles by scripts/selfcheck.py.
 CRAWL_SYSTEM = frozenset(
     {
