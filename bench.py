@@ -86,11 +86,6 @@ HEADLINE = [
     "curation_pipeline",
     "minhash_lsh_dedup",
     "simhash_dedup",
-    # WARC container layer (Common-Crawl ingestion path)
-    "warc_roundtrip",
-    "warc_file_roundtrip",
-    "cdx_index",
-    "sitemap_extract",
     # mergeable sketches (frontier-scale distinct/frequency counting)
     "hll_distinct",
     "cms_heavy_hitters",
@@ -130,16 +125,10 @@ HEADLINE = [
     # round-5 late additions: link-spam demotion
     "host_trustrank",
     # round-5 second-session additions: directed containment dedup,
-    # jusText-style boilerplate removal + extracted-text artifact,
-    # stored-CDX SURT range lookup, exact harmonic centrality,
-    # temperature mixture weighting
+    # exact harmonic centrality, temperature mixture weighting
     "containment_dedup",
-    "content_extract",
-    "content_extract_text",
-    "cdx_surt_range",
     "host_harmonic_centrality",
     "mixture_temperature",
-    "warc_revisit",
 ]
 
 

@@ -87,7 +87,6 @@ def test_trace_parity_with_politeness_and_robots(
         batch_size=10,
         retry_limit=3,
         host_budget=2,
-        salt_buckets=4,
     )
     eng.run(seeds_df, pages_df, robots=robots_df)
     sim = fx.simulate_crawl(
@@ -111,7 +110,6 @@ def test_trace_parity_with_crawl_delay_budgets(
         str(tmp_path / "run_delay"),
         batch_size=20,
         retry_limit=3,
-        salt_buckets=4,
         round_duration_s=4.0,
     )
     eng.run(seeds_df, pages_df, robots=robots_df)
@@ -161,7 +159,6 @@ def test_trace_parity_fractional_crawl_delay(
         str(tmp_path / "run_fdelay"),
         batch_size=20,
         retry_limit=3,
-        salt_buckets=4,
         round_duration_s=2.0,
     )
     eng.run(seeds_df, pages_df, robots=robots_df)
@@ -184,7 +181,6 @@ def test_trace_parity_mixed_priorities(
     assert {s["priority"] for s in seeds} == {0, 1}
     eng = CrawlEngine(
         spark, str(tmp_path / "run_prio"), batch_size=30, host_budget=3,
-        salt_buckets=4,
     )
     eng.run(seeds_df, pages_df)
     sim = fx.simulate_crawl(
@@ -206,7 +202,6 @@ def test_trace_parity_link_discovery(
         spark,
         str(tmp_path / "run_links"),
         batch_size=30,
-        salt_buckets=4,
         discover_links=True,
         max_depth=2,
     )
@@ -226,6 +221,53 @@ def test_trace_parity_link_discovery(
     assert depths and depths <= {1, 2} and 1 in depths
 
 
+def test_link_discovery_survives_invalid_utf8_body(spark, tmp_path):
+    """A fetched body with an invalid UTF-8 byte between its field lines
+    and its Link: lines: the round commits, the page is fetched, and its
+    link is discovered (the byte reads as U+FFFD). The whole trace
+    matches the simulator's."""
+    from web_scraper_v1_spark.sources.corpus import PAGES_SCHEMA, SEEDS_SCHEMA
+
+    pages = fx.generate_pages(40, 4)
+    seeds = fx.generate_seeds(11, 40, 4)
+    seeded = {fx.canonicalize_url(s["url"]) for s in seeds}
+    page = next(
+        p for p in pages
+        if fx.canonicalize_url(p["url"]) in seeded
+        and any(fx.canonicalize_url(t) not in seeded for t in p["outlinks"])
+    )
+    fields, sep, links = page["html"].partition(b"\n" + fx.LINK_PREFIX.encode())
+    page["html"] = fields + b"\nfooter \xff" + sep + links
+    cols = [f.name for f in PAGES_SCHEMA]
+    pages_df = spark.createDataFrame(
+        [tuple(p[c] for c in cols) for p in pages], PAGES_SCHEMA
+    )
+    seeds_df = spark.createDataFrame(
+        [tuple(s[f.name] for f in SEEDS_SCHEMA) for s in seeds], SEEDS_SCHEMA
+    )
+    eng = CrawlEngine(
+        spark,
+        str(tmp_path / "run_bad_utf8"),
+        batch_size=30,
+        discover_links=True,
+        max_depth=2,
+    )
+    stats = eng.run(seeds_df, pages_df)
+    sim = fx.simulate_crawl(
+        seeds, pages, batch_size=30, discover_links=True, max_depth=2
+    )
+    trace = _trace_df_to_rows(eng.trace())
+    _assert_trace_equal(trace, sim.trace)
+    cu = fx.canonicalize_url(page["url"])
+    assert {"url": cu, "outcome": fx.OUTCOME_FETCHED} in [
+        {"url": t["url"], "outcome": t["outcome"]} for t in trace
+    ]
+    traced = {t["url"] for t in trace}
+    new_links = {fx.canonicalize_url(t) for t in page["outlinks"]} - seeded
+    assert new_links <= traced
+    assert sum(st.discovered for st in stats) > 0
+
+
 def test_host_bucket_partitioning_prunes_and_preserves_parity(
     spark, tmp_path, corpus_frames, py_fixtures
 ):
@@ -240,7 +282,6 @@ def test_host_bucket_partitioning_prunes_and_preserves_parity(
         str(tmp_path / "run_hb"),
         batch_size=10,
         host_budget=2,
-        salt_buckets=4,
         host_buckets=8,
     )
     eng.run(seeds_df, pages_df)
@@ -272,7 +313,7 @@ def test_resume_with_link_discovery(spark, tmp_path, corpus_frames, py_fixtures)
     """queue_seq assignment for discoveries survives resume (committed
     frontier snapshots + next_queue_seq lineage)."""
     seeds_df, pages_df, _ = corpus_frames
-    kwargs = dict(batch_size=30, salt_buckets=4, discover_links=True, max_depth=2)
+    kwargs = dict(batch_size=30, discover_links=True, max_depth=2)
     full = CrawlEngine(spark, str(tmp_path / "dfull"), **kwargs)
     full.run(seeds_df, pages_df)
 
@@ -349,7 +390,7 @@ def test_crash_between_round_write_and_commit(
     seeds_df, pages_df, _ = corpus_frames
     seeds, pages, _ = py_fixtures
     kwargs = dict(
-        batch_size=30, salt_buckets=4, discover_links=True, max_depth=2
+        batch_size=30, discover_links=True, max_depth=2
     )
     run_dir = tmp_path / f"crash_{crash_at}"
     eng = CrawlEngine(spark, str(run_dir), **kwargs)
@@ -436,7 +477,7 @@ def test_round_job_budget(spark, tmp_path, monkeypatch, corpus_frames):
 
     monkeypatch.setattr(CrawlEngine, "_run_round", grouped)
     eng = CrawlEngine(
-        spark, str(tmp_path / "jobs"), batch_size=30, salt_buckets=4,
+        spark, str(tmp_path / "jobs"), batch_size=30,
         discover_links=True, max_depth=2,
     )
     stats = eng.run(seeds_df, pages_df, max_rounds=1)

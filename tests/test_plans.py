@@ -698,16 +698,6 @@ def test_canonical_link_collapse_single_scan_single_exchange(spark):
     assert "SinglePartition" not in plan, plan
 
 
-def test_cdx_surt_range_prefix_filter_is_pushed(spark):
-    """The stored-CDX prefix lookup must reach the parquet scan as a
-    pushed StartsWith so range partitions that cannot contain the prefix
-    are pruned by min-max stats at 100 TB."""
-    df = Q.queries()["cdx_surt_range"](spark, SF)
-    plan = plan_of(df)
-    pushed = plan.split("PushedFilters:")[1].split("\n")[0]
-    assert "StartsWith(surt" in pushed
-
-
 def test_runtime_bloom_filter_join_injects_on_selective_dim(spark):
     """Catalyst's runtime bloom-filter join (a free win the reference
     cannot express): a selective filter on the small side of a
@@ -792,17 +782,6 @@ def test_aqe_skew_join_splits_hot_key_partitions(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_content_extract_single_scan_single_exchange(spark):
-    """The block classifier reads the corpus once and exchanges once (the
-    doc_id partitioning shared by both context windows) — pass 2 must
-    not re-scan or re-shuffle."""
-    plan = plan_of(Q.queries()["content_extract"](spark, SF))
-    assert "CartesianProduct" not in plan, plan
-    assert plan.count("Scan parquet") == 2, plan  # one node: tree+details
-    assert plan.count("Arguments: hashpartitioning") == 1, plan
-    assert "SinglePartition" not in plan, plan
 
 
 def test_containment_pairs_never_cartesian(spark):

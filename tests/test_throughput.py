@@ -7,12 +7,18 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from web_scraper_v1_spark import fixtures as fx
 from web_scraper_v1_spark.operators.seen import SeenSet
 from web_scraper_v1_spark.plans.throughput import (
     fetch_parse_from_frontier,
     fetch_parse_wave,
 )
-from web_scraper_v1_spark.sources.corpus import read_pages, read_seeds
+from web_scraper_v1_spark.sources.corpus import (
+    PAGES_SCHEMA,
+    SEEDS_SCHEMA,
+    read_pages,
+    read_seeds,
+)
 
 
 def test_wave_byte_parity_and_seen(spark, corpus_dir):
@@ -71,3 +77,40 @@ def test_frontier_entry_matches_wave(spark, corpus_dir):
         .collect()
     }
     assert a == b and a
+
+
+def test_wave_parses_non_utf8_pages(spark):
+    """The wave cuts each body's first 512 bytes before decoding. A cut
+    inside a multibyte character of a valid page, and an invalid byte in
+    a field line, both read as U+FFFD like the extractor's decode: the
+    page is parsed, not the wave failed."""
+    head = b"Received User-Agent: a\nIP Address: 1.2.3.4\nForwarded Host: h\n"
+    cut = head + "ж".encode() * 400
+    assert cut[511] == 0xD0  # byte 512 is the lead byte of a "ж"
+    bad = b"Received User-Agent: ab\xffcd\nIP Address: 1.2.3.4\nForwarded Host: h"
+    bodies = {
+        "http://host1.example.com/cut": cut,
+        "http://host2.example.com/bad": bad,
+    }
+    pages = spark.createDataFrame(
+        [(u, fx.EPOCH, b, None, "en") for u, b in bodies.items()],
+        PAGES_SCHEMA,
+    )
+    seeds = spark.createDataFrame(
+        [(f"task-{i}", u, 0, 0) for i, u in enumerate(bodies, 1)],
+        SEEDS_SCHEMA,
+    )
+    got = {
+        r.url: r.text
+        for r in fetch_parse_wave(
+            spark, seeds, pages, parse_features=True
+        ).collect()
+    }
+    want = {
+        fx.canonicalize_url(u): "\n".join(
+            fx.parse_receiver_response(b.decode("utf-8", "replace"))
+        )
+        for u, b in bodies.items()
+    }
+    assert got == want
+    assert "\ufffd" in want[fx.canonicalize_url("http://host2.example.com/bad")]

@@ -586,37 +586,3 @@ def test_containment_screen_is_lossless_vs_allpairs(spark):
         ).collect()
     }
     assert pruned == unpruned
-
-
-def test_boilerplate_two_pass_classes(spark):
-    """Context-free classes per the integer thresholds, then the
-    context pass: ambiguous blocks adopt 'good' iff a decided
-    neighbour on either side is good (document edges count as bad)."""
-    from web_scraper_v1_spark.functions.boilerplate import classify_blocks
-
-    filler = ["mountain", "evening", "laughter", "quantity",
-              "document", "sample", "fortune", "library"]
-    # doc 1: bad (link-dense) | good (2 stopwords, >50 chars) |
-    #        neargood (1 stopword) -> good by context | short tail -> good
-    blk_bad = ["spark", "spark", "spark"] + ["w"] * 7
-    blk_good = ["the", "table"] + filler
-    blk_near = ["the"] + [f"word{i}" for i in range(9)]
-    tail = ["aa", "bb"]
-    doc1 = " ".join(blk_bad + blk_good + blk_near + tail)
-    # doc 2: neargood surrounded only by bads -> bad
-    blk_bad2 = ["vector", "vector", "vector"] + ["q"] * 7
-    doc2 = " ".join(blk_bad + blk_near + blk_bad2)
-    docs = spark.createDataFrame(
-        [(1, doc1), (2, doc2)], "doc_id long, text string"
-    )
-    rows = {
-        (r.doc_id, r.block_idx): (r.cls, r.cls_final)
-        for r in classify_blocks(docs).collect()
-    }
-    assert rows[(1, 0)] == ("bad", "bad")
-    assert rows[(1, 1)] == ("good", "good")
-    assert rows[(1, 2)] == ("neargood", "good")   # neighbour good
-    assert rows[(1, 3)] == ("short", "good")      # prev decided good
-    assert rows[(2, 0)] == ("bad", "bad")
-    assert rows[(2, 1)] == ("neargood", "bad")    # both neighbours bad
-    assert rows[(2, 2)] == ("bad", "bad")

@@ -43,14 +43,16 @@ RECEIVER_RESPONSE_SCHEMA = T.StructType(
 
 def _extract_batch(html: pd.Series) -> pd.DataFrame:
     """Pure-pandas core (unit-testable without Spark)."""
-    # Arrow hands binary columns over as bytes/None. Go strings are byte
-    # slices; the corpus is valid UTF-8, so decode is lossless. Decode
-    # errors are treated as parse errors (surrogateescape keeps it total).
+    # Arrow hands binary columns over as bytes/None. Valid UTF-8 decodes
+    # losslessly; each invalid sequence becomes U+FFFD, as Go's
+    # encoding/json does when the reference marshals the response and as
+    # ``make_valid_utf8`` does JVM-side in plans/, so one bad byte never
+    # fails the task.
     if html.dtype == object:
         # C-level bytes->str decode (Series.str.decode); non-bytes entries
         # (already-str unit-test inputs, None) come out NaN and fall back
         # to the original value.
-        dec = html.str.decode("utf-8", "surrogateescape")
+        dec = html.str.decode("utf-8", "replace")
         s = dec.where(dec.notna(), html)
     else:
         s = html

@@ -104,20 +104,6 @@ def quality_score(text: Column) -> Column:
     return F.round(len_term * stop_term * punct_term, 6)
 
 
-def _member_of(markers: tuple[str, ...]):
-    """Single-arg lambda factory — a defaulted second parameter would make
-    PySpark's higher-order-function bridge pass a lambda Column into it."""
-    return lambda t: t.isin(*markers)
-
-
-def lang_scores(tok: Column) -> list[Column]:
-    """Marker-hit count per language, in LANG_MARKERS order."""
-    return [
-        F.size(F.filter(tok, _member_of(markers))).alias(f"score_{lang}")
-        for lang, markers in LANG_MARKERS
-    ]
-
-
 def lang_id(text: Column) -> Column:
     """Argmax over marker-hit counts with deterministic precedence
     (LANG_MARKERS order; strict > so earlier languages win ties). Returns

@@ -177,7 +177,6 @@ class CrawlEngine:
         batch_size: int = 3,
         retry_limit: int = 3,
         host_budget: int | None = None,
-        salt_buckets: int = 16,
         recrawl_after: int | None = None,
         round_duration_s: float | None = None,
         discover_links: bool = False,
@@ -191,7 +190,6 @@ class CrawlEngine:
         self.batch_size = batch_size
         self.retry_limit = retry_limit
         self.host_budget = host_budget
-        self.salt_buckets = salt_buckets
         # TTL semantics (in_memory.go:51-61): a processed URL older than
         # ``recrawl_after`` rounds expires from the live seen view, so it
         # re-enters pending and is refetched — the engine's recrawl policy.
@@ -543,7 +541,6 @@ class CrawlEngine:
             checked.filter(~F.col("robots_blocked")),
             self.host_budget,
             order_cols=("priority", "queue_seq"),
-            salt_buckets=self.salt_buckets,
             budget_col=budget_col,
         )
         task_cols = (
@@ -599,11 +596,14 @@ class CrawlEngine:
             )
             .alias("error_kind"),
             # outlink discovery source: JVM-side regex over the body (link
-            # lines are ignored by the byte-parity extractor)
+            # lines are ignored by the byte-parity extractor); an invalid
+            # UTF-8 sequence reads as U+FFFD, as in the extractor
             *(
                 [
                     F.regexp_extract_all(
-                        F.decode("html", "UTF-8"), F.lit(LINK_LINE_RX), 1
+                        F.make_valid_utf8(F.col("html").cast("string")),
+                        F.lit(LINK_LINE_RX),
+                        1,
                     ).alias("outlinks")
                 ]
                 if self.discover_links

@@ -167,13 +167,20 @@ def fetch_parse_from_frontier(
     # corpus format (UA line <= ~130 B incl. the 2-byte Cyrillic pair, IP +
     # host lines far less), so cut BINARY-side before decoding — charset
     # decode is per-byte work and bodies are KBs (measured 1.6x on the
-    # head projection at 3M pages; a mid-codepoint cut can only land in
-    # line >= 4, which substring_index discards). The generic full-body
-    # path in functions/extraction.py remains the byte-parity gate.
+    # head projection at 3M pages). ``make_valid_utf8`` turns each invalid
+    # sequence into U+FFFD, like the extractor's Python decode: a cut that
+    # lands mid-codepoint leaves one U+FFFD in line >= 4, which
+    # substring_index discards, and an invalid byte in a field line reads
+    # as U+FFFD there too. The generic full-body path in
+    # functions/extraction.py remains the byte-parity gate.
     pages_head = pages.select(
         U.canonicalize(F.col("url")).alias("canonical_url"),
         F.substring_index(
-            F.decode(F.substring(F.col("html"), 1, 512), "UTF-8"), "\n", 3
+            F.make_valid_utf8(
+                F.substring(F.col("html"), 1, 512).cast("string")
+            ),
+            "\n",
+            3,
         ).alias("head"),
         F.octet_length("html").alias("page_bytes"),
     )

@@ -34,7 +34,6 @@ from web_scraper_v1_spark.fixtures import (
 )
 from web_scraper_v1_spark.functions import text as TX
 from web_scraper_v1_spark.functions import urls as U
-from web_scraper_v1_spark.functions.boilerplate import classify_blocks
 from web_scraper_v1_spark.functions.extraction import extract_receiver_response
 from web_scraper_v1_spark.operators import dedup as DD
 from web_scraper_v1_spark.operators import sketches as SK
@@ -53,7 +52,6 @@ from web_scraper_v1_spark.operators.graph import (
     resolve_chains,
 )
 from web_scraper_v1_spark.operators.seen import SeenSet
-from web_scraper_v1_spark.sources import warc as W
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -2230,12 +2228,6 @@ _DECISIONS_CACHE: dict[int, tuple[DataFrame, DataFrame]] = {}
 _DECISIONS_CACHE_MAX = 2
 
 
-def release_decisions() -> None:
-    """Unpersist every cached curation-decision frame."""
-    while _DECISIONS_CACHE:
-        _DECISIONS_CACHE.popitem()[1][1].unpersist()
-
-
 def _curation_decisions(d: DataFrame) -> DataFrame:
     """Plan-cached wrapper over ``_curation_decisions_plan``: the second
     caller in a session (training_manifest after curation_pipeline, or
@@ -2870,185 +2862,6 @@ def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
-    "content_extract",
-    """
-    WITH tok AS (
-      SELECT doc_id,
-             regexp_split_to_array(trim(lower(text)), '\\s+') AS w
-      FROM documents
-    ), blk AS (
-      SELECT doc_id, CAST(i AS BIGINT) AS block_idx,
-             w[i * 10 + 1:i * 10 + 10] AS lw
-      FROM tok, UNNEST(range(0, (len(w) + 9) // 10)) AS t(i)
-      WHERE len(w) >= 1
-    ), feat AS (
-      SELECT doc_id, block_idx,
-             CAST(len(lw) AS INT) AS n_tok,
-             CAST(strlen(array_to_string(lw, ' ')) AS INT) AS chars,
-             CAST(len(list_filter(lw,
-                  x -> x IN ('a','the','value','table'))) AS INT)
-               AS stop_cnt,
-             CAST(len(list_filter(lw,
-                  x -> x IN ('spark','stream','vector'))) AS INT)
-               AS link_cnt
-      FROM blk
-    ), cf AS (
-      SELECT *,
-             CASE
-               WHEN link_cnt * 5 > n_tok THEN 'bad'
-               WHEN chars < 40 THEN
-                 CASE WHEN link_cnt > 0 THEN 'bad' ELSE 'short' END
-               WHEN stop_cnt * 5 >= n_tok THEN
-                 CASE WHEN chars > 50 THEN 'good' ELSE 'neargood' END
-               WHEN stop_cnt * 10 >= n_tok THEN 'neargood'
-               ELSE 'bad'
-             END AS cls
-      FROM feat
-    ), ctx AS (
-      SELECT *,
-             coalesce(last_value(
-                 CASE WHEN cls IN ('good','bad') THEN cls END IGNORE NULLS)
-               OVER (PARTITION BY doc_id ORDER BY block_idx
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-               'bad') AS ctx_prev,
-             coalesce(first_value(
-                 CASE WHEN cls IN ('good','bad') THEN cls END IGNORE NULLS)
-               OVER (PARTITION BY doc_id ORDER BY block_idx
-                     ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING),
-               'bad') AS ctx_next
-      FROM cf
-    )
-    SELECT doc_id, block_idx, n_tok, chars, stop_cnt, link_cnt, cls,
-           CASE WHEN cls IN ('good','bad') THEN cls
-                WHEN ctx_prev = 'good' OR ctx_next = 'good' THEN 'good'
-                ELSE 'bad'
-           END AS cls_final
-    FROM ctx
-    """,
-)
-def q_content_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Main-content extraction via two-pass jusText-style block
-    classification (Pomikálek 2011 / trafilatura lineage — public; the
-    reference's extraction is prefix-strip only,
-    internal/parser/receiver_response_parser.go:18-37). Pass 1 classifies
-    every 10-word block from integer-encoded link/stopword densities and
-    char length (good/neargood/short/bad); pass 2 resolves the ambiguous
-    classes from the nearest DECIDED neighbours with two doc-partitioned
-    windows — no iteration, one narrow (doc_id) exchange, zero Python.
-    See functions/boilerplate.py for thresholds and the scale shape."""
-    return classify_blocks(_t(spark, sf_dir, "documents"))
-
-
-@_q(
-    "content_extract_text",
-    """
-    WITH tok AS (
-      SELECT doc_id,
-             regexp_split_to_array(trim(lower(text)), '\\s+') AS w
-      FROM documents
-    ), blk AS (
-      SELECT doc_id, CAST(i AS BIGINT) AS block_idx,
-             w[i * 10 + 1:i * 10 + 10] AS lw
-      FROM tok, UNNEST(range(0, (len(w) + 9) // 10)) AS t(i)
-      WHERE len(w) >= 1
-    ), feat AS (
-      SELECT doc_id, block_idx,
-             array_to_string(lw, ' ') AS btxt,
-             CAST(len(lw) AS INT) AS n_tok,
-             CAST(strlen(array_to_string(lw, ' ')) AS INT) AS chars,
-             CAST(len(list_filter(lw,
-                  x -> x IN ('a','the','value','table'))) AS INT)
-               AS stop_cnt,
-             CAST(len(list_filter(lw,
-                  x -> x IN ('spark','stream','vector'))) AS INT)
-               AS link_cnt
-      FROM blk
-    ), cf AS (
-      SELECT *,
-             CASE
-               WHEN link_cnt * 5 > n_tok THEN 'bad'
-               WHEN chars < 40 THEN
-                 CASE WHEN link_cnt > 0 THEN 'bad' ELSE 'short' END
-               WHEN stop_cnt * 5 >= n_tok THEN
-                 CASE WHEN chars > 50 THEN 'good' ELSE 'neargood' END
-               WHEN stop_cnt * 10 >= n_tok THEN 'neargood'
-               ELSE 'bad'
-             END AS cls
-      FROM feat
-    ), ctx AS (
-      SELECT *,
-             coalesce(last_value(
-                 CASE WHEN cls IN ('good','bad') THEN cls END IGNORE NULLS)
-               OVER (PARTITION BY doc_id ORDER BY block_idx
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-               'bad') AS ctx_prev,
-             coalesce(first_value(
-                 CASE WHEN cls IN ('good','bad') THEN cls END IGNORE NULLS)
-               OVER (PARTITION BY doc_id ORDER BY block_idx
-                     ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING),
-               'bad') AS ctx_next
-      FROM cf
-    ), fin AS (
-      SELECT doc_id, block_idx, btxt,
-             CASE WHEN cls IN ('good','bad') THEN cls
-                  WHEN ctx_prev = 'good' OR ctx_next = 'good' THEN 'good'
-                  ELSE 'bad'
-             END AS cls_final
-      FROM ctx
-    )
-    SELECT doc_id,
-           CAST(count(*) AS BIGINT) AS n_blocks,
-           CAST(sum(CASE WHEN cls_final = 'good' THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_good,
-           md5(coalesce(string_agg(btxt, ' ' ORDER BY block_idx)
-                        FILTER (WHERE cls_final = 'good'), ''))
-             AS extracted_md5,
-           CAST(strlen(coalesce(string_agg(btxt, ' ' ORDER BY block_idx)
-                        FILTER (WHERE cls_final = 'good'), ''))
-                AS BIGINT) AS extracted_chars
-    FROM fin GROUP BY doc_id
-    """,
-)
-def q_content_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The downstream artifact of ``content_extract``: per document, the
-    main-content text reassembled from the final-good blocks in block
-    order (carried as md5 + length so the row stays narrow — the byte
-    parity IS the gate). One (doc_id) exchange shared with the context
-    windows; the reassembly is sort_array over collected (idx, text)
-    structs, no second scan."""
-    d = _t(spark, sf_dir, "documents")
-    blocks = classify_blocks(d, keep_text=True)
-    kept = F.array_join(
-        F.transform(
-            F.filter(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            F.col("block_idx").alias("i"),
-                            F.when(
-                                F.col("cls_final") == "good",
-                                F.col("btxt"),
-                            ).alias("t"),
-                        )
-                    )
-                ),
-                lambda s: s["t"].isNotNull(),
-            ),
-            lambda s: s["t"],
-        ),
-        " ",
-    )
-    return blocks.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("n_blocks"),
-        F.sum(F.when(F.col("cls_final") == "good", 1).otherwise(0))
-        .cast("long")
-        .alias("n_good"),
-        F.md5(kept.cast("binary")).alias("extracted_md5"),
-        F.length(kept).cast("long").alias("extracted_chars"),
-    )
-
-
 # corpus plan -> (source frame, on-disk index path) written THIS process.
 # Production ingests the corpus index once and probes it per increment; the
 # cache gives the registry row the same cadence: the first call in a session
@@ -3463,92 +3276,6 @@ def _recrawl_delta_statuses(d: DataFrame) -> DataFrame:
         .when(F.col("h1") == F.col("h2"), "unchanged")
         .otherwise("changed")
         .alias("status"),
-    )
-
-
-@_q(
-    "warc_revisit",
-    """
-    WITH caps AS (
-      SELECT doc_id, 0 AS gen, '2026-01-15' AS warc_date,
-             md5(text) AS digest
-      FROM documents
-      UNION ALL
-      SELECT doc_id, 1, '2026-02-15',
-             md5(text || CASE WHEN doc_id % 3 = 0 THEN ' v2'
-                              WHEN doc_id % 3 = 1 THEN ' v1'
-                              ELSE '' END)
-      FROM documents
-      UNION ALL
-      SELECT doc_id, 2, '2026-03-15',
-             md5(text || CASE WHEN doc_id % 3 = 1 THEN ' v2'
-                              ELSE '' END)
-      FROM documents
-    ), marked AS (
-      SELECT doc_id, gen, warc_date, digest,
-             row_number() OVER (PARTITION BY doc_id, digest
-                                ORDER BY warc_date) AS rn,
-             first_value(warc_date) OVER (PARTITION BY doc_id, digest
-                                          ORDER BY warc_date) AS fd
-      FROM caps
-    )
-    SELECT doc_id, CAST(gen AS INT) AS gen, warc_date, digest,
-           CASE WHEN rn > 1 THEN 'revisit' ELSE 'response' END
-             AS record_type,
-           CASE WHEN rn > 1 THEN fd END AS refers_to_date
-    FROM marked
-    """,
-)
-def q_warc_revisit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WARC ``revisit`` record emission (ISO 28500 / Heritrix URL-agnostic
-    content dedup — public): across three derived capture generations,
-    a capture whose payload digest matches ANY earlier capture of the
-    same URL is written as a ``revisit`` record carrying a refers-to
-    pointer at the EARLIEST capture of that digest, storing bytes once
-    however often the page is refetched. The derivation plants all three
-    cases: pages that change once and revert (gen-2 revisits gen-0
-    across the intervening change), pages that change every generation
-    (no revisits), and pages that never change (two revisits). One
-    (doc_id, digest) window — co-partitioned with the url-keyed store at
-    scale, the recrawl_delta note."""
-    d = _t(spark, sf_dir, "documents")
-    gens = []
-    for g, (date, suffix) in enumerate(
-        (
-            ("2026-01-15", F.lit("")),
-            (
-                "2026-02-15",
-                F.when(F.col("doc_id") % 3 == 0, " v2")
-                .when(F.col("doc_id") % 3 == 1, " v1")
-                .otherwise(""),
-            ),
-            (
-                "2026-03-15",
-                F.when(F.col("doc_id") % 3 == 1, " v2").otherwise(""),
-            ),
-        )
-    ):
-        gens.append(
-            d.select(
-                "doc_id",
-                F.lit(g).cast("int").alias("gen"),
-                F.lit(date).alias("warc_date"),
-                F.md5(F.concat(F.col("text"), suffix)).alias("digest"),
-            )
-        )
-    caps = gens[0].unionByName(gens[1]).unionByName(gens[2])
-    w = Window.partitionBy("doc_id", "digest").orderBy("warc_date")
-    rn = F.row_number().over(w)
-    fd = F.first("warc_date").over(w)
-    return caps.select(
-        "doc_id",
-        "gen",
-        "warc_date",
-        "digest",
-        F.when(rn > 1, "revisit").otherwise("response").alias(
-            "record_type"
-        ),
-        F.when(rn > 1, fd).alias("refers_to_date"),
     )
 
 
@@ -5170,226 +4897,6 @@ def q_crawl_budget_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------------------
-# WARC container layer (sources/warc.py): the Common-Crawl ingestion
-# format. The north rule's input is "Iceberg table of Common-Crawl-style
-# web pages"; upstream of that table the pages live in *.warc.gz segments
-# (per-record gzip members). These queries certify the full binary path:
-# build real WARC segment blobs from the relational base, parse them back
-# with the streaming Content-Length-driven kernel, and hash-compare the
-# recovered fields against the oracle's direct reconstruction.
-# --------------------------------------------------------------------------
-
-_WARC_URL_SQL = (
-    "'http://host' || CAST(doc_id % 37 AS VARCHAR)"
-    " || '.example.com/doc/' || CAST(doc_id AS VARCHAR)"
-)
-_WARC_DATE_SQL = (
-    "'2026-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0')"
-    " || 'T12:00:00Z'"
-)
-_WARC_HTML_SQL = (
-    "'<html><head><title>doc ' || CAST(doc_id AS VARCHAR)"
-    " || '</title></head><body><p>' || text || '</p></body></html>'"
-)
-
-
-def _warc_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(url, warc_date, payload) derived from documents — the Spark twin
-    of _WARC_URL_SQL/_WARC_DATE_SQL/_WARC_HTML_SQL."""
-    d = _t(spark, sf_dir, "documents")
-    h = (F.col("doc_id") % 37).cast("string")
-    i = F.col("doc_id").cast("string")
-    return d.select(
-        F.concat(
-            F.lit("http://host"), h, F.lit(".example.com/doc/"), i
-        ).alias("url"),
-        F.concat(
-            F.lit("2026-01-"),
-            F.lpad(((F.col("doc_id") % 28) + 1).cast("string"), 2, "0"),
-            F.lit("T12:00:00Z"),
-        ).alias("warc_date"),
-        F.encode(
-            F.concat(
-                F.lit("<html><head><title>doc "), i,
-                F.lit("</title></head><body><p>"), F.col("text"),
-                F.lit("</p></body></html>"),
-            ),
-            "UTF-8",
-        ).alias("payload"),
-    )
-
-
-# shared oracle for both container roundtrips (in-memory and on-disk):
-# the records recovered from WARC bytes must equal this direct
-# reconstruction from the base table, field for field
-_WARC_RECORDS_ORACLE = f"""
-    SELECT doc_id,
-           {_WARC_URL_SQL} AS url,
-           {_WARC_DATE_SQL} AS warc_date,
-           CAST(200 AS INT) AS status,
-           'text/html' AS mime,
-           CAST(strlen({_WARC_HTML_SQL}) AS BIGINT) AS n_bytes,
-           text
-    FROM documents
-    """
-
-
-def _warc_record_rows(recs: DataFrame) -> DataFrame:
-    """Project parsed WARC records back onto the oracle's shape."""
-    return recs.select(
-        F.regexp_extract("url", r"/doc/(\d+)$", 1)
-        .cast("bigint")
-        .alias("doc_id"),
-        "url",
-        "warc_date",
-        "status",
-        "mime",
-        F.length("payload").cast("bigint").alias("n_bytes"),
-        F.regexp_extract(
-            F.col("payload").cast("string"), r"(?s)<p>(.*)</p>", 1
-        ).alias("text"),
-    )
-
-
-@_q("warc_roundtrip", _WARC_RECORDS_ORACLE)
-def q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WARC encode -> parse roundtrip over REAL container bytes: pages
-    become per-record gzip members inside segment blobs (warcinfo +
-    request + response records, Common Crawl's layout), then the
-    streaming parser recovers url/date/status/mime/payload — including
-    SKIPPING the interleaved warcinfo/request records by WARC-Type, not
-    by position. Every recovered field is value-hash-gated against the
-    oracle's direct reconstruction, so the binary encode and the
-    Content-Length-driven walk are both exact. No reference counterpart
-    (the reference fetches live HTML, internal/scraper); this is the
-    Common-Crawl ingestion seam the north rule's input table implies."""
-    segs = W.encode_warc_segments(_warc_pages(spark, sf_dir), n_segments=8)
-    return _warc_record_rows(W.parse_warc_segments(segs))
-
-
-# session cache for the archived corpus (the _MINHASH_INDEX_CACHE
-# discipline): production writes the archive once and re-ingests it many
-# times; the first call pays encode+write (recorded in bench
-# first_run_queries), later calls exercise the binaryFile ingest path only
-_WARC_ARCHIVE_CACHE: dict[int, tuple[DataFrame, str]] = {}
-
-
-@_q("warc_file_roundtrip", _WARC_RECORDS_ORACLE)
-def q_warc_file_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The archive deployment shape end-to-end: encode -> EXECUTOR-SIDE
-    ``seg-*.warc.gz`` file writes (``write_warc_dir``: atomic temp-name +
-    rename, no segment bytes through the driver) -> ``binaryFile``
-    re-ingestion -> streaming parse, value-hash-gated against the same
-    direct reconstruction as ``warc_roundtrip``. What this row adds over
-    the in-memory twin is the on-disk container layer itself: real gzip
-    members on real files, one file per segment, re-read by the 100 TB
-    ingest path (one binaryFile scan, parse is per-file streaming work,
-    no shuffle)."""
-    import tempfile
-
-    pages = _warc_pages(spark, sf_dir)
-    key = pages.semanticHash()
-    hit = _WARC_ARCHIVE_CACHE.get(key)
-    if hit is not None and pages.sameSemantics(hit[0]):
-        path = hit[1]
-    else:
-        path = tempfile.mkdtemp(prefix="spark_graft_warc_archive_")
-        W.write_warc_dir(
-            W.encode_warc_segments(pages, n_segments=8), path
-        )
-        _WARC_ARCHIVE_CACHE[key] = (pages, path)
-    return _warc_record_rows(W.read_warc_files(spark, path + "/*.warc.gz"))
-
-
-@_q(
-    "cdx_index",
-    f"""
-    SELECT 'com,example,host' || CAST(doc_id % 37 AS VARCHAR)
-             || ')/doc/' || CAST(doc_id AS VARCHAR) AS surt,
-           {_WARC_DATE_SQL} AS warc_date,
-           {_WARC_URL_SQL} AS url,
-           md5({_WARC_HTML_SQL}) AS digest,
-           CAST(strlen({_WARC_HTML_SQL}) AS BIGINT) AS length
-    FROM documents
-    """,
-)
-def q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Capture index (Common Crawl CDX convention) built FROM the parsed
-    WARC records, not from the relational base: SURT key (host labels
-    reversed, pure JVM regex/array expressions — no Python in the key
-    path), md5 content digest over the payload bytes, record length.
-    Matching the oracle's base-table reconstruction proves the container
-    path again plus the SURT/digest math. At 100 TB the CDX build is one
-    binaryFile scan -> parse -> project (no shuffle); the index consumer
-    sorts by surt, which is a range-partitioned sort on a short key."""
-    segs = W.encode_warc_segments(_warc_pages(spark, sf_dir), n_segments=8)
-    recs = W.parse_warc_segments(segs)
-    return recs.select(
-        W.surt_key(F.col("url")).alias("surt"),
-        "warc_date",
-        "url",
-        F.md5("payload").alias("digest"),
-        F.length("payload").cast("bigint").alias("length"),
-    )
-
-
-@_q(
-    "sitemap_extract",
-    f"""
-    SELECT {_HOST_SQL} AS host,
-           {_WARC_URL_SQL} AS url,
-           CAST('2026-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0')
-                AS VARCHAR) AS lastmod
-    FROM documents
-    """,
-)
-def q_sitemap_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemap-protocol URL discovery (the frontier-seeding path real
-    crawls use alongside link extraction, sitemaps.org): per host, build
-    the <urlset> XML document, then recover (url, lastmod) entries with
-    JVM-side ``xpath`` — zero Python, zero UDFs. The XML assembly
-    aggregates url-sorted entries per host (one shuffle on host, the
-    natural sitemap partitioning: one sitemap file per host); extraction
-    is xpath + arrays_zip + explode inside codegen. Oracle reconstructs
-    the entries directly from the base table."""
-    pages = _warc_pages(spark, sf_dir).select(
-        "url",
-        F.regexp_extract("url", r"^http://([^/]*)", 1).alias("host"),
-        F.substring("warc_date", 1, 10).alias("lastmod"),
-    )
-    xml = pages.groupBy("host").agg(
-        F.concat(
-            F.lit('<?xml version="1.0" encoding="UTF-8"?><urlset>'),
-            F.array_join(
-                F.sort_array(
-                    F.collect_list(
-                        F.concat(
-                            F.lit("<url><loc>"), F.col("url"),
-                            F.lit("</loc><lastmod>"), F.col("lastmod"),
-                            F.lit("</lastmod></url>"),
-                        )
-                    )
-                ),
-                "",
-            ),
-            F.lit("</urlset>"),
-        ).alias("sitemap_xml")
-    )
-    parsed = xml.select(
-        "host",
-        F.arrays_zip(
-            F.xpath("sitemap_xml", F.lit("/urlset/url/loc/text()")),
-            F.xpath("sitemap_xml", F.lit("/urlset/url/lastmod/text()")),
-        ).alias("entries"),
-    ).select("host", F.explode("entries").alias("e"))
-    return parsed.select(
-        "host",
-        F.col("e.0").alias("url"),
-        F.col("e.1").alias("lastmod"),
-    )
-
-
 # ---- mergeable sketches (operators/sketches.py) --------------------------
 # DuckDB replays the HLL arithmetic exactly: md5 gives both engines the
 # same hash bits, register/rho are integer/string ops, the harmonic
@@ -5436,65 +4943,6 @@ _HLL_ORACLE = f"""
            exact_distinct
     FROM s2 JOIN ex ON s2.event_type = ex.event_type
     """
-
-
-# corpus plan -> (source frame, stored range-partitioned CDX path) written
-# this process — the _MINHASH_INDEX_CACHE discipline: production ingests
-# the capture index once and serves many prefix lookups against it.
-_CDX_STORE_CACHE: dict[int, tuple[DataFrame, str]] = {}
-
-
-@_q(
-    "cdx_surt_range",
-    f"""
-    SELECT 'com,example,host' || CAST(doc_id % 37 AS VARCHAR)
-             || ')/doc/' || CAST(doc_id AS VARCHAR) AS surt,
-           {{_WARC_URL_SQL}} AS url,
-           md5({{_WARC_HTML_SQL}}) AS digest,
-           CAST(strlen({{_WARC_HTML_SQL}}) AS BIGINT) AS length
-    FROM documents WHERE doc_id % 37 = 1
-    """.format(
-        _WARC_URL_SQL=_WARC_URL_SQL, _WARC_HTML_SQL=_WARC_HTML_SQL
-    ),
-)
-def q_cdx_surt_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURT-prefix range lookup against a STORED capture index — the
-    Common Crawl index-server access pattern (pywb/cdxj convention,
-    public): the CDX is written once, range-partitioned AND sorted by the
-    SURT key, and a prefix query becomes a parquet scan whose StartsWith
-    predicate prunes on file/row-group min-max statistics — at 100 TB a
-    host lookup touches only the one range partition that can contain the
-    prefix, never the index. The ')'-terminated prefix
-    ('com,example,host1)') is why SURT exists: it makes one host a
-    CONTIGUOUS key range that no other host (host10...) interleaves.
-    Plan-asserted: the scan carries a pushed StartsWith(surt) filter
-    (tests/test_plans.py)."""
-    pages = _warc_pages(spark, sf_dir)
-    key = pages.semanticHash()
-    hit = _CDX_STORE_CACHE.get(key)
-    if hit is not None and pages.sameSemantics(hit[0]):
-        path = hit[1]
-    else:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="spark_graft_cdx_store_")
-        segs = W.encode_warc_segments(pages, n_segments=8)
-        cdx = W.parse_warc_segments(segs).select(
-            W.surt_key(F.col("url")).alias("surt"),
-            "url",
-            F.md5("payload").alias("digest"),
-            F.length("payload").cast("bigint").alias("length"),
-        )
-        (
-            cdx.repartitionByRange(8, "surt")
-            .sortWithinPartitions("surt")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        _CDX_STORE_CACHE[key] = (pages, path)
-    return spark.read.parquet(path).filter(
-        F.col("surt").startswith("com,example,host1)")
-    )
 
 
 @_q("hll_distinct", _HLL_ORACLE)
@@ -6946,7 +6394,7 @@ def q_opic_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the driver contract (``__spark_entry__.queries()``); it fits the driver's
 # 50-query correctness window, so every entry is checked every round. The
 # rest of the registry (training-data curation, near-dup, link graph,
-# WARC, sketches) is checked against its oracles by scripts/selfcheck.py.
+# sketches) is checked against its oracles by scripts/selfcheck.py.
 CRAWL_SYSTEM = frozenset(
     {
         # SURVEY.md §2 O-rows
