@@ -36,11 +36,8 @@ HEADLINE = [
     "aimd_crawl_delay",
     "link_extract",
     "frontier_growth",
-    "host_pagerank",
-    "pagerank_priority_wave",
     "host_rate_window",
     "host_cumulative",
-    "anchor_text_agg",
     "crawl_budget_alloc",
     # relational core
     "groupby_agg",
@@ -72,9 +69,7 @@ HEADLINE = [
     "canonical_select",
     "ccnet_buckets",
     "canonical_link_collapse",
-    "opic_priority",
     "wfq_schedule",
-    "focused_crawl_priority",
     "fingerprint_md5",
     "dedup_exact",
     "decontaminate",
@@ -113,21 +108,16 @@ HEADLINE = [
     "dup_span_remove",
     "mixture_token_budget",
     "selection_manifest",
-    # round-5 late additions: link-graph twin signal, redirect chasing,
-    # token-weighted systematic sampling, public-suffix politeness keys
-    "hits_scores",
-    "redirect_resolve",
+    # round-5 late additions: token-weighted systematic sampling,
+    # public-suffix politeness keys
     "sus_sample",
     "etld1_extract",
     # round-5 late additions: fleet-resize shard map, IP-level politeness
     "rendezvous_shard",
     "ip_politeness_cap",
-    # round-5 late additions: link-spam demotion
-    "host_trustrank",
     # round-5 second-session additions: directed containment dedup,
-    # exact harmonic centrality, temperature mixture weighting
+    # temperature mixture weighting
     "containment_dedup",
-    "host_harmonic_centrality",
     "mixture_temperature",
 ]
 
@@ -211,7 +201,7 @@ def run_bench(spark, sf_dir: str, names: list[str]) -> dict[str, float]:
         DD.release_cached()  # drop per-query persisted shingles/signatures
         ordering.release_cached()  # and persisted prefix-sum inputs
         # drop Python refs so the ContextCleaner can evict orphaned
-        # localCheckpoint/broadcast blocks (pagerank, cluster propagation)
+        # localCheckpoint/broadcast blocks (e.g. cluster propagation)
         # before the next query is timed — block-manager pressure from one
         # query otherwise bills GC time to its successors
         del df

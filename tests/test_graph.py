@@ -60,15 +60,6 @@ def test_int64_wrapping_label_sum_does_not_fake_convergence(spark):
     }
 
 
-def test_pagerank_empty_edges_returns_empty(spark):
-    from web_scraper_v1_spark.operators.graph import pagerank
-
-    e = spark.createDataFrame([], "src long, dst long")
-    out = pagerank(e, n_iter=3)
-    assert out.columns == ["id", "rank"]
-    assert out.count() == 0
-
-
 def test_max_iter_raises(spark):
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(
@@ -86,234 +77,3 @@ def test_cluster_assignments_sizes_and_keep(spark):
         1: 3, 2: 3, 3: 3, 10: 2, 11: 2,
     }
     assert {d for d, r in rows.items() if r.keep} == {1, 10}
-
-
-def test_pagerank_cycle_uniform(spark):
-    # directed 4-cycle: stationary distribution is exactly uniform, and
-    # every iteration preserves it — rank stays 1/4 per node to the bit
-    from web_scraper_v1_spark.operators.graph import pagerank
-
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 1)], "src long, dst long"
-    )
-    got = {r.id: r.rank for r in pagerank(e, n_iter=5).collect()}
-    assert set(got) == {1, 2, 3, 4}
-    for v in got.values():
-        assert abs(v - 0.25) < 1e-9
-
-
-def test_pagerank_star_center_dominates(spark):
-    from web_scraper_v1_spark.operators.graph import pagerank
-
-    # leaves all point at the hub; hub points back at one leaf
-    e = spark.createDataFrame(
-        [(i, 0) for i in range(1, 6)] + [(0, 1)], "src long, dst long"
-    )
-    got = {r.id: r.rank for r in pagerank(e, n_iter=5).collect()}
-    assert got[0] == max(got.values())
-    assert got[1] > got[2]  # the hub's one outlink target beats other leaves
-    assert abs(sum(got.values()) - 1.0) < 1e-6  # no dangling nodes -> mass conserved
-
-
-def test_hits_bipartite_hub_authority_split(spark):
-    from web_scraper_v1_spark.operators.graph import hits
-
-    # pure hubs {1,2,3} all point at pure authorities {10, 11}; node 10
-    # gets all three hubs, node 11 gets one — auth(10) > auth(11), hubs
-    # carry zero authority, authorities carry zero hub score
-    e = spark.createDataFrame(
-        [(1, 10), (2, 10), (3, 10), (1, 11)], "src long, dst long"
-    )
-    got = {r.id: (r.auth, r.hub) for r in hits(e, n_iter=4).collect()}
-    assert got[10][0] > got[11][0] > 0
-    for h in (1, 2, 3):
-        assert got[h][0] == 0.0  # no in-edges -> no authority
-    for a in (10, 11):
-        assert got[a][1] == 0.0  # no out-edges -> no hub score
-    assert got[1][1] > got[2][1]  # 1 links both authorities, 2 just one
-    # L1 normalization: each score family sums to 1 exactly-ish
-    assert abs(sum(a for a, _ in got.values()) - 1.0) < 1e-6
-    assert abs(sum(h for _, h in got.values()) - 1.0) < 1e-6
-
-
-def test_hits_empty_edges_returns_empty(spark):
-    from web_scraper_v1_spark.operators.graph import hits
-
-    e = spark.createDataFrame([], "src long, dst long")
-    assert hits(e, n_iter=3).count() == 0
-
-
-def test_hits_partitioning_invariance(spark):
-    # exact-int quantization + integer-ratio normalization: bit-identical
-    # scores whatever the parallelism of the input
-    from web_scraper_v1_spark.operators.graph import hits
-
-    edges = [(i % 7, (i * 3 + 1) % 7) for i in range(30) if i % 7 != (i * 3 + 1) % 7]
-    e1 = spark.createDataFrame(edges, "src long, dst long").repartition(1)
-    e2 = spark.createDataFrame(edges, "src long, dst long").repartition(13)
-    r1 = {r.id: (r.auth, r.hub) for r in hits(e1, n_iter=4).collect()}
-    r2 = {r.id: (r.auth, r.hub) for r in hits(e2, n_iter=4).collect()}
-    assert r1 == r2  # exact equality, not approx
-
-
-def test_resolve_chains_depth15_in_five_doubling_rounds(spark):
-    from web_scraper_v1_spark.operators.graph import resolve_chains
-
-    # chains u -> u-1 down to the nearest multiple of 16: depth up to 15.
-    # max_rounds=5 only suffices because depth doubles per round (1, 2,
-    # 4, 8, 16) — a one-hop-per-round chase would need 15 rounds, so
-    # passing under this bound PROVES the doubling.
-    m = spark.createDataFrame(
-        [(u, None if u % 16 == 0 else u - 1) for u in range(64)],
-        "url_id long, next_id long",
-    )
-    got = {r.url_id: (r.final_id, r.hops) for r in
-           resolve_chains(m, max_rounds=5).collect()}
-    assert got == {u: ((u // 16) * 16, u % 16) for u in range(64)}
-
-
-def test_resolve_chains_cycle_raises(spark):
-    from web_scraper_v1_spark.operators.graph import resolve_chains
-
-    m = spark.createDataFrame(
-        [(1, 2), (2, 1), (3, None)], "url_id long, next_id long"
-    )
-    with pytest.raises(RuntimeError, match="cycle"):
-        resolve_chains(m, max_rounds=6)
-
-
-def test_trustrank_demotes_untrusted_mass(spark):
-    """Personalized teleport must concentrate stationary mass on the
-    trusted seeds: hosts OUTSIDE the seed set hold strictly less total
-    mass under TrustRank than under uniform PageRank on the SAME graph,
-    and every trusted seed's trust exceeds its untrusted-average."""
-    from web_scraper_v1_spark import queries as Q
-
-    sf = "/root/testdata/sf0.001"
-    tr = {r["host"]: (r["trust_ppm"], r["trusted"]) for r in
-          Q.queries()["host_trustrank"](spark, sf).collect()}
-    pr = {r["host"]: r["rank_ppm"] for r in
-          Q.queries()["host_pagerank"](spark, sf).collect()}
-    assert set(tr) == set(pr)
-    untrusted_tr = sum(v for v, t in tr.values() if not t)
-    untrusted_pr = sum(pr[h] for h, (_, t) in tr.items() if not t)
-    assert untrusted_tr < untrusted_pr, (untrusted_tr, untrusted_pr)
-    trusted_vals = [v for v, t in tr.values() if t]
-    untrusted_vals = [v for v, t in tr.values() if not t]
-    assert min(trusted_vals) > sum(untrusted_vals) / len(untrusted_vals)
-
-
-def test_trustrank_teleport_none_unchanged(spark):
-    """The teleport parameter must not perturb the uniform path: classic
-    pagerank() output is bit-identical with the parameter defaulted."""
-    from web_scraper_v1_spark.operators.graph import pagerank
-
-    e = spark.createDataFrame(
-        [(a, (a * 3 + 1) % 11) for a in range(11)] +
-        [(a, (a * 7 + 2) % 11) for a in range(11)],
-        "src long, dst long",
-    ).where("src <> dst")
-    r1 = {r["id"]: r["rank"] for r in pagerank(e, n_iter=4).collect()}
-    r2 = {r["id"]: r["rank"] for r in
-          pagerank(e, n_iter=4, teleport=None).collect()}
-    assert r1 == r2
-
-
-def test_opic_exact_circulation_on_cycle(spark):
-    """On a 3-cycle every node's cash returns intact each round (out_deg
-    1, no remainder): after 5 rounds hist = 5 quanta and cash = 1
-    quantum exactly — the integer-exact policy with zero loss."""
-    from web_scraper_v1_spark.operators.graph import opic
-
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 0)], "src long, dst long"
-    )
-    out = {r.id: r for r in opic(edges, n_iter=5).collect()}
-    q = 1_000_000_000
-    assert set(out) == {0, 1, 2}
-    for r in out.values():
-        assert r.cash == q
-        assert r.hist == 5 * q
-        assert r.importance == 6 * q
-
-
-def test_opic_dangling_cash_vanishes(spark):
-    """A dangling node banks its cash once, distributes nothing, and
-    receives its inlink share — the documented remainder/dangling
-    policy, exact in integers: a -> b with b dangling."""
-    from web_scraper_v1_spark.operators.graph import opic
-
-    edges = spark.createDataFrame([(0, 1)], "src long, dst long")
-    out = {r.id: r for r in opic(edges, n_iter=2).collect()}
-    q = 1_000_000_000
-    # round1: a banks q, sends q to b; b banks q, sends nothing.
-    # round2: a banks 0, sends 0; b banks q (from a), sends nothing.
-    assert out[0].hist == q and out[0].cash == 0
-    assert out[1].hist == 2 * q and out[1].cash == 0
-
-
-def test_harmonic_centrality_chain_and_unreachable(spark):
-    from web_scraper_v1_spark.operators.graph import harmonic_centrality
-
-    # 1 -> 2 -> 3, plus isolated source 9 -> 1; nothing reaches 9
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (9, 1)], "src long, dst long"
-    )
-    out = {r.id: r for r in harmonic_centrality(e).collect()}
-    assert set(out) == {1, 2, 3}  # 9 is reached by nobody -> absent
-    assert out[1].n_reached_by == 1          # only 9
-    assert out[1].harmonic_x1e6 == 1_000_000
-    assert out[2].n_reached_by == 2          # 1 at d=1, 9 at d=2
-    assert out[2].harmonic_x1e6 == 1_500_000
-    assert out[3].n_reached_by == 3          # 2@1, 1@2, 9@3
-    assert out[3].harmonic_x1e6 == 1_000_000 + 500_000 + 333_333
-
-
-def test_harmonic_centrality_cycle_settles_first_depth(spark):
-    from web_scraper_v1_spark.operators.graph import harmonic_centrality
-
-    # 2-cycle: BFS must settle each (origin, node) at its first depth
-    # and terminate despite the cycle
-    e = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
-    out = {r.id: r for r in harmonic_centrality(e).collect()}
-    assert out[1].n_reached_by == 1 and out[1].harmonic_x1e6 == 1_000_000
-    assert out[2].n_reached_by == 1 and out[2].harmonic_x1e6 == 1_000_000
-
-
-def test_hyperball_tracks_exact_harmonic(spark):
-    """HyperBall estimates must track the exact BFS twin on the host
-    graph — at 37 nodes the sketch is in its linear-counting regime, so
-    reachable counts land within a couple of register collisions and the
-    harmonic sums within a few percent."""
-    from web_scraper_v1_spark.operators.graph import (
-        harmonic_centrality,
-        hyperball_harmonic,
-    )
-
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    links = d.selectExpr(
-        "doc_id % 37 AS src", "(doc_id * 7 + 1) % 37 AS dst"
-    ).unionByName(
-        d.selectExpr("doc_id % 37 AS src", "(doc_id * 11 + 2) % 37 AS dst")
-    )
-    exact = {r.id: r for r in harmonic_centrality(links).collect()}
-    est = {r.id: r for r in hyperball_harmonic(links).collect()}
-    assert set(est) == set(exact)
-    for nid, ex in exact.items():
-        ap = est[nid]
-        assert abs(ap.n_reached_by_est - ex.n_reached_by) <= 2
-        assert (
-            abs(ap.harmonic_x1e6_est - ex.harmonic_x1e6)
-            <= 0.08 * ex.harmonic_x1e6
-        )
-
-
-def test_hyperball_deterministic_across_runs(spark):
-    from web_scraper_v1_spark.operators.graph import hyperball_harmonic
-
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (9, 1), (4, 9)], "src long, dst long"
-    )
-    a = sorted(map(tuple, hyperball_harmonic(e).collect()))
-    b = sorted(map(tuple, hyperball_harmonic(e).collect()))
-    assert a == b

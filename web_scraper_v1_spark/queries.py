@@ -45,11 +45,6 @@ from web_scraper_v1_spark.operators.frontier import (
 from web_scraper_v1_spark.operators.graph import (
     cluster_assignments,
     connected_components,
-    harmonic_centrality,
-    hits,
-    opic,
-    pagerank,
-    resolve_chains,
 )
 from web_scraper_v1_spark.operators.seen import SeenSet
 
@@ -1556,199 +1551,7 @@ def q_link_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", F.explode(links).alias("link"))
 
 
-def _pagerank_ctes(n_iter: int = 5) -> tuple[str, str]:
-    """Unrolled-CTE PageRank replay (recursive members can't aggregate in
-    standard SQL, so each iteration is its own contribution-sum + rank
-    CTE pair) — returns (WITH-clause text, final rank CTE name) so both
-    ``host_pagerank`` and the composed ``pagerank_priority_wave`` reuse
-    it. The host graph derives from the same doc_id % 37 URL-corpus
-    convention as link_extract; per-edge contributions are int64-rounded
-    at 1e-9 before summing, so the only order-sensitive step is exact in
-    both engines (operators/graph.pagerank)."""
-    sql = """
-    WITH links AS (
-      SELECT doc_id % 37 AS src, (doc_id * 7 + 1) % 37 AS dst FROM documents
-      UNION ALL
-      SELECT doc_id % 37 AS src, (doc_id * 11 + 2) % 37 AS dst FROM documents
-    ), edges AS (
-      SELECT DISTINCT src, dst FROM links WHERE src <> dst
-    ), nodes AS (
-      SELECT DISTINCT src AS id FROM edges
-      UNION SELECT DISTINCT dst AS id FROM edges
-    ), nn AS (
-      SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes
-    ), outd AS (
-      SELECT src, CAST(count(*) AS DOUBLE) AS out_deg FROM edges GROUP BY src
-    ), r0 AS (
-      SELECT id, 1.0 / n AS r FROM nodes CROSS JOIN nn
-    )"""
-    prev = "r0"
-    for i in range(1, n_iter + 1):
-        sql += f""", c{i} AS (
-      SELECT e.dst AS id,
-             SUM(CAST(round(p.r / o.out_deg * 1000000000.0) AS BIGINT)) AS s
-      FROM edges e JOIN {prev} p ON p.id = e.src JOIN outd o ON o.src = e.src
-      GROUP BY e.dst
-    ), r{i} AS (
-      SELECT nodes.id,
-             (1 - 0.85) / n
-             + 0.85 * (CAST(COALESCE(c{i}.s, 0) AS DOUBLE) / 1000000000.0)
-               AS r
-      FROM nodes CROSS JOIN nn LEFT JOIN c{i} ON c{i}.id = nodes.id
-    )"""
-        prev = f"r{i}"
-    return sql, prev
-
-
-def _pagerank_oracle(n_iter: int = 5) -> str:
-    ctes, last = _pagerank_ctes(n_iter)
-    return (
-        ctes
-        + f"""
-    SELECT id AS host, CAST(round(r * 1000000.0) AS BIGINT) AS rank_ppm
-    FROM {last}
-    """
-    )
-
-
-@_q("host_pagerank", _pagerank_oracle())
-def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host-level PageRank over the crawl's link graph (5 iterations,
-    d=0.85) — the frontier PRIORITY signal a production crawler feeds
-    back into per_host_topk's priority column. Graph derives from the
-    same deterministic doc_id % 37 host convention as link_extract;
-    operators/graph.pagerank does the iterating with exact-int64
-    contribution sums (bit-reproducible under any partitioning — see its
-    docstring), so the oracle replays all 5 iterations exactly. Output in
-    parts-per-million to stay in exact-integer space end-to-end."""
-    return _host_ranks(_t(spark, sf_dir, "documents"))
-
-
-def _host_ranks(d: DataFrame) -> DataFrame:
-    """(host, rank_ppm) over the doc_id % 37 host graph — shared by
-    ``host_pagerank`` and ``pagerank_priority_wave``."""
-    links = d.select(
-        (F.col("doc_id") % 37).alias("src"),
-        ((F.col("doc_id") * 7 + 1) % 37).alias("dst"),
-    ).unionByName(
-        d.select(
-            (F.col("doc_id") % 37).alias("src"),
-            ((F.col("doc_id") * 11 + 2) % 37).alias("dst"),
-        )
-    )
-    edges = links.distinct().filter(F.col("src") != F.col("dst"))
-    ranks = pagerank(edges, n_iter=5, damping=0.85)
-    return ranks.select(
-        F.col("id").alias("host"),
-        F.round(F.col("rank") * F.lit(1e6)).cast("long").alias("rank_ppm"),
-    )
-
-
-def _pagerank_priority_oracle() -> str:
-    ctes, last = _pagerank_ctes(5)
-    return (
-        ctes
-        + f""", ranks AS (
-      SELECT id AS host, CAST(round(r * 1000000.0) AS BIGINT) AS rank_ppm
-      FROM {last}
-    ), wave AS (
-      SELECT doc_id % 37 AS host, doc_id FROM documents
-      QUALIFY row_number() OVER (PARTITION BY doc_id % 37
-                                 ORDER BY doc_id) <= 2
-    )
-    SELECT w.host, w.doc_id, r.rank_ppm
-    FROM wave w JOIN ranks r ON r.host = w.host
-    ORDER BY r.rank_ppm DESC, w.host, w.doc_id
-    LIMIT 40
-    """
-    )
-
-
-@_q("pagerank_priority_wave", _pagerank_priority_oracle())
-def q_pagerank_priority_wave(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The graph layer feeding the crawl layer: this round's fetch slots
-    go to the most important hosts first. Per-host politeness top-k
-    (salted, salt-independent) is computed as usual, host PageRank is
-    joined in as a BROADCAST (n_hosts rows — always broadcastable; at
-    10^10 URLs the rank table is still only as big as the host universe),
-    and a global budget of 40 slots is cut by (rank desc, host, queue)
-    — a deterministic total order, so the LIMIT is reproducible. The
-    oracle replays all 5 PageRank iterations AND the wave selection in
-    one statement, proving the composition end-to-end."""
-    d = _t(spark, sf_dir, "documents")
-    ranks = _host_ranks(d)
-    frontier = d.select(
-        (F.col("doc_id") % 37).alias("host"),
-        F.col("doc_id").alias("queue_seq"),
-        F.xxhash64(F.col("doc_id")).alias("url_hash"),
-        "doc_id",
-    )
-    wave = per_host_topk(frontier, k=2, salt_buckets=4).filter(
-        F.col("selected")
-    )
-    return (
-        wave.join(F.broadcast(ranks), "host")
-        .orderBy(F.desc("rank_ppm"), F.asc("host"), F.asc("doc_id"))
-        .limit(40)
-        .select("host", "doc_id", "rank_ppm")
-    )
-
-
 # --------------------------------------------------------------------------
-@_q(
-    "host_harmonic_centrality",
-    """
-    WITH RECURSIVE links AS (
-      SELECT DISTINCT CAST(doc_id % 37 AS BIGINT) AS src,
-             CAST((doc_id * 7 + 1) % 37 AS BIGINT) AS dst
-      FROM documents
-      UNION
-      SELECT DISTINCT CAST(doc_id % 37 AS BIGINT),
-             CAST((doc_id * 11 + 2) % 37 AS BIGINT)
-      FROM documents
-    ), e AS (
-      SELECT DISTINCT src, dst FROM links WHERE src != dst
-    ), walk AS (
-      SELECT src AS origin, dst AS node, 1 AS dist FROM e
-      UNION
-      SELECT w.origin, e.dst, w.dist + 1
-      FROM walk w JOIN e ON w.node = e.src
-      WHERE w.dist < 37
-    ), sp AS (
-      SELECT origin, node, MIN(dist) AS dist
-      FROM walk GROUP BY origin, node
-    )
-    SELECT node AS host,
-           CAST(count(*) AS BIGINT) AS n_reached_by,
-           CAST(SUM(CAST(round(1000000.0 / dist) AS BIGINT)) AS BIGINT)
-             AS harmonic_x1e6
-    FROM sp WHERE origin != node GROUP BY node
-    """,
-)
-def q_host_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """In-harmonic centrality of every host in the crawl's link graph
-    (Boldi & Vigna 2014 — the seed-quality / hub-importance signal that,
-    unlike PageRank, is walk-free and unreachable-robust). Same
-    deterministic doc_id % 37 host graph as host_pagerank; distances by
-    multi-source BFS (operators/graph.harmonic_centrality — per round one
-    frontier-by-edge equi-join + settled-set anti-join, frontier shrinks
-    to empty at the diameter), summed as exact-scaled integers. The
-    oracle replays shortest paths with a depth-bounded recursive CTE."""
-    d = _t(spark, sf_dir, "documents")
-    links = d.select(
-        (F.col("doc_id") % 37).alias("src"),
-        ((F.col("doc_id") * 7 + 1) % 37).alias("dst"),
-    ).unionByName(
-        d.select(
-            (F.col("doc_id") % 37).alias("src"),
-            ((F.col("doc_id") * 11 + 2) % 37).alias("dst"),
-        )
-    )
-    return harmonic_centrality(links).select(
-        F.col("id").alias("host"), "n_reached_by", "harmonic_x1e6"
-    )
-
-
 # Text analysis (training-data pipeline layer)
 # --------------------------------------------------------------------------
 
@@ -2867,7 +2670,8 @@ def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cache gives the registry row the same cadence: the first call in a session
 # pays write+probe (recorded in bench first_run_queries), later calls probe
 # the stored index — never a stale cross-process path (semanticHash probe +
-# sameSemantics verify, the _shingles_cached discipline).
+# sameSemantics verify, the _shingles_cached discipline). Each index
+# directory is removed when the interpreter exits.
 _MINHASH_INDEX_CACHE: dict[int, tuple[DataFrame, str]] = {}
 
 
@@ -2889,6 +2693,8 @@ def q_incremental_dedup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruned probe path itself. Ingest runs once per session per
     corpus plan (the production cadence); measured at sf0.1: ingest
     ~6.5 s warm, probe ~2.2 s — the probe is the per-increment cost."""
+    import atexit
+    import shutil
     import tempfile
 
     d = _t(spark, sf_dir, "documents")
@@ -2899,6 +2705,7 @@ def q_incremental_dedup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         path = hit[1]
     else:
         path = tempfile.mkdtemp(prefix="spark_graft_minhash_index_")
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
         DD.minhash_index_write(corpus, path)
         _MINHASH_INDEX_CACHE[key] = (corpus, path)
     return DD.incremental_minhash_probe(
@@ -3374,8 +3181,7 @@ def q_recrawl_priority_wave(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adaptive recrawl scheduling: this round's recrawl slots go to the
     hosts whose content churns fastest — the measured per-host change
     rate from the generation diff (``recrawl_delta``) drives wave
-    selection exactly the way host PageRank drives
-    ``pagerank_priority_wave``. Change rates are ppm-quantized int64 so
+    selection. Change rates are ppm-quantized int64 so
     the (rate, host, queue) ordering is a deterministic total order and
     the 40-slot LIMIT is reproducible. Shape at 100 TB: the rate table is
     one row per host (always broadcastable), the politeness top-k is the
@@ -4533,141 +4339,9 @@ def q_selection_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round-5 tail additions: inbound anchor-text aggregation, bigram-LM
-# surprisal, and crawl budget allocation — the remaining canon web-corpus
-# signals over the same deterministic link/URL conventions
+# Bigram-LM surprisal and crawl budget allocation: web-corpus signals over
+# the same deterministic doc_id/URL conventions as the queries above
 # --------------------------------------------------------------------------
-
-# deterministic anchor-phrase vocabulary: the corpus generator emits no
-# anchor text, so anchors derive from the same modular doc_id conventions
-# as link_extract's URLs (two outlinks per page, hosts mod 37)
-_ANCHORS = (
-    "click here", "read more", "official site", "home page",
-    "next page", "download", "reference docs", "details",
-)
-
-
-def _anchor_edges(d: DataFrame) -> DataFrame:
-    """(src_host, url, anchor) inbound-link edge list derived from
-    documents. Target paths are mod 10 (not link_extract's mod 1000) so
-    the per-URL aggregation is dense enough to be meaningful at every sf:
-    at sf0.01 each of the ~370 target URLs averages ~27 inbound edges."""
-    i = F.col("doc_id")
-    phrases = F.array(*[F.lit(a) for a in _ANCHORS])
-
-    def edge(host_expr, path_expr, salt: int) -> DataFrame:
-        url = F.concat(
-            F.lit("http://host"), host_expr.cast("string"),
-            F.lit(".example.com/doc/"), path_expr.cast("string"),
-        )
-        anchor = F.element_at(
-            phrases, ((i * 13 + F.lit(salt)) % 8 + 1).cast("int")
-        )
-        return d.select(
-            (i % 37).alias("src_host"),
-            url.alias("url"),
-            anchor.alias("anchor"),
-        )
-
-    return edge((i * 7 + 1) % 37, (i * 3 + 1) % 10, 0).unionAll(
-        edge((i * 11 + 2) % 37, (i * 5 + 2) % 10, 1)
-    )
-
-
-# SQL twin of ``_anchor_edges`` (anchors VALUES table + the two derived
-# edge branches) — ONE definition shared by every oracle that consumes
-# the anchor-edge list (anchor_text_agg, focused_crawl_priority), so the
-# edge-derivation convention (hosts mod 37, paths mod 10, aid =
-# (doc_id*13+salt) % 8) cannot drift between oracles; the Python side is
-# already centralized in ``_anchor_edges``.
-_ANCHOR_EDGE_CTE = """
-    WITH anchors(aid, phrase) AS (
-      VALUES (0,'click here'),(1,'read more'),(2,'official site'),
-             (3,'home page'),(4,'next page'),(5,'download'),
-             (6,'reference docs'),(7,'details')
-    ), edges AS (
-      SELECT doc_id % 37 AS src_host,
-             'http://host' || CAST((doc_id*7+1)%37 AS VARCHAR)
-               || '.example.com/doc/' || CAST((doc_id*3+1)%10 AS VARCHAR)
-               AS url,
-             (doc_id*13)%8 AS aid
-      FROM documents
-      UNION ALL
-      SELECT doc_id % 37,
-             'http://host' || CAST((doc_id*11+2)%37 AS VARCHAR)
-               || '.example.com/doc/' || CAST((doc_id*5+2)%10 AS VARCHAR),
-             (doc_id*13+1)%8
-      FROM documents
-    )
-"""
-
-
-@_q(
-    "anchor_text_agg",
-    _ANCHOR_EDGE_CTE
-    + """
-    , ea AS (
-      SELECT src_host, url, phrase AS anchor
-      FROM edges JOIN anchors ON anchors.aid = edges.aid
-    ), pa AS (
-      SELECT url, anchor, CAST(count(*) AS BIGINT) AS cnt
-      FROM ea GROUP BY url, anchor
-    ), hosts AS (
-      SELECT url, CAST(count(*) AS BIGINT) AS inlinks,
-             CAST(count(DISTINCT src_host) AS BIGINT) AS n_src_hosts
-      FROM ea GROUP BY url
-    ), top AS (
-      SELECT url, anchor, cnt,
-             ROW_NUMBER() OVER (PARTITION BY url ORDER BY cnt DESC, anchor)
-               AS rn
-      FROM pa
-    )
-    SELECT hosts.url AS url, inlinks, n_src_hosts,
-           top.anchor AS top_anchor, top.cnt AS top_anchor_cnt
-    FROM hosts JOIN top ON top.url = hosts.url AND rn = 1
-    """,
-)
-def q_anchor_text_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inbound anchor-text aggregation per target URL — the classic
-    web-corpus labeling signal (anchor text describes the TARGET page
-    better than the source): per URL the inbound-link count, distinct
-    referring hosts, and the dominant anchor phrase (tie-break: anchor
-    ASC). 100 TB shape: both aggregations exchange on the url key with
-    map-side partial combine, and the dominant-anchor argmax is a
-    min(struct(-cnt, anchor)) AGGREGATE — not a window — so no per-URL
-    sort materializes; the (url, anchor) pre-aggregation caps the argmax
-    input at |urls| x |anchor vocab| rows. The edge list is read twice
-    (dominant-anchor path, inlinks/distinct-hosts path) — acceptable
-    because extracted edges are ~2 short rows per page, orders of
-    magnitude smaller than the corpus scan that produced them; a
-    production run materializes the extraction output once (the engine's
-    snapshot store) and both aggregations read that table. Reference
-    parity: the Go engine only extracts links (parser.go); anchor
-    aggregation is the corpus-side extension a ranking/
-    crawl-prioritization pipeline needs."""
-    ea = _anchor_edges(_t(spark, sf_dir, "documents"))
-    pa = ea.groupBy("url", "anchor").agg(
-        F.count("*").cast("long").alias("cnt")
-    )
-    hosts = ea.groupBy("url").agg(
-        F.count("*").cast("long").alias("inlinks"),
-        F.countDistinct("src_host").cast("long").alias("n_src_hosts"),
-    )
-    top = pa.groupBy("url").agg(
-        F.min(
-            F.struct(
-                (-F.col("cnt")).alias("neg_cnt"),
-                F.col("anchor").alias("anchor"),
-            )
-        ).alias("s")
-    )
-    return hosts.join(top, "url").select(
-        "url",
-        "inlinks",
-        "n_src_hosts",
-        F.col("s.anchor").alias("top_anchor"),
-        (-F.col("s.neg_cnt")).cast("long").alias("top_anchor_cnt"),
-    )
 
 
 @_q(
@@ -4839,7 +4513,7 @@ def q_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_crawl_budget_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl budget allocation — the tier-crawl scheduler decision: a
     global page budget (B=200) is split across hosts proportionally to a
-    per-host value signal (token mass here; pagerank x change-rate in
+    per-host value signal (token mass here; any per-host score in
     production) by the LARGEST-REMAINDER method, entirely in exact int64
     arithmetic — base = (B*s) div S, remainder = (B*s) mod S, the
     leftover B - sum(base) pages go to the largest remainders (tie-break
@@ -5100,92 +4774,6 @@ def q_frontier_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hits_oracle(n_iter: int = 4) -> str:
-    """Unrolled-CTE HITS replay (same discipline as _pagerank_ctes: each
-    half-step's contribution sum is int64-quantized at 1e-9 before
-    summing, each normalization divides two exact integers, so the only
-    order-sensitive steps are exact in both engines — operators/
-    graph.hits)."""
-    sql = """
-    WITH links AS (
-      SELECT doc_id % 37 AS src, (doc_id * 7 + 1) % 37 AS dst FROM documents
-      UNION ALL
-      SELECT doc_id % 37 AS src, (doc_id * 11 + 2) % 37 AS dst FROM documents
-    ), edges AS (
-      SELECT DISTINCT src, dst FROM links WHERE src <> dst
-    ), nodes AS (
-      SELECT DISTINCT src AS id FROM edges
-      UNION SELECT DISTINCT dst AS id FROM edges
-    ), nn AS (
-      SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes
-    ), h0 AS (
-      SELECT id, 1.0 / n AS hub FROM nodes CROSS JOIN nn
-    )"""
-    prev = "h0"
-    for i in range(1, n_iter + 1):
-        sql += f""", ai{i} AS (
-      SELECT e.dst AS id,
-             SUM(CAST(round(p.hub * 1000000000.0) AS BIGINT)) AS s
-      FROM edges e JOIN {prev} p ON p.id = e.src GROUP BY e.dst
-    ), at{i} AS (
-      SELECT SUM(s) AS t FROM ai{i}
-    ), a{i} AS (
-      SELECT nodes.id,
-             CAST(COALESCE(x.s, 0) AS DOUBLE) / CAST(t AS DOUBLE) AS auth
-      FROM nodes CROSS JOIN at{i} LEFT JOIN ai{i} x ON x.id = nodes.id
-    ), hi{i} AS (
-      SELECT e.src AS id,
-             SUM(CAST(round(q.auth * 1000000000.0) AS BIGINT)) AS s
-      FROM edges e JOIN a{i} q ON q.id = e.dst GROUP BY e.src
-    ), ht{i} AS (
-      SELECT SUM(s) AS t FROM hi{i}
-    ), h{i} AS (
-      SELECT nodes.id,
-             CAST(COALESCE(x.s, 0) AS DOUBLE) / CAST(t AS DOUBLE) AS hub
-      FROM nodes CROSS JOIN ht{i} LEFT JOIN hi{i} x ON x.id = nodes.id
-    )"""
-        prev = f"h{i}"
-    return (
-        sql
-        + f"""
-    SELECT a.id AS host,
-           CAST(round(a.auth * 1000000.0) AS BIGINT) AS auth_ppm,
-           CAST(round(h.hub * 1000000.0) AS BIGINT) AS hub_ppm
-    FROM a{n_iter} a JOIN h{n_iter} h ON h.id = a.id
-    """
-    )
-
-
-@_q("hits_scores", _hits_oracle())
-def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS hubs/authorities over the host link graph (4 iterations, L1
-    normalization) — the SECOND link-graph priority signal next to
-    ``host_pagerank``: a discovery-phase scheduler crawls high-HUB hosts
-    first (their outlinks grow the frontier fastest), a harvest phase
-    crawls high-AUTHORITY hosts (operators/graph.hits; same doc_id % 37
-    graph as link_extract). Exact-int64 contribution sums at 1e-9 and
-    integer-ratio normalizations make all 4 iterations bit-reproducible
-    under any partitioning, so the oracle replays them exactly; output
-    in ppm to stay in integer space end-to-end."""
-    d = _t(spark, sf_dir, "documents")
-    links = d.select(
-        (F.col("doc_id") % 37).alias("src"),
-        ((F.col("doc_id") * 7 + 1) % 37).alias("dst"),
-    ).unionByName(
-        d.select(
-            (F.col("doc_id") % 37).alias("src"),
-            ((F.col("doc_id") * 11 + 2) % 37).alias("dst"),
-        )
-    )
-    edges = links.distinct().filter(F.col("src") != F.col("dst"))
-    scores = hits(edges, n_iter=4)
-    return scores.select(
-        F.col("id").alias("host"),
-        F.round(F.col("auth") * F.lit(1e6)).cast("long").alias("auth_ppm"),
-        F.round(F.col("hub") * F.lit(1e6)).cast("long").alias("hub_ppm"),
-    )
-
-
 _SUS_K = 400  # sample slots (tokens-proportional systematic sampling)
 
 
@@ -5283,48 +4871,6 @@ def q_sus_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("multiplicity") > 0)
         .select("doc_id", "n_tokens", "cum", "multiplicity")
     )
-
-
-@_q(
-    "redirect_resolve",
-    """
-    WITH RECURSIVE hop AS (
-      SELECT doc_id AS u,
-             CASE WHEN doc_id % 16 = 0 THEN NULL
-                  ELSE doc_id - 1 END AS nxt
-      FROM documents
-    ), chase AS (
-      SELECT u AS url_id, u AS cur, CAST(0 AS BIGINT) AS hops FROM hop
-      UNION ALL
-      SELECT c.url_id, h.nxt AS cur, c.hops + 1 AS hops
-      FROM chase c JOIN hop h ON h.u = c.cur
-      WHERE h.nxt IS NOT NULL
-    )
-    SELECT c.url_id, c.cur AS final_id, c.hops
-    FROM chase c JOIN hop h ON h.u = c.cur
-    WHERE h.nxt IS NULL
-    """,
-)
-def q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Redirect-chain resolution — every crawl frontier must collapse
-    3xx alias chains to their terminal URL before dedup/seen-set checks
-    (the reference's live fetch follows redirects inside net/http;
-    a DataFrame frontier resolves them as data). Chains derive
-    deterministically from doc_id (u -> u-1 until u % 16 == 0: depth up
-    to 15, the realistic cap region — crawlers abort past ~20 hops).
-    The Spark side resolves by POINTER DOUBLING (operators/
-    graph.resolve_chains): ceil(log2(depth))+1 self-joins instead of
-    one join per hop, so a 10^10-row frontier with 30-hop chains costs
-    6 shuffles, not 30; the DuckDB oracle chases the same chains with a
-    recursive CTE and both report (terminal url, exact hop count)."""
-    d = _t(spark, sf_dir, "documents")
-    mapping = d.select(
-        F.col("doc_id").alias("url_id"),
-        F.when(F.col("doc_id") % 16 == 0, F.lit(None).cast("long"))
-        .otherwise(F.col("doc_id") - 1)
-        .alias("next_id"),
-    )
-    return resolve_chains(mapping)
 
 
 @_q(
@@ -5565,99 +5111,6 @@ def q_ip_politeness_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _trustrank_oracle(n_iter: int = 5) -> str:
-    """Unrolled personalized-PageRank replay: same edge convention and
-    int64-quantized contributions as ``_pagerank_ctes``, but the jump
-    vector is concentrated on the trusted seed hosts (id % 7 == 0) —
-    each iteration's base term is 0.15 * t(v) instead of 0.15 / n."""
-    sql = """
-    WITH links AS (
-      SELECT doc_id % 37 AS src, (doc_id * 7 + 1) % 37 AS dst FROM documents
-      UNION ALL
-      SELECT doc_id % 37 AS src, (doc_id * 11 + 2) % 37 AS dst FROM documents
-    ), edges AS (
-      SELECT DISTINCT src, dst FROM links WHERE src <> dst
-    ), nodes AS (
-      SELECT DISTINCT src AS id FROM edges
-      UNION SELECT DISTINCT dst AS id FROM edges
-    ), tm AS (
-      SELECT CAST(count(*) AS DOUBLE) AS m FROM nodes WHERE id % 7 = 0
-    ), tr AS (
-      SELECT id, CASE WHEN id % 7 = 0 THEN 1.0 / m ELSE 0.0 END AS t
-      FROM nodes CROSS JOIN tm
-    ), outd AS (
-      SELECT src, CAST(count(*) AS DOUBLE) AS out_deg FROM edges GROUP BY src
-    ), r0 AS (
-      SELECT id, t AS r FROM tr
-    )"""
-    prev = "r0"
-    for i in range(1, n_iter + 1):
-        sql += f""", c{i} AS (
-      SELECT e.dst AS id,
-             SUM(CAST(round(p.r / o.out_deg * 1000000000.0) AS BIGINT)) AS s
-      FROM edges e JOIN {prev} p ON p.id = e.src JOIN outd o ON o.src = e.src
-      GROUP BY e.dst
-    ), r{i} AS (
-      SELECT tr.id,
-             (1 - 0.85) * tr.t
-             + 0.85 * (CAST(COALESCE(c{i}.s, 0) AS DOUBLE) / 1000000000.0)
-               AS r
-      FROM tr LEFT JOIN c{i} ON c{i}.id = tr.id
-    )"""
-        prev = f"r{i}"
-    return (
-        sql
-        + f"""
-    SELECT id AS host,
-           CAST(round(r * 1000000.0) AS BIGINT) AS trust_ppm,
-           id % 7 = 0 AS trusted
-    FROM {prev}
-    """
-    )
-
-
-@_q("host_trustrank", _trustrank_oracle())
-def q_host_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TrustRank (Gyongyi et al. 2004, the public link-spam demotion
-    algorithm) over the same host graph as ``host_pagerank``: the
-    random jump teleports ONLY to a trusted seed whitelist (hosts
-    id % 7 == 0 here; a real crawl seeds from a human-reviewed list),
-    so link farms far from any seed drain toward zero trust however
-    densely they interlink — the signal that keeps a frontier from
-    being steered by SEO spam, which raw PageRank rewards. Same
-    scale/determinism story as pagerank: per-iteration equi-join +
-    map-side-combinable INT64 contribution sum (bit-reproducible under
-    any shuffle order), driver sees one scalar per round, and the
-    oracle replays all 5 personalized iterations exactly. Spam-demotion
-    property pytest-gated in tests/test_graph.py: untrusted hosts'
-    total trust mass strictly below their uniform-PageRank mass."""
-    d = _t(spark, sf_dir, "documents")
-    links = d.select(
-        (F.col("doc_id") % 37).alias("src"),
-        ((F.col("doc_id") * 7 + 1) % 37).alias("dst"),
-    ).unionByName(
-        d.select(
-            (F.col("doc_id") % 37).alias("src"),
-            ((F.col("doc_id") * 11 + 2) % 37).alias("dst"),
-        )
-    )
-    edges = links.distinct().filter(F.col("src") != F.col("dst"))
-    nodes = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    trusted = nodes.filter(F.col("id") % 7 == 0)
-    m = trusted.count()
-    tele = trusted.withColumn("t", F.lit(1.0) / F.lit(float(m)))
-    ranks = pagerank(edges, n_iter=5, damping=0.85, teleport=tele)
-    return ranks.select(
-        F.col("id").alias("host"),
-        F.round(F.col("rank") * F.lit(1e6)).cast("long").alias("trust_ppm"),
-        (F.col("id") % 7 == 0).alias("trusted"),
-    )
-
-
 _MOJI_CLEAN = " café déjà — naïve’s züñi résumé"
 _MOJI_BAD = _MOJI_CLEAN.encode("utf-8").decode("cp1252")
 
@@ -5874,91 +5327,6 @@ def q_wfq_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cum_cost").cast("long").alias("cum_cost"),
         F.col("finish6").cast("long").alias("finish6"),
         F.expr("(finish6 + 23999) div 24000").cast("long").alias("wave"),
-    )
-
-
-@_q(
-    "focused_crawl_priority",
-    _ANCHOR_EDGE_CTE
-    + """
-    , ea AS (
-      SELECT url, phrase FROM edges JOIN anchors ON anchors.aid = edges.aid
-    ), topic(term) AS (
-      VALUES ('official'),('reference'),('docs'),('download')
-    ), w AS (
-      SELECT url, unnest(string_split(phrase, ' ')) AS word FROM ea
-    ), hits AS (
-      SELECT url, CAST(count(*) AS BIGINT) AS topic_hits
-      FROM w JOIN topic ON w.word = topic.term GROUP BY url
-    ), inl AS (
-      SELECT url, CAST(count(*) AS BIGINT) AS inlinks FROM ea GROUP BY url
-    ), r AS (
-      SELECT inl.url AS url,
-             regexp_extract(inl.url, 'http://([^/]+)', 1) AS thost,
-             inlinks, COALESCE(topic_hits, 0) AS topic_hits
-      FROM inl LEFT JOIN hits ON hits.url = inl.url
-    )
-    SELECT url, thost, inlinks, topic_hits,
-           CAST(row_number() OVER (PARTITION BY thost
-                ORDER BY topic_hits DESC, url) AS BIGINT) AS rnk,
-           (row_number() OVER (PARTITION BY thost
-                ORDER BY topic_hits DESC, url) <= 3
-            AND topic_hits > 0) AS fetch_now
-    FROM r
-    """,
-)
-def q_focused_crawl_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Focused-crawl frontier prioritization (Chakrabarti et al. 1999,
-    public): rank each undiscovered URL by the topical relevance of the
-    ANCHOR TEXT its inbound links carry — the only evidence a crawler
-    has about a page before fetching it. Per frontier URL: inbound-link
-    count, topic-term hits (anchor words joined against a topic lexicon),
-    and a per-target-host rank; `fetch_now` marks the top-3 topical URLs
-    of each host, the politeness-respecting dispatch set. Reference
-    parity: the Go engine extracts links but dispatches FIFO
-    (parser.go, dispatcher.go); focused prioritization is the
-    topical-crawl extension built on the same extracted edges.
-
-    100 TB shape: the topic lexicon is a VALUES relation — broadcast
-    hash join against the exploded anchor words, never a shuffle; both
-    per-URL aggregations exchange once on the url key with map-side
-    partial combine (anchor word lists are 1-3 tokens, so the exploded
-    edge stream is ~2x the edge count); the dispatch rank windows on
-    target-host — the SAME politeness partitioning every wave query
-    uses, so the frontier never sees a SinglePartition. At real scale
-    the lexicon generalizes to a broadcast embedding table and the
-    rank's ORDER BY to a learned score — the plan shape is unchanged."""
-    d = _t(spark, sf_dir, "documents")
-    ea = _anchor_edges(d)
-    wds = ea.select("url", F.explode(F.split("anchor", " ")).alias("word"))
-    topic = spark.createDataFrame(
-        [("official",), ("reference",), ("docs",), ("download",)],
-        "term string",
-    )
-    hits = (
-        wds.join(F.broadcast(topic), wds.word == topic.term)
-        .groupBy("url")
-        .agg(F.count("*").cast("long").alias("topic_hits"))
-    )
-    inl = ea.groupBy("url").agg(F.count("*").cast("long").alias("inlinks"))
-    r = inl.join(hits, "url", "left").select(
-        "url",
-        F.regexp_extract("url", "http://([^/]+)", 1).alias("thost"),
-        "inlinks",
-        F.coalesce("topic_hits", F.lit(0)).cast("long").alias("topic_hits"),
-    )
-    win = Window.partitionBy("thost").orderBy(
-        F.desc("topic_hits"), F.asc("url")
-    )
-    return r.select(
-        "url",
-        "thost",
-        "inlinks",
-        "topic_hits",
-        F.row_number().over(win).cast("long").alias("rnk"),
-        (
-            (F.row_number().over(win) <= 3) & (F.col("topic_hits") > 0)
-        ).alias("fetch_now"),
     )
 
 
@@ -6255,8 +5623,7 @@ def q_canonical_link_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-scan regexp over the body, the declared target falls back to the
     page's own URL (self-canonical), and n_on_target counts how many
     pages collapsed onto each canonical URL. Single-hop by
-    construction — the RFC leaves canonical CHAINS undefined; a chain
-    resolver is redirect_resolve's pointer-doubling, composable on top.
+    construction — the RFC leaves canonical CHAINS undefined.
 
     100 TB shape: extraction and alias classification are per-row
     regex/CASE in-scan (zero shuffle, whole-stage codegen); the only
@@ -6313,77 +5680,6 @@ def q_canonical_link_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _opic_oracle(n_iter: int = 5) -> str:
-    sql = """
-    WITH links AS (
-      SELECT doc_id % 37 AS src, (doc_id * 7 + 1) % 37 AS dst FROM documents
-      UNION ALL
-      SELECT doc_id % 37 AS src, (doc_id * 11 + 2) % 37 AS dst FROM documents
-    ), edges AS (
-      SELECT DISTINCT src, dst FROM links WHERE src <> dst
-    ), nodes AS (
-      SELECT DISTINCT src AS id FROM edges
-      UNION SELECT DISTINCT dst AS id FROM edges
-    ), outd AS (
-      SELECT src, CAST(count(*) AS BIGINT) AS out_deg FROM edges GROUP BY src
-    ), s0 AS (
-      SELECT id, CAST(1000000000 AS BIGINT) AS cash,
-             CAST(0 AS BIGINT) AS hist
-      FROM nodes
-    )"""
-    prev = "s0"
-    for i in range(1, n_iter + 1):
-        sql += f""", c{i} AS (
-      SELECT e.dst AS id, CAST(SUM(p.cash // o.out_deg) AS BIGINT) AS s
-      FROM edges e JOIN {prev} p ON p.id = e.src JOIN outd o ON o.src = e.src
-      GROUP BY e.dst
-    ), s{i} AS (
-      SELECT nodes.id,
-             CAST(COALESCE(c{i}.s, 0) AS BIGINT) AS cash,
-             p.hist + p.cash AS hist
-      FROM nodes JOIN {prev} p ON p.id = nodes.id
-      LEFT JOIN c{i} ON c{i}.id = nodes.id
-    )"""
-        prev = f"s{i}"
-    return (
-        sql
-        + f"""
-    SELECT id AS host, cash, hist, cash + hist AS importance FROM {prev}
-    """
-    )
-
-
-@_q("opic_priority", _opic_oracle())
-def q_opic_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OPIC host importance (Abiteboul et al. 2003, public) over the
-    same doc_id % 37 host link graph as host_pagerank — the THIRD
-    frontier-priority signal next to PageRank and HITS, and the one a
-    crawler can maintain ONLINE while the graph is still being
-    discovered (cash moves with each fetch; no global iteration to
-    convergence needed). Synchronous batch replay, 5 rounds, integer-
-    exact end to end: cash is an int64 quantum, per-edge shares are
-    floor divisions, and the only order-sensitive sums are integer
-    aggregations (operators/graph.opic), so the oracle replays every
-    round bit-exactly. Plan shape per round: one src-keyed equi-join +
-    one map-side-combinable integer groupBy on dst — identical
-    exchanges to pagerank/connected-components, scale-bounded by the
-    host-graph size, never the corpus."""
-    d = _t(spark, sf_dir, "documents")
-    links = d.select(
-        (F.col("doc_id") % 37).alias("src"),
-        ((F.col("doc_id") * 7 + 1) % 37).alias("dst"),
-    ).unionByName(
-        d.select(
-            (F.col("doc_id") % 37).alias("src"),
-            ((F.col("doc_id") * 11 + 2) % 37).alias("dst"),
-        )
-    )
-    edges = links.distinct().filter(F.col("src") != F.col("dst"))
-    return opic(edges, n_iter=5).select(
-        F.col("id").alias("host"), "cash", "hist", "importance"
-    )
-
-
 # --------------------------------------------------------------------------
 # public surface
 # --------------------------------------------------------------------------
@@ -6393,8 +5689,8 @@ def q_opic_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # politeness operators, and the stream plane (O9/O10/O16). This subset is
 # the driver contract (``__spark_entry__.queries()``); it fits the driver's
 # 50-query correctness window, so every entry is checked every round. The
-# rest of the registry (training-data curation, near-dup, link graph,
-# sketches) is checked against its oracles by scripts/selfcheck.py.
+# rest of the registry (training-data curation, near-dup, sketches) is
+# checked against its oracles by scripts/selfcheck.py.
 CRAWL_SYSTEM = frozenset(
     {
         # SURVEY.md §2 O-rows
