@@ -346,12 +346,10 @@ def main() -> None:
     spark.range(1000).count()
     from pyspark.sql import functions as F
 
-    from web_scraper_v1_spark.functions.extraction import (
-        extract_receiver_response,
-    )
+    from web_scraper_v1_spark.plans.throughput import parse_features_udf
 
     spark.range(10_000).repartition(64).select(
-        extract_receiver_response(F.encode(F.lit("a\nb\nc"), "UTF-8"))
+        parse_features_udf(F.lit("a b c d e f"))
     ).write.format("noop").mode("overwrite").save()
 
     # warm the engine's full code path once, untimed, at the smallest SF:

@@ -1,20 +1,18 @@
-"""Byte-equality gate for the vectorized extraction UDF vs the row-at-a-time
-Python transliteration of the Go parser (the 'reference fixture' of
-BASELINE.json) and vs the corpus golden ``text`` column."""
+"""Byte-equality gate for the native extraction expression vs the
+row-at-a-time Python transliteration of the Go parser (the 'reference
+fixture' of BASELINE.json) and vs the corpus golden ``text`` column."""
 
-import pandas as pd
 from pyspark.sql import functions as F
 
 from web_scraper_v1_spark import fixtures as fx
 from web_scraper_v1_spark.functions.extraction import (
-    _extract_batch,
     extract_receiver_response,
     golden_text,
 )
 from web_scraper_v1_spark.sources.corpus import read_pages
 
 
-def test_extract_batch_matches_transliteration_rowwise():
+def test_extraction_matches_transliteration_rowwise(spark):
     bodies = [
         "Received User-Agent: UA\nIP Address: 1.1.1.1\nForwarded Host: h",
         "a\nb",  # parse error (<3 lines)
@@ -25,12 +23,24 @@ def test_extract_batch_matches_transliteration_rowwise():
         "Received User-Agent:nospace\nIP Address: 4.4.4.4\ntail",
         fx.build_page(7, 10)["html"].decode("utf-8"),
     ]
-    out = _extract_batch(pd.Series([b.encode("utf-8") if b else None for b in bodies]))
+    df = spark.createDataFrame(
+        [(i, b.encode("utf-8") if b else None) for i, b in enumerate(bodies)],
+        "id int, html binary",
+    )
+    out = {
+        r.id: r
+        for r in df.select(
+            "id", extract_receiver_response(F.col("html")).alias("r")
+        ).select("id", "r.*").collect()
+    }
     for i, body in enumerate(bodies):
         want = fx.parse_receiver_response(body)
-        row = out.iloc[i]
+        row = out[i]
+        # a NULL body is an error too: parse_error is never NULL
+        assert row.parse_error is not None, body
         if want is None:
-            assert bool(row.parse_error), body
+            assert row.parse_error, body
+            assert row.user_agent is None and row.ip_address is None, body
         else:
             assert not row.parse_error
             assert (row.user_agent, row.ip_address, row.forwarded_host) == want, body

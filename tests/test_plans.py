@@ -97,6 +97,54 @@ def test_unbounded_wave_is_never_broadcast(spark, tmp_path):
     assert "LeftAnti" in plan
 
 
+def _python_eval_nodes(df) -> list[str]:
+    """Python-evaluation operators of ``df``'s physical plan, one per node."""
+    tree = df._jdf.queryExecution().executedPlan().toString()
+    return [
+        line for line in tree.splitlines()
+        if "ArrowEvalPython" in line or "BatchEvalPython" in line
+    ]
+
+
+def test_parse_runs_no_per_row_python(spark, tmp_path, monkeypatch, corpus_dir):
+    """No per-row Python on the parse path: extraction is a native
+    expression in both the bulk wave and the crawl round, so the wave's
+    only Python node is the batch-vectorized ``parse_features_udf`` (and
+    only when asked for), and the round's plans carry no Python parse."""
+    from web_scraper_v1_spark.plans.crawl import CrawlEngine
+    from web_scraper_v1_spark.plans.throughput import fetch_parse_wave
+    from web_scraper_v1_spark.sources.corpus import read_pages, read_seeds
+
+    seeds, pages = read_seeds(spark, corpus_dir), read_pages(spark, corpus_dir)
+    with_features = _python_eval_nodes(
+        fetch_parse_wave(spark, seeds, pages, parse_features=True)
+    )
+    assert len(with_features) == 1, with_features
+    assert "ArrowEvalPython" in with_features[0]
+    assert "parse_features_udf" in with_features[0]
+    assert _python_eval_nodes(fetch_parse_wave(spark, seeds, pages)) == []
+
+    # every plan a corpus round cuts its lineage at, the fetch+parse
+    # task rows among them
+    checkpointed = []
+    df_type = type(pages)
+    real = df_type.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        checkpointed.append(plan_of(self))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(df_type, "localCheckpoint", recording)
+    eng = CrawlEngine(spark, str(tmp_path / "round"), batch_size=30)
+    assert eng.run(seeds, pages, max_rounds=1)
+    parse_plans = [p for p in checkpointed if "user_agent" in p]
+    assert parse_plans
+    for plan in checkpointed:
+        assert "parse_receiver_response_udf" not in plan
+    for plan in parse_plans:
+        assert "ArrowEvalPython" not in plan, plan
+
+
 def test_global_prefix_sum_has_no_single_partition_stage(spark):
     """Trace sequencing must never execute a single-partition global sort:
     the prefix sum is range-partitioned + per-partition windows + a driver

@@ -85,3 +85,15 @@ def test_spark_submit_py_files_wave(spark, tmp_path):
     assert result["urls_parsed"] == expected["urls_parsed"] > 0
     assert result["page_bytes"] == expected["page_bytes"]
     assert result["text_checksum"] == expected["text_checksum"]
+
+
+def test_ship_package_keeps_the_session_zip(spark):
+    """``build_session`` ships through ``ship_package``, so shipping again
+    (the driver contract's ``entry`` does) neither re-zips the package nor
+    re-adds it."""
+    from web_scraper_v1_spark.session import _package_zip_path, ship_package
+
+    path = _package_zip_path()
+    before = os.stat(path).st_mtime_ns
+    ship_package(spark)
+    assert os.stat(path).st_mtime_ns == before

@@ -5,13 +5,17 @@ the seen-set, and carry the parse-side feature sketches."""
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
 from web_scraper_v1_spark import fixtures as fx
+from web_scraper_v1_spark.operators.dedup import _hash_shingles
 from web_scraper_v1_spark.operators.seen import SeenSet
 from web_scraper_v1_spark.plans.throughput import (
     fetch_parse_from_frontier,
     fetch_parse_wave,
+    parse_features_udf,
 )
 from web_scraper_v1_spark.sources.corpus import (
     PAGES_SCHEMA,
@@ -114,3 +118,112 @@ def test_wave_parses_non_utf8_pages(spark):
     }
     assert got == want
     assert "\ufffd" in want[fx.canonicalize_url("http://host2.example.com/bad")]
+
+
+_BIT_IDX = np.arange(64, dtype=np.uint64)
+_BIT_VAL = (np.uint64(1) << _BIT_IDX).astype(np.uint64)
+_WINNOW_POWERS = np.power(
+    np.uint64(257), np.arange(8, dtype=np.uint64)[::-1], dtype=np.uint64
+)
+
+
+def _parse_features_rowwise(texts) -> pd.DataFrame:
+    """Row-at-a-time reference for ``parse_features_udf``: the loop the
+    batch kernel replaced, kept verbatim as its oracle."""
+    simhash = np.zeros(len(texts), dtype=np.int64)
+    n_sh = np.zeros(len(texts), dtype=np.int32)
+    n_win = np.zeros(len(texts), dtype=np.int32)
+    for i, t in enumerate(texts):
+        if t is None:
+            continue
+        norm = " ".join(t.strip().lower().split())
+        w = norm.split()
+        shingles = list(
+            dict.fromkeys(
+                " ".join(w[j : j + 3]) for j in range(len(w) - 2)
+            )
+        )
+        n_sh[i] = len(shingles)
+        if shingles:
+            h = _hash_shingles(shingles)
+            bits = (h[:, None] >> _BIT_IDX[None, :]) & np.uint64(1)
+            votes = bits.sum(axis=0) * 2 > len(h)
+            simhash[i] = _BIT_VAL[votes].sum(dtype=np.uint64).astype(np.int64)
+        b = np.frombuffer(norm.encode("utf-8"), dtype=np.uint8)
+        if len(b) >= 8:
+            wins = np.lib.stride_tricks.sliding_window_view(b, 8)
+            kh = (wins.astype(np.uint64) * _WINNOW_POWERS).sum(
+                axis=1, dtype=np.uint64
+            )
+            if len(kh) >= 4:
+                picks = np.lib.stride_tricks.sliding_window_view(kh, 4).min(
+                    axis=1
+                )
+            else:
+                picks = kh
+            n_win[i] = len(np.unique(picks))
+    return pd.DataFrame(
+        {"simhash": simhash, "n_shingles": n_sh, "n_winnow": n_win}
+    )
+
+
+_EDGE_TEXTS = [
+    None,
+    "",
+    "one",
+    "two words",
+    "abc",  # under 8 bytes
+    "abcdefgh",  # 8-10 bytes: 1-3 k-grams, no 4-window
+    "abcdefghi",
+    "abcdefghij",
+    "abcdefghijk",  # 11 bytes: the first 4-window
+    "a b c a b c a b c",  # repeated shingles
+    "x x x x x x x x",
+    "tab\tsep\tand\nnew\nline words",
+    "no\u00a0break\u00a0space\u2003em space",
+    "  Leading And Trailing  ",
+    "Привет МИР пРИВЕТ мир Привет Мир",
+    "Received User-Agent Mоzillа/5.0\n0.0.0.0\nгосподин.example",
+]
+
+
+def test_parse_features_batch_kernel_matches_row_loop():
+    kernel = parse_features_udf.func
+    # one batch in both orders: every row next to different neighbours
+    for texts in (_EDGE_TEXTS, _EDGE_TEXTS[::-1]):
+        batch = pd.Series(texts, dtype=object)
+        pd.testing.assert_frame_equal(
+            kernel(batch), _parse_features_rowwise(texts)
+        )
+    for t in _EDGE_TEXTS:
+        pd.testing.assert_frame_equal(
+            kernel(pd.Series([t], dtype=object)), _parse_features_rowwise([t])
+        )
+    pd.testing.assert_frame_equal(
+        kernel(pd.Series([], dtype=object)), _parse_features_rowwise([])
+    )
+
+
+def test_parse_features_match_row_loop_on_wave(spark, corpus_dir):
+    """Every parseable page of the fixture corpus, seeded by its own URL
+    and parsed in Arrow batches of many rows, carries the row loop's
+    features for its text."""
+    pages = read_pages(spark, corpus_dir)
+    seeds = spark.createDataFrame(
+        [
+            (f"task-{i}", r.url, 0, 0)
+            for i, r in enumerate(pages.select("url").collect(), 1)
+        ],
+        SEEDS_SCHEMA,
+    )
+    rows = fetch_parse_wave(
+        spark, seeds, pages, parse_features=True
+    ).select("url", "text", "features").collect()
+    assert len(rows) == pages.filter(F.col("text").isNotNull()).count()
+    want = _parse_features_rowwise([r.text for r in rows])
+    for i, r in enumerate(rows):
+        assert (
+            r.features.simhash,
+            r.features.n_shingles,
+            r.features.n_winnow,
+        ) == tuple(int(v) for v in want.iloc[i]), r.url

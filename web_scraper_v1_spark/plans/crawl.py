@@ -12,7 +12,7 @@ loop (/root/reference/cmd/transmitter/main.go:173-218):
       → "fetch" = semi-join of the page corpus against the wave (O7: the
          sandbox fetch is a join; a live fetch is pooled HTTP in
          mapInPandas), met by the wave in one left join
-      → vectorized extraction UDF (O8, byte-identical)
+      → native extraction expression (O8, byte-identical)
       → retry expansion (O6: deterministic failures take retry_limit
          attempts, exhausted -> dropped)
         [the task rows: lineage cut by a local checkpoint — nothing after
@@ -476,8 +476,8 @@ class CrawlEngine:
         fetched = fetched.withColumn("page_bytes", F.octet_length("html"))
         if not self.broadcast_wave:
             return selected.join(fetched, "canonical_url", "left")
-        # a bounded wave parses in one partition per task slot: each
-        # partition costs the extraction UDF a Python worker round trip
+        # a bounded wave parses in one partition per task slot: a few
+        # rows need no more tasks than there are slots
         slots = self.spark.sparkContext.defaultParallelism
         return selected.coalesce(slots).join(
             F.broadcast(fetched), "canonical_url", "left"

@@ -3,12 +3,14 @@
 This is one maximal crawl wave — the path the north-rule metric ("URLs
 fetched+parsed/sec") measures: seeds -> canonicalize/hash/dedup -> seen-set
 anti-join (bloom prefilter + exact) -> fetch-as-join against the page corpus
--> vectorized extraction UDF -> parse-side features (golden text,
-fingerprint, byte counts). No driver-side loops, no global-order trace (that
-is round bookkeeping, politeness-bounded by design — see plans/crawl.py);
-every stage here is partition-parallel, so throughput should scale ~linearly
-with cores, which scripts/scaling_bench.py certifies at local[8] vs
-local[32] (sandbox stand-in for N vs 4N executors).
+-> JVM-native extraction expression -> parse-side features (golden text,
+fingerprint, byte counts, and with ``parse_features=True`` one Arrow UDF of
+batch-vectorized sketching). No driver-side loops, no global-order trace
+(that is round bookkeeping, politeness-bounded by design — see
+plans/crawl.py); every stage here is partition-parallel, so throughput
+should scale ~linearly with cores, which scripts/scaling_bench.py
+certifies at local[8] vs local[32] (sandbox stand-in for N vs 4N
+executors).
 
 Shuffle inventory (by design, the minimum for a big wave):
 1. seed dedup window (hash by canonical_url);
@@ -18,13 +20,16 @@ Shuffle inventory (by design, the minimum for a big wave):
    broadcast — at small politeness-bounded waves plans/crawl.py uses the
    broadcast variant instead);
 3. the final tiny metrics aggregation.
-The Arrow UDFs (extraction over the JVM-pruned head; sketching over the
-extracted text) run post-join on the shuffle partitioning — their
-parallelism is exactly spark.sql.shuffle.partitions, and they are never
-co-resident with a parquet scan in one stage (see the in-code note).
+Extraction is a codegen'd expression over the JVM-pruned head; the one
+Arrow UDF (sketching over the extracted text, ``parse_features=True`` only)
+runs post-join on the shuffle partitioning — its parallelism is exactly
+spark.sql.shuffle.partitions, and it is never co-resident with a parquet
+scan in one stage (see the in-code note).
 """
 
 from __future__ import annotations
+
+import itertools
 
 import numpy as np
 import pandas as pd
@@ -41,13 +46,6 @@ from web_scraper_v1_spark.operators.dedup import _hash_shingles
 from web_scraper_v1_spark.operators.frontier import prepare_seeds
 from web_scraper_v1_spark.operators.seen import SeenSet
 
-_BIT_IDX = np.arange(64, dtype=np.uint64)
-_BIT_VAL = (np.uint64(1) << _BIT_IDX).astype(np.uint64)
-_WINNOW_POWERS = np.power(
-    np.uint64(257), np.arange(8, dtype=np.uint64)[::-1], dtype=np.uint64
-)
-
-
 PARSE_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("simhash", T.LongType()),
@@ -57,48 +55,102 @@ PARSE_FEATURES_SCHEMA = T.StructType(
 )
 
 
+def _distinct_per_row(rows: np.ndarray, vals: np.ndarray, n: int) -> np.ndarray:
+    """Number of distinct ``vals`` per row id in ``range(n)``."""
+    order = np.lexsort((vals, rows))
+    rows, vals = rows[order], vals[order]
+    new = np.ones(len(rows), dtype=bool)
+    new[1:] = (rows[1:] != rows[:-1]) | (vals[1:] != vals[:-1])
+    return np.bincount(rows[new], minlength=n)
+
+
 @F.pandas_udf(PARSE_FEATURES_SCHEMA)
 def parse_features_udf(texts: pd.Series) -> pd.DataFrame:
     """Parse-side sketching in ONE Arrow pass per batch — the features a
     crawl-to-training-data pipeline computes at parse time (so dedup runs
     without re-reading 100 TB of bodies): word-3-gram shingle set ->
     64-bit SimHash bit-vote sketch, plus winnowing k-gram fingerprint count
-    (Schleimer et al.). Bundling them into a single UDF keeps one
-    JVM<->Python round-trip per batch instead of three."""
-    simhash = np.zeros(len(texts), dtype=np.int64)
-    n_sh = np.zeros(len(texts), dtype=np.int32)
-    n_win = np.zeros(len(texts), dtype=np.int32)
-    for i, t in enumerate(texts):
-        if t is None:
-            continue
-        norm = " ".join(t.strip().lower().split())
-        w = norm.split()
-        shingles = list(
-            dict.fromkeys(
-                " ".join(w[j : j + 3]) for j in range(len(w) - 2)
-            )
+    (Schleimer et al.). Per text: words = lower-cased whitespace split,
+    norm = the words joined by one space; n_shingles = distinct word
+    3-grams; simhash = bit-majority of their ``_hash_shingles`` hashes;
+    n_winnow = distinct minima over windows of 4 consecutive 8-byte
+    k-gram hashes of norm's UTF-8 bytes (all k-grams when there are fewer
+    than 4). A NULL text gets zeros.
+
+    One kernel per batch, not a loop per row: every row's words,
+    shingles and bytes are flattened into batch-wide arrays, and a window
+    counts only when its first and last element belong to the same row
+    (the row-boundary masks). Memory is linear in the batch's text bytes,
+    a few tens of bytes per byte."""
+    n = len(texts)
+    words = texts.fillna("").str.lower().str.split()
+    n_words = words.str.len().to_numpy(np.int64)
+    flat = np.fromiter(
+        itertools.chain.from_iterable(words), dtype=object,
+        count=int(n_words.sum()),
+    )
+    row_of_word = np.repeat(np.arange(n), n_words)
+
+    # word 3-grams, then one hash call over the batch's distinct shingles
+    same_row = row_of_word[:-2] == row_of_word[2:]
+    shingles = (
+        flat[:-2][same_row] + " " + flat[1:-1][same_row] + " "
+        + flat[2:][same_row]
+    )
+    codes, uniq = pd.factorize(shingles)
+    width = max(len(uniq), 1)
+    rows, codes = np.divmod(
+        np.unique(row_of_word[:-2][same_row] * width + codes), width
+    )
+    n_sh = np.bincount(rows, minlength=n)
+    simhash = np.zeros(n, dtype=np.int64)
+    if len(rows):
+        h = _hash_shingles(uniq)[codes].astype("<u8", copy=False)
+        bits = np.unpackbits(
+            h.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
         )
-        n_sh[i] = len(shingles)
-        if shingles:
-            h = _hash_shingles(shingles)
-            bits = (h[:, None] >> _BIT_IDX[None, :]) & np.uint64(1)
-            votes = bits.sum(axis=0) * 2 > len(h)
-            simhash[i] = _BIT_VAL[votes].sum(dtype=np.uint64).astype(np.int64)
-        b = np.frombuffer(norm.encode("utf-8"), dtype=np.uint8)
-        if len(b) >= 8:
-            wins = np.lib.stride_tricks.sliding_window_view(b, 8)
-            kh = (wins.astype(np.uint64) * _WINNOW_POWERS).sum(
-                axis=1, dtype=np.uint64
+        starts = np.flatnonzero(np.r_[True, rows[1:] != rows[:-1]])
+        votes = np.add.reduceat(bits, starts, axis=0, dtype=np.int64) * 2
+        votes = votes > n_sh[rows[starts], None]
+        simhash[rows[starts]] = (
+            np.packbits(votes, axis=1, bitorder="little")
+            .view("<u8").ravel().view(np.int64)
+        )
+
+    # 8-byte k-gram hashes (base 257, mod 2^64) over the batch's
+    # concatenated UTF-8 buffer; a k-gram or a 4-k-gram window counts only
+    # when it lies inside one row
+    enc = words.str.join(" ").str.encode("utf-8")
+    n_bytes = enc.str.len().to_numpy(np.int64)
+    buf = np.frombuffer(b"".join(enc), dtype=np.uint8)
+    row_of_byte = np.repeat(np.arange(n, dtype=np.int32), n_bytes)
+    nk = len(buf) - 7
+    n_win = np.zeros(n, dtype=np.int64)
+    if nk > 0:
+        kh = np.zeros(nk, dtype=np.uint64)
+        for k in range(8):
+            kh = kh * np.uint64(257) + buf[k : k + nk]
+        # rows of 8-10 bytes have 1-3 k-grams: every k-gram is a pick
+        few = (n_bytes < 11)[row_of_byte[:nk]] & (
+            row_of_byte[:nk] == row_of_byte[7:]
+        )
+        pick_rows, picks = [row_of_byte[:nk][few]], [kh[few]]
+        if nk > 3:
+            win_min = np.minimum(
+                np.minimum(kh[:-3], kh[1:-2]), np.minimum(kh[2:-1], kh[3:])
             )
-            if len(kh) >= 4:
-                picks = np.lib.stride_tricks.sliding_window_view(kh, 4).min(
-                    axis=1
-                )
-            else:
-                picks = kh
-            n_win[i] = len(np.unique(picks))
+            whole = row_of_byte[: nk - 3] == row_of_byte[10:]
+            pick_rows.append(row_of_byte[: nk - 3][whole])
+            picks.append(win_min[whole])
+        n_win = _distinct_per_row(
+            np.concatenate(pick_rows), np.concatenate(picks), n
+        )
     return pd.DataFrame(
-        {"simhash": simhash, "n_shingles": n_sh, "n_winnow": n_win}
+        {
+            "simhash": simhash,
+            "n_shingles": n_sh.astype(np.int32),
+            "n_winnow": n_win.astype(np.int32),
+        }
     )
 
 
@@ -160,15 +212,17 @@ def fetch_parse_from_frontier(
     #     never runs inside a parquet-scan stage — measured pathological
     #     under this sandbox's VM at high task counts, and on a real
     #     cluster it would couple scan IO with UDF CPU in one stage.
-    # (c) The Arrow UDFs (extraction, then sketching over the EXTRACTED
-    #     text — what a training-data pipeline sketches) run in the
-    #     post-join stage, fed ~200 B rows from the shuffle.
+    # (c) Extraction is a native expression over the head string; the
+    #     one Arrow UDF (sketching over the EXTRACTED text — what a
+    #     training-data pipeline sketches, parse_features=True only) runs
+    #     in the post-join stage, fed ~200 B rows from the shuffle, and
+    #     is the only Python the wave runs.
     # the 3-line head always fits in the leading 512 bytes of the receiver
     # corpus format (UA line <= ~130 B incl. the 2-byte Cyrillic pair, IP +
     # host lines far less), so cut BINARY-side before decoding — charset
     # decode is per-byte work and bodies are KBs (measured 1.6x on the
     # head projection at 3M pages). ``make_valid_utf8`` turns each invalid
-    # sequence into U+FFFD, like the extractor's Python decode: a cut that
+    # sequence into U+FFFD, as the extractor does: a cut that
     # lands mid-codepoint leaves one U+FFFD in line >= 4, which
     # substring_index discards, and an invalid byte in a field line reads
     # as U+FFFD there too. The generic full-body path in
@@ -188,7 +242,7 @@ def fetch_parse_from_frontier(
         prepared.select("canonical_url"), "canonical_url"
     )
     parsed = fetched.withColumn(
-        "r", extract_receiver_response(F.encode("head", "UTF-8"))
+        "r", extract_receiver_response(F.col("head"))
     ).filter(~F.col("r.parse_error"))
     txt = golden_text(F.col("r"))
     out = parsed.select(

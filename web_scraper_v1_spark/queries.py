@@ -670,7 +670,7 @@ def q_seen_anti_join_urls_cuckoo(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_crawl_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship §3.1 slice end-to-end: seeds -> canonicalize/dedup
     (prepare_seeds) -> per-host politeness wave -> fetch-as-broadcast-join
-    against the page corpus -> vectorized extraction UDF. Pages synthesize
+    against the page corpus -> native extraction expression. Pages synthesize
     from ``documents`` with receiver-template bodies
     (/root/reference/cmd/receiver/main.go:30), so the whole pipeline is
     SQL-oracle-gated."""
@@ -708,13 +708,9 @@ def q_crawl_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     fetched = pages_keyed.join(
         F.broadcast(wave.select("canonical_url")), "canonical_url"
     )
-    # the broadcast join leaves the extraction UDF co-resident with the
-    # parquet scan stage — this VM's measured bimodal 3-10x pathology at
-    # >=16 concurrent tasks (BENCH.md §4), and on a real cluster it
-    # couples scan IO with Python CPU. One tiny exchange of the already
-    # wave-bounded hit set moves the Arrow stage off the scan
-    # (A/B at sf0.1: 3.0-7.1 s bimodal -> stable 2.1-2.7 s).
-    parsed = fetched.repartition("canonical_url").withColumn(
+    # extraction is a native expression, so it runs in the scan stage;
+    # no Python worker shares the stage with the parquet scan
+    parsed = fetched.withColumn(
         "r", extract_receiver_response(F.col("html"))
     )
     return parsed.filter(~F.col("r.parse_error")).select(

@@ -3,8 +3,10 @@ setting meaningful on a real multi-executor cluster at 100 TB scale:
 
 * AQE on (runtime coalescing, skew-join splitting) — the skewed-host frontier
   relies on it in addition to explicit salting;
-* Arrow enabled — all Python-side logic is vectorized pandas UDFs
-  (the ``input_hint`` forbids per-row Python);
+* Arrow enabled — the crawl path's parse is native Spark expressions, and
+  the Python-side logic that remains (parse-side sketching, live fetch,
+  Bloom probes) runs as Arrow-batched pandas UDFs, once per batch (the
+  ``input_hint`` forbids per-row Python);
 * shuffle partitions sized to the core count locally; on a cluster this is
   set to ~2-3x total cores (or left to AQE's coalescing from a higher
   initial value).
@@ -12,11 +14,23 @@ setting meaningful on a real multi-executor cluster at 100 TB scale:
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+
+def _package_zip_path() -> str:
+    """Where ``_package_zip`` writes: the name carries a hash of the
+    package directory, so sessions of two checkouts running at once never
+    overwrite each other's zip."""
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    tag = hashlib.sha1(pkg_dir.encode()).hexdigest()[:12]
+    return os.path.join(
+        tempfile.gettempdir(), f"web_scraper_v1_spark_pkg_{tag}.zip"
+    )
 
 
 def _package_zip() -> str:
@@ -26,7 +40,7 @@ def _package_zip() -> str:
     regardless of their working directory."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
-    out = os.path.join(tempfile.gettempdir(), "web_scraper_v1_spark_pkg.zip")
+    out = _package_zip_path()
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
         for dirpath, _dirnames, filenames in os.walk(pkg_dir):
             for fn in filenames:
@@ -96,5 +110,5 @@ def build_session(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addPyFile(_package_zip())
+    ship_package(spark)
     return spark

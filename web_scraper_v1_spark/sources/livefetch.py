@@ -9,7 +9,7 @@ Reference semantics reproduced from JobProcessor.fetchData
   comes back with ``html`` null and the status recorded, so the engine's
   retry column logic (O6) can consume it exactly like a sandbox join miss;
 * the body bytes pass through untouched — downstream parsing is the same
-  vectorized extraction UDF, so live-fetched pages are byte-identical to
+  native extraction expression, so live-fetched pages are byte-identical to
   corpus-joined ones (pytest-gated against a loopback port of the
   reference receiver, cmd/receiver/main.go:21-64).
 
