@@ -6,11 +6,18 @@ remote address as IP, X-Forwarded-Host or Host as forwarded host.
 
 Gates: status!=200 rejection (job_processor.go:130-132), byte-identical
 parse of live-fetched bodies through the same extraction UDF the sandbox
-join path uses, and actual connection pooling (connections << requests)."""
+join path uses, and actual connection pooling (connections << requests).
+Against several loopback addresses: hosts fetched at once with one
+request in flight per host, a slow or failing host holding up or failing
+only its own URLs, and a bounded idle-connection pool."""
 
 from __future__ import annotations
 
+import socket
+import struct
+import sys
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
@@ -345,3 +352,187 @@ def test_live_engine_round_records_failure_kinds(spark, tmp_path, receiver):
     assert stats and stats[0].failure_kinds == {"non200": 1}
     meta = max(eng.store.rounds(), key=lambda m: m["round"])
     assert meta["failure_kinds"] == {"non200": 1}
+
+
+# -- the per-host thread pool -------------------------------------------------
+class _Hosts:
+    """Loopback web with one server per address 127.0.0.2, 127.0.0.3, ...
+    A GET waits its address's delay, then answers ``<addr> <path>``; the
+    addresses whose index is in ``reset`` reset each connection instead.
+    Records, per address, the most requests in flight at once, the most
+    addresses busy at once, and the connections open now."""
+
+    def __init__(self, delays: list[float], reset: tuple[int, ...] = ()):
+        self.lock = threading.Lock()
+        self.inflight: dict[str, int] = {}
+        self.max_inflight: dict[str, int] = {}
+        self.max_busy_hosts = 0
+        self.open_conns = 0
+        self.servers = []
+        self.urls_of: list[str] = []  # "http://addr:port" per host
+        web = self
+
+        class _Handler(BaseHTTPRequestHandler):
+            protocol_version = "HTTP/1.1"
+
+            def setup(self):
+                with web.lock:
+                    web.open_conns += 1
+                super().setup()
+
+            def finish(self):
+                with web.lock:
+                    web.open_conns -= 1
+                super().finish()
+
+            def do_GET(self):
+                addr = self.server.server_address[0]
+                if self.server.reset:
+                    self.connection.setsockopt(
+                        socket.SOL_SOCKET, socket.SO_LINGER,
+                        struct.pack("ii", 1, 0),
+                    )
+                    self.close_connection = True
+                    return
+                with web.lock:
+                    n = web.inflight[addr] = web.inflight.get(addr, 0) + 1
+                    web.max_inflight[addr] = max(
+                        web.max_inflight.get(addr, 0), n
+                    )
+                    busy = sum(1 for v in web.inflight.values() if v)
+                    web.max_busy_hosts = max(web.max_busy_hosts, busy)
+                time.sleep(self.server.delay)
+                with web.lock:
+                    web.inflight[addr] -= 1
+                body = f"{addr} {self.path}".encode()
+                self.send_response(200)
+                self.send_header("Content-Length", str(len(body)))
+                self.end_headers()
+                self.wfile.write(body)
+
+            def log_message(self, *args):
+                pass
+
+        for h, delay in enumerate(delays):
+            srv = ThreadingHTTPServer((f"127.0.0.{h + 2}", 0), _Handler)
+            srv.daemon_threads = True
+            srv.delay, srv.reset = delay, h in reset
+            threading.Thread(
+                target=srv.serve_forever, args=(0.02,), daemon=True
+            ).start()
+            self.servers.append(srv)
+            self.urls_of.append("http://%s:%d" % srv.server_address)
+
+    def close(self) -> None:
+        for srv in self.servers:
+            srv.shutdown()
+            srv.server_close()
+
+
+@pytest.fixture
+def empty_pool():
+    """The test process's connection pool, empty before and after."""
+    from web_scraper_v1_spark.sources import livefetch
+
+    def drain():
+        for conn in livefetch._POOL.values():
+            conn.close()
+        livefetch._POOL.clear()
+
+    drain()
+    yield livefetch
+    drain()
+
+
+def test_hosts_overlap_with_one_request_in_flight_per_host(spark):
+    """One Spark task holding four hosts fetches them at once, each host's
+    URLs one at a time, and its rows come back aligned to their URLs."""
+    web = _Hosts([0.05] * 4)
+    try:
+        want = {
+            f"{web.urls_of[h]}/page/{k}": f"127.0.0.{h + 2} /page/{k}".encode()
+            for k in range(5) for h in range(4)
+        }
+        df = spark.createDataFrame(
+            [(u, "ua") for u in want],
+            "canonical_url string, user_agent string",
+        )
+        got = live_fetch(df.coalesce(1)).collect()
+        assert [r.canonical_url for r in got] == list(want)
+        for r in got:
+            assert r.status == 200 and r.error_kind is None
+            assert bytes(r.html) == want[r.canonical_url]
+        assert set(web.max_inflight.values()) == {1}
+        assert web.max_busy_hosts >= 2
+    finally:
+        web.close()
+
+
+def test_slow_host_does_not_hold_up_the_others(empty_pool):
+    """A host answering in 0.3 s per request sets the batch's time; the
+    other hosts' requests run beside it, not after it."""
+    delays = [0.3, 0.1, 0.1, 0.1]
+    per_host = [3, 4, 4, 4]
+    web = _Hosts(delays)
+    try:
+        urls = [f"{web.urls_of[h]}/page/{k}"
+                for h, n in enumerate(per_host) for k in range(n)]
+        t0 = time.monotonic()
+        rows = empty_pool._fetch_all(urls, ["ua"] * len(urls), 5.0)
+        wall = time.monotonic() - t0
+        assert [r[0] for r in rows] == [200] * len(urls)
+        serial = sum(d * n for d, n in zip(delays, per_host))  # 2.1 s
+        assert wall < 0.7 * serial, (wall, serial)
+        assert set(web.max_inflight.values()) == {1}
+    finally:
+        web.close()
+
+
+def test_refused_and_reset_hosts_fail_only_their_own_urls(empty_pool):
+    """A host that refuses connections and one that resets them fail
+    their own URLs (refused / transport, after the one stale-connection
+    recycle); the healthy host's URLs between them still succeed."""
+    web = _Hosts([0.01, 0.01], reset=(1,))
+    try:
+        ok_base, reset_base = web.urls_of
+        # nothing listens on this address: every connect is refused
+        refused_base = "http://127.0.0.9:%d" % web.servers[0].server_address[1]
+        urls = [f"{base}/page/{k}" for k in range(3)
+                for base in (ok_base, refused_base, reset_base)]
+        rows = empty_pool._fetch_all(urls, ["ua"] * len(urls), 5.0)
+        for url, (status, body, kind) in zip(urls, rows):
+            if url.startswith(ok_base):
+                assert status == 200 and kind is None
+                assert body == ("127.0.0.2 /" + url.split("/", 3)[3]).encode()
+            else:
+                want = "refused" if url.startswith(refused_base) else "transport"
+                assert (status, body, kind) == (-1, None, want), url
+    finally:
+        web.close()
+
+
+def test_pool_stays_bounded_under_many_host_threads(empty_pool, monkeypatch):
+    """More hosts than cores and than the pool's bound, each on its own
+    thread, with a short switch interval so the threads interleave: the
+    pool keeps exactly ``_POOL_MAX`` idle connections, every evicted one
+    is closed (the server sees only that many still open), and no host
+    ever has two requests in flight."""
+    monkeypatch.setattr(empty_pool, "_POOL_MAX", 4)
+    n_hosts = 12
+    web = _Hosts([0.005] * n_hosts)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        urls = [f"{web.urls_of[h]}/page/{k}" for k in range(4)
+                for h in range(n_hosts)]
+        rows = empty_pool._fetch_all(urls, ["ua"] * len(urls), 5.0)
+        assert [r[0] for r in rows] == [200] * len(urls)
+        assert len(empty_pool._POOL) == 4
+        assert set(web.max_inflight.values()) == {1}
+        deadline = time.monotonic() + 5.0
+        while web.open_conns > 4 and time.monotonic() < deadline:
+            time.sleep(0.01)
+        assert web.open_conns == 4
+    finally:
+        sys.setswitchinterval(interval)
+        web.close()

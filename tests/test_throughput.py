@@ -120,6 +120,36 @@ def test_wave_parses_non_utf8_pages(spark):
     assert "\ufffd" in want[fx.canonicalize_url("http://host2.example.com/bad")]
 
 
+def test_wave_skips_seen_page_seeded_in_non_canonical_form(spark):
+    """The seen table holds canonical URLs. A seen page seeded with an
+    upper-case scheme and host, the default port and a fragment passes
+    the Bloom check as maybe-seen; the exact anti-join must then match it
+    on its canonical form and drop it, not fetch it again."""
+    body = b"Received User-Agent: a\nIP Address: 1.2.3.4\nForwarded Host: h"
+    pages = spark.createDataFrame(
+        [
+            (f"https://a.example.com/{p}", fx.EPOCH, body, None, "en")
+            for p in ("p", "q")
+        ],
+        PAGES_SCHEMA,
+    )
+    seeds = spark.createDataFrame(
+        [
+            ("task-1", "HTTPS://A.example.com:443/p#frag", 0, 0),
+            ("task-2", "https://a.example.com/q", 0, 0),
+        ],
+        SEEDS_SCHEMA,
+    )
+    seen = spark.createDataFrame(
+        [("https://a.example.com/p",)], "url string"
+    ).select(F.xxhash64("url").alias("url_hash"), "url")
+    got = [
+        r.url
+        for r in fetch_parse_wave(spark, seeds, pages, seen=seen).collect()
+    ]
+    assert got == ["https://a.example.com/q"]
+
+
 _BIT_IDX = np.arange(64, dtype=np.uint64)
 _BIT_VAL = (np.uint64(1) << _BIT_IDX).astype(np.uint64)
 _WINNOW_POWERS = np.power(

@@ -460,7 +460,8 @@ class CrawlEngine:
             )
         else:
             # one partition per task slot, each host's URLs in one
-            # partition: as many requests in flight as there are slots
+            # partition: a task fetches its hosts at once but each host's
+            # URLs one at a time, so no host has two requests in flight
             fetched = self.fetcher(
                 selected.repartition(
                     self.spark.sparkContext.defaultParallelism, "host"

@@ -197,7 +197,12 @@ def fetch_parse_from_frontier(
         seen_set = SeenSet(spark, n_bits=1 << 24)
         seen_set.load(seen)
     if seen_set is not None:
-        prepared = seen_set.filter_new(prepared)
+        # the seen table holds canonical URLs: the exact anti-join must
+        # compare canonical forms, or a seen page seeded as
+        # HTTPS://Host:443/p#frag passes it and is fetched again
+        prepared = seen_set.filter_new(
+            prepared.withColumn("url", F.col("canonical_url"))
+        )
 
     # -- KEY PLAN SHAPE -------------------------------------------------
     # (a) The raw page bodies (the 100 TB column) never enter a shuffle:
