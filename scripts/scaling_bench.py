@@ -77,8 +77,8 @@ def one_run(cores: int, corpus_dir: str, n_pages: int) -> None:
         F.xxhash64("canonical_url").alias("url_hash"),
         F.col("canonical_url").alias("url"),
     )
-    # exact anti-join only: the Python-side bloom prefilter would put a
-    # pandas UDF into the seeds scan stage (see plans/throughput.py note)
+    # exact anti-join only: the Bloom probe is a pandas UDF, which would
+    # run in the frontier scan stage
     ss = SeenSet(spark, n_bits=1 << 24, use_bloom=False)
     ss.load(seen)
 

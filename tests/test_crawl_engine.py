@@ -623,10 +623,10 @@ def test_cuckoo_exactness_under_churn_with_deletes(spark):
 
 
 def test_bloom_prefilter_actually_skips_join_work(spark):
-    from web_scraper_v1_spark.operators.seen import (
-        SeenSet,
-        bloom_contains_col,
-    )
+    """Of 40k new candidates, the ones ``SeenSet``'s own probe flags
+    maybe-seen — the only ones ``filter_new`` sends to the exact join —
+    are a small false-positive slice."""
+    from web_scraper_v1_spark.operators.seen import SeenSet
 
     base = spark.range(0, 2000).selectExpr(
         "xxhash64(concat('u', id)) as url_hash", "concat('u', id) as url"
@@ -636,10 +636,8 @@ def test_bloom_prefilter_actually_skips_join_work(spark):
     cand = spark.range(2000, 42000).selectExpr(
         "xxhash64(concat('u', id)) as url_hash", "concat('u', id) as url"
     )
-    flagged = cand.select(
-        bloom_contains_col(spark, ss.bloom, F.col("url_hash")).alias("m")
-    )
-    n_maybe = flagged.filter("m").count()
+    flagged = ss._flagged(cand, ss._probe())
+    n_maybe = flagged.filter("_maybe_seen").count()
     # all 40k candidates are new; the false-positive slice that reaches the
     # exact join must be small (1<<20 bits / 2k keys -> fpp << 1%)
     assert n_maybe < 400

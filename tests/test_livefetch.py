@@ -490,8 +490,8 @@ def test_slow_host_does_not_hold_up_the_others(empty_pool):
 
 def test_refused_and_reset_hosts_fail_only_their_own_urls(empty_pool):
     """A host that refuses connections and one that resets them fail
-    their own URLs (refused / transport, after the one stale-connection
-    recycle); the healthy host's URLs between them still succeed."""
+    their own URLs (refused / transport; a reset on a fresh connection is
+    not retried); the healthy host's URLs between them still succeed."""
     web = _Hosts([0.01, 0.01], reset=(1,))
     try:
         ok_base, reset_base = web.urls_of
@@ -536,3 +536,84 @@ def test_pool_stays_bounded_under_many_host_threads(empty_pool, monkeypatch):
     finally:
         sys.setswitchinterval(interval)
         web.close()
+
+
+class _Stall:
+    """A listener on 127.0.0.1 that accepts connections and never answers;
+    counts the connections it accepted."""
+
+    def __init__(self):
+        self.sock = socket.socket()
+        self.sock.bind(("127.0.0.1", 0))
+        self.sock.listen(8)
+        self.url = "http://127.0.0.1:%d/x" % self.sock.getsockname()[1]
+        self.accepted = []
+        threading.Thread(target=self._accept, daemon=True).start()
+
+    def _accept(self):
+        while True:
+            try:
+                conn, _ = self.sock.accept()
+            except OSError:  # closed
+                return
+            self.accepted.append(conn)
+
+    def close(self):
+        self.sock.close()
+        for conn in self.accepted:
+            conn.close()
+
+
+def test_timeout_on_a_fresh_connection_is_not_retried(empty_pool):
+    """A stalled host costs one connection and one timeout: only a stale
+    pooled connection is recycled, so the GET is not sent again."""
+    stall = _Stall()
+    try:
+        t0 = time.monotonic()
+        rows = empty_pool._fetch_all([stall.url], ["ua"], 1.0)
+        wall = time.monotonic() - t0
+        assert rows == [(-1, None, "timeout")]
+        assert wall < 1.6, wall
+        assert len(stall.accepted) == 1
+    finally:
+        stall.close()
+
+
+def test_pooled_connection_takes_the_callers_timeout(empty_pool):
+    """A keep-alive connection pooled by a call with ``timeout=6`` waits
+    only the next call's ``timeout=1`` on a stalled response."""
+    release = threading.Event()
+
+    class _Handler(BaseHTTPRequestHandler):
+        protocol_version = "HTTP/1.1"
+
+        def do_GET(self):
+            if self.path == "/stall":
+                release.wait(10.0)
+            body = b"ok"
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+
+        def log_message(self, *args):
+            pass
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), _Handler)
+    srv.daemon_threads = True
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    base = "http://127.0.0.1:%d" % srv.server_address[1]
+    try:
+        assert empty_pool._fetch_all([base + "/ok"], ["ua"], 6.0) == [
+            (200, b"ok", None)
+        ]
+        assert len(empty_pool._POOL) == 1
+        t0 = time.monotonic()
+        rows = empty_pool._fetch_all([base + "/stall"], ["ua"], 1.0)
+        wall = time.monotonic() - t0
+        assert rows == [(-1, None, "timeout")]
+        assert wall < 2.0, wall
+    finally:
+        release.set()
+        srv.shutdown()
+        srv.server_close()

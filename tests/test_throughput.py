@@ -150,6 +150,101 @@ def test_wave_skips_seen_page_seeded_in_non_canonical_form(spark):
     assert got == ["https://a.example.com/q"]
 
 
+def test_wave_returns_each_page_once_without_seed_dedup(spark):
+    """Seeds naming one page in canonical-equivalent forms (upper-case
+    scheme and host, the default port, a fragment) bring the page back
+    once with its golden text. The fetch is a left semi-join, so the
+    wave runs no seed-dedup window."""
+    bodies = {
+        "https://a.example.com/p":
+            b"Received User-Agent: a\nIP Address: 1.2.3.4\nForwarded Host: h",
+        "https://b.example.com/q":
+            b"Received User-Agent: b\nIP Address: 5.6.7.8\nForwarded Host: g",
+    }
+    pages = spark.createDataFrame(
+        [(u, fx.EPOCH, b, None, "en") for u, b in bodies.items()],
+        PAGES_SCHEMA,
+    )
+    forms = [
+        "HTTPS://A.EXAMPLE.COM/p",
+        "https://a.example.com:443/p",
+        "https://a.example.com/p#frag",
+        "https://a.example.com/p",
+        "https://B.example.com:443/q#x",
+        "https://b.example.com/q",
+    ]
+    seeds = spark.createDataFrame(
+        [(f"task-{i}", u, 0, 0) for i, u in enumerate(forms, 1)],
+        SEEDS_SCHEMA,
+    )
+    out = fetch_parse_wave(spark, seeds, pages, parse_features=True)
+    got = sorted((r.url, r.text) for r in out.collect())
+    assert got == sorted(
+        (u, "\n".join(fx.parse_receiver_response(b.decode())))
+        for u, b in bodies.items()
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, plan
+    assert "LeftSemi" in plan and "Inner" not in plan, plan
+
+
+def test_wave_probes_each_candidate_once_on_every_slot(
+    spark, tmp_path, corpus_dir, monkeypatch
+):
+    """A one-file seed table is spread over the task slots before the
+    seen-set filter, and the Bloom probe sees each candidate exactly once:
+    once per union branch would count each twice, and a copy of the probe
+    inferred onto the seen-table or page scan would count their rows. The
+    wave's own plan holds no probe; it reads the flagged candidates."""
+    from pyspark import AccumulatorParam, TaskContext
+
+    from web_scraper_v1_spark.operators import seen as seen_mod
+
+    class _Union(AccumulatorParam):
+        def zero(self, value):
+            return set()
+
+        def addInPlace(self, a, b):
+            a |= b
+            return a
+
+    sc = spark.sparkContext
+    probed = sc.accumulator(0)
+    partitions = sc.accumulator(set(), _Union())
+    real = seen_mod._bloom_probe
+
+    def counting(*args):
+        kernel = real(*args)
+
+        def _contains(keys: pd.Series) -> pd.Series:
+            probed.add(len(keys))
+            partitions.add({TaskContext.get().partitionId()})
+            return kernel(keys)
+
+        return _contains
+
+    monkeypatch.setattr(seen_mod, "_bloom_probe", counting)
+    path = str(tmp_path / "seeds")
+    read_seeds(spark, corpus_dir).coalesce(1).write.parquet(path)
+    seeds = spark.read.schema(SEEDS_SCHEMA).parquet(path)
+    assert seeds.rdd.getNumPartitions() == 1
+    pages = read_pages(spark, corpus_dir)
+    seen = (
+        pages.filter(F.xxhash64("url") % 5 == 0)
+        .select(F.xxhash64("url").alias("url_hash"), "url")
+    )
+    out = fetch_parse_wave(spark, seeds, pages, seen=seen, parse_features=True)
+    got = sorted(r.url for r in out.select("url").collect())
+
+    assert probed.value == seeds.count()
+    assert len(partitions.value) >= sc.defaultParallelism
+    assert "_contains" not in out._jdf.queryExecution().executedPlan().toString()
+    seeded = {fx.canonicalize_url(r.url) for r in seeds.collect()}
+    parsed = {r.url for r in pages.filter(F.col("text").isNotNull()).collect()}
+    want = seeded & parsed - {r.url for r in seen.collect()}
+    assert got == sorted(want) and got
+
+
 _BIT_IDX = np.arange(64, dtype=np.uint64)
 _BIT_VAL = (np.uint64(1) << _BIT_IDX).astype(np.uint64)
 _WINNOW_POWERS = np.power(

@@ -6,7 +6,7 @@ the crawl loop — the live loop refetches duplicates
 (cmd/transmitter/main.go:179-187 enqueues the same URL 11x). The north rule
 makes dedup a first-class engine feature: canonicalized URL -> xxhash64,
 an exact membership table, and an approximate *partitioned* Bloom prefilter
-whose per-partition bitmaps are merged via ``treeAggregate``.
+whose per-partition bitmaps are built from Arrow batches and OR-merged.
 
 Design for 10^10 URLs:
 * the exact set is an append-only snapshot table keyed (url_hash, url) —
@@ -22,13 +22,14 @@ Design for 10^10 URLs:
   shard per task). The driver never holds more than the shards it is
   currently merging.
 * the (re)load build is distributed: one (S x words) bitmap block per
-  partition, OR-merged tree-wise (``treeAggregate`` — north rule),
-  depth-limited so driver traffic stays logarithmic in partition count.
+  non-empty partition, built from the partition's Arrow batches and
+  OR-merged on the driver, in one job that also counts the keys.
   A crawl round's increment is bounded by its wave, so ``add`` inserts
   its keys into the driver-held bitmap from one Arrow collect instead.
 * no false negatives by construction, so exactness is preserved (bloom is
   a prefilter only — SURVEY.md §7 hard part (c)); candidates that are
-  definitely-new (bloom miss) bypass the anti-join shuffle entirely.
+  definitely-new (bloom miss) bypass the exact anti-join entirely: they
+  are neither shuffled to it nor compared with the seen table.
 * TTL semantics (in_memory.go:51-61) map to ``seen_round >= r - ttl``
   filters on the exact table; recrawl policies plug in there. Bloom bits
   for expired keys are deleted via ROTATING GENERATIONS (the north rule's
@@ -43,7 +44,8 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _M1 = np.uint64(0xBF58476D1CE4E5B9)
@@ -196,37 +198,44 @@ def build_sharded_bits(
     n_shards: int,
     bits_per_shard: int,
     n_hashes: int = 5,
-) -> np.ndarray:
-    """Distributed sharded-bloom build: one (S x words) block per partition
-    (single vectorized numpy pass over the partition's keys), OR-merged via
-    ``treeAggregate`` (north rule). Returns the merged (S x words) array.
+) -> tuple[np.ndarray, int]:
+    """Distributed sharded-bloom build: each partition inserts its keys
+    into one (S x words) block from its Arrow batches (``mapInArrow``, one
+    vectorized numpy pass per batch, no per-row Python), and the driver
+    ORs the blocks. Returns the merged (S x words) array and the number of
+    keys, so the caller learns whether the table is empty from the same
+    job.
 
-    Scale note: driver receives O(log(partitions)) blocks of
-    S * bits_per_shard / 8 bytes. When the FULL bitmap exceeds driver
-    memory (10^10 keys), the same build runs per shard-range (groupBy
-    shard of the key stream, one treeAggregate per range) so the driver
-    only ever holds ``max_shard_bytes`` at a time; the sandbox-scale path
-    below keeps the one-pass variant.
+    Scale note: the driver receives one block of S * bits_per_shard / 8
+    bytes per non-empty partition (an empty partition sends nothing).
+    When the FULL bitmap exceeds driver memory (10^10 keys), the same
+    build runs per shard-range (filter the key stream to a range of
+    shards, one build per range) so the driver only ever holds
+    ``max_shard_bytes`` per block; the sandbox-scale path below keeps the
+    one-pass variant.
     """
-    proto = ShardedBloom(n_shards, bits_per_shard, n_hashes)
-    zero = np.zeros_like(proto.bits2d)
 
-    def seq_op(bits2d: np.ndarray, rows) -> np.ndarray:
+    def blocks(batches):
         sb = ShardedBloom(n_shards, bits_per_shard, n_hashes)
-        sb.bits2d = bits2d
-        keys = np.fromiter((r[0] for r in rows), dtype=np.int64)
-        sb.add(keys)
-        return sb.bits2d
+        n = 0
+        for batch in batches:
+            keys = batch.column(0).to_numpy(zero_copy_only=False)
+            sb.add(keys.astype(np.int64, copy=False))
+            n += len(keys)
+        if n:
+            yield pa.RecordBatch.from_pydict(
+                {"bits": [sb.bits2d.tobytes()], "n": [n]}
+            )
 
-    def comb_op(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-        return a | b
-
-    n_parts = max(1, df.rdd.getNumPartitions())
-    depth = 2 if n_parts <= 64 else 3
-    blocks = df.select(key_col).rdd.mapPartitions(
-        lambda it: [seq_op(zero.copy(), it)]
+    table = (
+        df.select(key_col)
+        .mapInArrow(blocks, "bits binary, n long")
+        .toArrow()
     )
-    return blocks.treeAggregate(zero, comb_op, comb_op, depth=depth)
+    merged = np.zeros((n_shards, bits_per_shard // 64), dtype=np.uint64)
+    for block in table.column("bits").to_pylist():
+        merged |= np.frombuffer(block, dtype=np.uint64).reshape(merged.shape)
+    return merged, sum(table.column("n").to_pylist())
 
 
 class ShardedCuckoo:
@@ -404,11 +413,11 @@ class ShardedCuckoo:
 def build_sharded_cuckoo(
     df: DataFrame, key_col: str, n_shards: int, buckets_per_shard: int
 ) -> "ShardedCuckoo":
-    """Distributed cuckoo build, mirror of ``build_sharded_bits``: one
-    per-partition table (vectorized decompose + insert loop over the
-    partition's keys), entry-merged tree-wise via ``treeAggregate`` (the
-    cuckoo combine is re-insertion, not OR — slot placement differs by
-    merge order, membership does not)."""
+    """Distributed cuckoo build: one per-partition table (vectorized
+    decompose + insert loop over the partition's keys), entry-merged
+    tree-wise via ``treeAggregate`` (the cuckoo combine is re-insertion,
+    not OR — slot placement differs by merge order, membership does
+    not)."""
     proto = ShardedCuckoo(n_shards, buckets_per_shard)
     zero = np.zeros_like(proto.table)
 
@@ -436,10 +445,10 @@ def build_sharded_cuckoo(
     return _wrap(merged)
 
 
-def _cuckoo_contains_from_broadcasts(
-    bcs: list, n_shards: int, buckets_per_shard: int, key: Column
-) -> Column:
-    @F.pandas_udf("boolean")
+def _cuckoo_probe(bcs: list, n_shards: int, buckets_per_shard: int):
+    """Vectorized membership kernel (pd.Series of keys -> pd.Series of
+    bool) over per-shard cuckoo-table broadcasts."""
+
     def _contains(keys: pd.Series) -> pd.Series:
         k = keys.to_numpy(dtype=np.int64)
         ck = ShardedCuckoo.__new__(ShardedCuckoo)
@@ -453,43 +462,20 @@ def _cuckoo_contains_from_broadcasts(
             out[m] = ck.contains(k[m])
         return pd.Series(out)
 
-    return _contains(key)
+    return _contains
 
 
-def bloom_contains_col(spark, bloom: ShardedBloom, key: Column) -> Column:
-    """Membership test column with per-shard broadcasts created for this
-    call (test/one-shot path; ``SeenSet`` manages long-lived per-shard
-    broadcasts incrementally instead)."""
-    bcs = [
-        spark.sparkContext.broadcast(bloom.bits2d[s])
-        for s in range(bloom.n_shards)
-    ]
-    return _contains_col_from_broadcasts(
-        bcs, bloom.n_shards, bloom.bits_per_shard, bloom.n_hashes, key
-    )
-
-
-def _contains_col_from_broadcasts(
-    bcs: list, n_shards: int, bits_per_shard: int, n_hashes: int, key: Column
-) -> Column:
-    return _contains_col_multi([bcs], n_shards, bits_per_shard, n_hashes, key)
-
-
-def _contains_col_multi(
-    gen_bcs: list[list],
-    n_shards: int,
-    bits_per_shard: int,
-    n_hashes: int,
-    key: Column,
-) -> Column:
-    """Vectorized membership UDF over per-shard broadcasts, OR'd across
-    bloom GENERATIONS (a key is maybe-seen if any live generation might
-    hold it). Only the shards present in a batch are ``.value``-accessed —
-    Spark's torrent broadcast fetches lazily, so a task whose candidates
-    are repartitioned by ``pmod(url_hash, S)`` pulls exactly one shard per
+def _bloom_probe(
+    gen_bcs: list[list], n_shards: int, bits_per_shard: int, n_hashes: int
+):
+    """Vectorized membership kernel (pd.Series of keys -> pd.Series of
+    bool) over per-shard broadcasts, OR'd across bloom GENERATIONS (a key
+    is maybe-seen if any live generation might hold it). Only the shards
+    present in a batch are ``.value``-accessed — Spark's torrent
+    broadcast fetches lazily, so a task whose candidates are
+    repartitioned by ``pmod(url_hash, S)`` pulls exactly one shard per
     generation."""
 
-    @F.pandas_udf("boolean")
     def _contains(keys: pd.Series) -> pd.Series:
         k = keys.to_numpy(dtype=np.int64)
         shard = _shard_of(k, n_shards)
@@ -508,7 +494,7 @@ def _contains_col_multi(
             out[m] = hit
         return pd.Series(out)
 
-    return _contains(key)
+    return _contains
 
 
 class SeenSet:
@@ -617,17 +603,31 @@ class SeenSet:
     # -- state -------------------------------------------------------------
     def load(self, seen_df: DataFrame, round_id: int = 0) -> None:
         """(Re)load the exact set, e.g. on resume; rebuilds the bloom
-        distributed (treeAggregate of per-partition shard blocks). All
-        loaded keys land in ``round_id``'s generation — with a TTL this
-        keeps them up to one window longer than their true expiry
-        (false-positive-only, conservative)."""
+        distributed (per-partition shard blocks from Arrow batches,
+        OR-merged on the driver; the same job counts the keys, so an empty
+        table costs no extra probe job). All loaded keys land in
+        ``round_id``'s generation — with a TTL this keeps them up to one
+        window longer than their true expiry (false-positive-only,
+        conservative)."""
         for g in list(self._gens):
             self._drop_gen(g)
         self._seen_df = seen_df
-        self._nonempty = bool(seen_df.take(1))
-        if not (self.use_bloom and self._nonempty):
+        if self.use_bloom and self.filter_kind == "bloom":
+            bits, n_keys = build_sharded_bits(
+                seen_df,
+                "url_hash",
+                self.n_shards,
+                self.bits_per_shard,
+                self.n_hashes,
+            )
+            self._nonempty = n_keys > 0
+            if self._nonempty:
+                g = self._gen_of(round_id)
+                self._gen_for(g).bits2d = bits
+                self._publish(g)
             return
-        if self.filter_kind == "cuckoo":
+        self._nonempty = bool(seen_df.take(1))
+        if self.use_bloom and self._nonempty:
             self._cuckoo = build_sharded_cuckoo(
                 seen_df,
                 "url_hash",
@@ -635,16 +635,6 @@ class SeenSet:
                 self.cuckoo_buckets_per_shard,
             )
             self._publish_cuckoo()
-            return
-        g = self._gen_of(round_id)
-        self._gen_for(g).bits2d = build_sharded_bits(
-            seen_df,
-            "url_hash",
-            self.n_shards,
-            self.bits_per_shard,
-            self.n_hashes,
-        )
-        self._publish(g)
 
     def set_exact(self, seen_df: DataFrame) -> None:
         """Swap the exact side (e.g. to a freshly committed snapshot read)
@@ -732,45 +722,60 @@ class SeenSet:
             if old is not None:
                 old.unpersist()
 
-    def filter_new(self, candidates: DataFrame) -> DataFrame:
-        if self._seen_df is None or not self._nonempty:
-            return candidates
-        seen = self._seen_df.select("url_hash", "url")
+    def _probe(self):
+        """The approximate filter's membership kernel, or None when there
+        is no filter to probe."""
+        if not self.use_bloom:
+            return None
         if self.filter_kind == "cuckoo":
-            if not self.use_bloom or self._cuckoo is None:
-                return candidates.join(seen, ["url_hash", "url"], "left_anti")
-            maybe = _cuckoo_contains_from_broadcasts(
-                self._cuckoo_bcs,
-                self.n_shards,
-                self.cuckoo_buckets_per_shard,
-                F.col("url_hash"),
+            if self._cuckoo is None:
+                return None
+            return _cuckoo_probe(
+                self._cuckoo_bcs, self.n_shards, self.cuckoo_buckets_per_shard
             )
-            flagged = candidates.withColumn("_maybe_seen", maybe)
-            new = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-            surv = (
-                flagged.filter(F.col("_maybe_seen"))
-                .drop("_maybe_seen")
-                .join(seen, ["url_hash", "url"], "left_anti")
-            )
-            return new.unionByName(surv)
         gen_bcs = [
             self._gen_bcs[g]
             for g in sorted(self._gens)
             if self._gen_bcs[g][0] is not None
         ]
-        if not self.use_bloom or not gen_bcs:
-            return candidates.join(seen, ["url_hash", "url"], "left_anti")
-        maybe_flag = _contains_col_multi(
-            gen_bcs,
-            self.n_shards,
-            self.bits_per_shard,
-            self.n_hashes,
-            F.col("url_hash"),
+        if not gen_bcs:
+            return None
+        return _bloom_probe(
+            gen_bcs, self.n_shards, self.bits_per_shard, self.n_hashes
         )
-        flagged = candidates.withColumn("_maybe_seen", maybe_flag)
-        definitely_new = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
+
+    def _flagged(self, candidates: DataFrame, probe) -> DataFrame:
+        """``candidates`` plus ``_maybe_seen``, the probe's flag, evaluated
+        ONCE per candidate. The frame is locally checkpointed (lazily:
+        the first job that reads it computes and keeps it), so both
+        branches of ``filter_new`` read the stored flag instead of
+        re-running the probe each, and the optimizer sees ``_maybe_seen``
+        as a plain column: it cannot infer the probe through the
+        ``url_hash`` join key onto the seen-table scan, or onto a scan the
+        caller joins the result with. The cost is that the flagged
+        candidates stay pinned in executor memory (spilling to disk) until
+        the returned frame is dropped."""
+        udf = F.pandas_udf(probe, "boolean")
+        return candidates.withColumn(
+            "_maybe_seen", udf(F.col("url_hash"))
+        ).localCheckpoint(eager=False)
+
+    def filter_new(self, candidates: DataFrame) -> DataFrame:
+        """The candidates not in the set. Bloom (or cuckoo) misses are new
+        for certain and skip the exact side; only the maybe-seen rows —
+        true hits plus the false-positive share — meet the exact
+        ``left_anti`` join on (url_hash, url)."""
+        if self._seen_df is None or not self._nonempty:
+            return candidates
+        seen = self._seen_df.select("url_hash", "url")
+        probe = self._probe()
+        if probe is None:
+            return candidates.join(seen, ["url_hash", "url"], "left_anti")
+        flagged = self._flagged(candidates, probe)
+        maybe = F.col("_maybe_seen")
+        definitely_new = flagged.filter(~maybe).drop("_maybe_seen")
         survivors = (
-            flagged.filter(F.col("_maybe_seen"))
+            flagged.filter(maybe)
             .drop("_maybe_seen")
             .join(seen, ["url_hash", "url"], "left_anti")
         )

@@ -1,30 +1,41 @@
 """The throughput-carrying fetch+parse pipeline, isolated for benchmarks.
 
 This is one maximal crawl wave — the path the north-rule metric ("URLs
-fetched+parsed/sec") measures: seeds -> canonicalize/hash/dedup -> seen-set
-anti-join (bloom prefilter + exact) -> fetch-as-join against the page corpus
--> JVM-native extraction expression -> parse-side features (golden text,
-fingerprint, byte counts, and with ``parse_features=True`` one Arrow UDF of
+fetched+parsed/sec") measures: seeds -> canonicalize/hash -> seen-set
+filter (bloom probe once per candidate, exact anti-join for the maybe-seen
+share) -> fetch-as-semi-join against the page corpus -> JVM-native
+extraction expression -> parse-side features (golden text, fingerprint,
+byte counts, and with ``parse_features=True`` one Arrow UDF of
 batch-vectorized sketching). No driver-side loops, no global-order trace
 (that is round bookkeeping, politeness-bounded by design — see
-plans/crawl.py); every stage here is partition-parallel, so throughput
-should scale ~linearly with cores, which scripts/scaling_bench.py
-certifies at local[8] vs local[32] (sandbox stand-in for N vs 4N
-executors).
+plans/crawl.py). Every stage is partition-parallel and the candidate side
+runs on every task slot; scripts/scaling_bench.py measures throughput at
+two parallelisms (a sandbox stand-in for N vs 4N executors), and the
+measured efficiency is still well below linear (ROADMAP.md).
 
-Shuffle inventory (by design, the minimum for a big wave):
-1. seed dedup window (hash by canonical_url);
-2. the frontier x pages equi-join — both sides hash by canonical_url, and
-   crucially the pages side ships only (canonical_url, head, page_bytes):
-   the raw body column NEVER enters an exchange (a big wave cannot
-   broadcast — at small politeness-bounded waves plans/crawl.py uses the
-   broadcast variant instead);
-3. the final tiny metrics aggregation.
+The candidate side does its work once. A wave needs no seed dedup: the
+fetch is a ``left_semi`` join, so a page comes back at most once however
+many canonical-equivalent seeds name it. That drops the window (and its
+sort and shuffle) ``prepare_seeds`` runs for the crawl engine, which needs
+the first occurrence's ``queue_seq``; the wave does not.
+
+Exchanges (by design, the minimum for a big wave):
+1. when the seeds scan has fewer splits than the session has task slots
+   (a small seed file is one split), a round-robin repartition of the
+   seed URLs right after the scan, so canonicalization and the Bloom probe
+   run on every slot;
+2. the exact anti-join of the maybe-seen candidates against the seen
+   table (a small share of the wave; a small seen table is broadcast);
+3. the frontier x pages semi-join on canonical_url. The frontier side
+   carries one string per candidate, so unless it is bigger than the
+   broadcast threshold the planner broadcasts it and the pages side does
+   not shuffle at all; when it is bigger, both sides hash by
+   canonical_url, and the pages side ships only (canonical_url, head,
+   page_bytes): the raw body column NEVER enters an exchange.
 Extraction is a codegen'd expression over the JVM-pruned head; the one
-Arrow UDF (sketching over the extracted text, ``parse_features=True`` only)
-runs post-join on the shuffle partitioning — its parallelism is exactly
-spark.sql.shuffle.partitions, and it is never co-resident with a parquet
-scan in one stage (see the in-code note).
+Arrow UDF of the parse (sketching over the extracted text,
+``parse_features=True`` only) runs after the join, in the stage that
+reads the pages.
 """
 
 from __future__ import annotations
@@ -43,7 +54,9 @@ from web_scraper_v1_spark.functions.extraction import (
     golden_text,
 )
 from web_scraper_v1_spark.operators.dedup import _hash_shingles
-from web_scraper_v1_spark.operators.frontier import prepare_seeds
+# the wave itself no longer calls prepare_seeds; perfbench's tracer wraps
+# ``throughput.prepare_seeds`` by name, so the name stays importable here
+from web_scraper_v1_spark.operators.frontier import prepare_seeds  # noqa: F401
 from web_scraper_v1_spark.operators.seen import SeenSet
 
 PARSE_FEATURES_SCHEMA = T.StructType(
@@ -164,16 +177,29 @@ def fetch_parse_wave(
 ) -> DataFrame:
     """One full fetch+parse wave; returns the parsed results DataFrame
     (url, user_agent, ip_address, forwarded_host, text, fingerprint,
-    page_bytes). Pass a prebuilt ``seen_set`` to model steady state — the
-    engine maintains the bloom incrementally across rounds
-    (plans/crawl.py), it does not rebuild it per wave.
+    page_bytes), one row per seeded page. Pass a prebuilt ``seen_set`` to
+    model steady state — the engine maintains the bloom incrementally
+    across rounds (plans/crawl.py), it does not rebuild it per wave.
     ``parse_features=True`` adds the parse-side sketching stage (simhash /
     shingle / winnow counts over the page body) that a training-data
-    pipeline runs at crawl time."""
-    prepared = prepare_seeds(seeds, batch_size=1 << 62)
+    pipeline runs at crawl time.
+
+    A seed table with fewer input splits than the session has task slots
+    (one small file is one split) is spread over the slots right after
+    the scan, so the candidate side — canonicalization and the Bloom
+    probe — does not run in one task."""
+    urls = seeds.select("url")
+    slots = spark.sparkContext.defaultParallelism
+    if urls.rdd.getNumPartitions() < slots:
+        urls = urls.repartition(slots)
+    canonical = U.canonicalize(F.col("url"))
+    frontier = urls.select(
+        canonical.alias("canonical_url"),
+        U.url_hash(canonical).alias("url_hash"),
+    )
     return fetch_parse_from_frontier(
         spark,
-        prepared,
+        frontier,
         pages,
         seen=seen,
         seen_set=seen_set,
@@ -189,10 +215,13 @@ def fetch_parse_from_frontier(
     seen_set: SeenSet | None = None,
     parse_features: bool = False,
 ) -> DataFrame:
-    """Steady-state entry: the frontier is ALREADY prepared (canonicalized,
-    hashed, deduped) — in the engine it lives in committed snapshots
-    (plans/crawl.py), so per-wave work starts at seen-set filtering, not at
-    re-preparing the whole frontier."""
+    """Steady-state entry: the frontier is ALREADY prepared (canonical_url
+    and url_hash per row, e.g. ``prepare_seeds`` output, which in the
+    engine lives in committed snapshots — plans/crawl.py), so per-wave
+    work starts at seen-set filtering, not at re-preparing the whole
+    frontier. Duplicate frontier rows are harmless: the fetch is a
+    semi-join."""
+    frontier = prepared.select("canonical_url", "url_hash")
     if seen_set is None and seen is not None:
         seen_set = SeenSet(spark, n_bits=1 << 24)
         seen_set.load(seen)
@@ -200,28 +229,33 @@ def fetch_parse_from_frontier(
         # the seen table holds canonical URLs: the exact anti-join must
         # compare canonical forms, or a seen page seeded as
         # HTTPS://Host:443/p#frag passes it and is fetched again
-        prepared = seen_set.filter_new(
-            prepared.withColumn("url", F.col("canonical_url"))
+        frontier = seen_set.filter_new(
+            frontier.withColumn("url", F.col("canonical_url"))
         )
 
     # -- KEY PLAN SHAPE -------------------------------------------------
-    # (a) The raw page bodies (the 100 TB column) never enter a shuffle:
-    #     the scan projects (canonical_url, head, page_bytes) where
-    #     ``head`` is the leading prefix lines cut JVM-side — valid for
-    #     the receiver corpus format (fields lead; parse_error <=> fewer
-    #     than 3 lines total). The generic full-body path stays in
+    # (a) The raw page bodies (the 100 TB column) never enter an
+    #     exchange: the scan projects (canonical_url, head, page_bytes)
+    #     where ``head`` is the leading prefix lines cut JVM-side — valid
+    #     for the receiver corpus format (fields lead; parse_error <=>
+    #     fewer than 3 lines total). The generic full-body path stays in
     #     functions/extraction.py and is what the byte-parity gate runs.
-    # (b) Scan stages are pure JVM (codegen'd project + the runtime
-    #     Bloom-filter the optimizer injects from the wave side of the
-    #     join, spark.sql.optimizer.runtime.bloomFilter.enabled); Python
-    #     never runs inside a parquet-scan stage — measured pathological
-    #     under this sandbox's VM at high task counts, and on a real
-    #     cluster it would couple scan IO with UDF CPU in one stage.
-    # (c) Extraction is a native expression over the head string; the
-    #     one Arrow UDF (sketching over the EXTRACTED text — what a
-    #     training-data pipeline sketches, parse_features=True only) runs
-    #     in the post-join stage, fed ~200 B rows from the shuffle, and
-    #     is the only Python the wave runs.
+    # (b) The fetch is pages LEFT SEMI JOIN frontier on canonical_url.
+    #     The frontier side is one string per candidate; at the bulk
+    #     benchmark's 40k seeds the planner broadcasts it, so the pages
+    #     are scanned, semi-joined, parsed and written in one stage with
+    #     one task per pages split, and the pages never shuffle. A
+    #     frontier past the broadcast threshold hash-joins instead, both
+    #     sides shuffled by canonical_url (the pages side per (a)).
+    # (c) The frontier side is the seeds (spread over the task slots),
+    #     canonicalized, hashed and Bloom-flagged once per candidate in
+    #     one checkpointed frame (SeenSet._flagged); only its maybe-seen
+    #     share meets the seen table. No Python probe sits in this plan,
+    #     so none can be inferred onto the pages scan.
+    # (d) Extraction is a native expression over the head string; the
+    #     one Arrow UDF of the parse (sketching over the EXTRACTED text —
+    #     what a training-data pipeline sketches, parse_features=True
+    #     only) runs after the join, in the pages stage.
     # the 3-line head always fits in the leading 512 bytes of the receiver
     # corpus format (UA line <= ~130 B incl. the 2-byte Cyrillic pair, IP +
     # host lines far less), so cut BINARY-side before decoding — charset
@@ -244,7 +278,7 @@ def fetch_parse_from_frontier(
         F.octet_length("html").alias("page_bytes"),
     )
     fetched = pages_head.join(
-        prepared.select("canonical_url"), "canonical_url"
+        frontier.select("canonical_url"), "canonical_url", "left_semi"
     )
     parsed = fetched.withColumn(
         "r", extract_receiver_response(F.col("head"))

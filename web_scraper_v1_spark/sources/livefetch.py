@@ -34,8 +34,10 @@ in when it succeeds, so no connection is ever shared by two threads, and
 only idle ones are evicted; ``_POOL_MAX`` bounds the idle sockets a
 worker holds however many hosts it has seen. Rows move in Arrow batches;
 the only per-element Python is the I/O call itself, which no
-vectorization can remove. A stale keep-alive connection is recycled once
-per fetch (the pool's recycle path, tor_pool.go:129-143).
+vectorization can remove. A pooled keep-alive connection that the server
+has closed is recycled once per fetch (the pool's recycle path,
+tor_pool.go:129-143); a timeout or a refusal is not retried. Each request
+waits at most the caller's ``timeout``, on a pooled connection too.
 
 SOCKS5/Tor proxying and identity rotation stay control plane (O18/O21): a
 proxy would wrap ``_checkout`` here, and identity epochs rotate between
@@ -125,12 +127,19 @@ _POOL_LOCK = threading.Lock()
 
 def _checkout(
     host: str, port: int, timeout: float
-) -> http.client.HTTPConnection:
+) -> tuple[http.client.HTTPConnection, bool]:
+    """A connection to (host, port) that waits at most ``timeout`` per
+    socket operation, and whether it came from the pool (an idle
+    keep-alive connection the server may have closed meanwhile)."""
     with _POOL_LOCK:
         conn = _POOL.pop((host, port), None)
     if conn is None:
-        conn = http.client.HTTPConnection(host, port, timeout=timeout)
-    return conn
+        return http.client.HTTPConnection(host, port, timeout=timeout), False
+    # the pooled connection keeps the timeout of the call that opened it
+    conn.timeout = timeout
+    if conn.sock is not None:
+        conn.sock.settimeout(timeout)
+    return conn, True
 
 
 def _checkin(host: str, port: int, conn: http.client.HTTPConnection) -> None:
@@ -141,6 +150,11 @@ def _checkin(host: str, port: int, conn: http.client.HTTPConnection) -> None:
             evicted.append(_POOL.pop(next(iter(_POOL))))
     for old in evicted:
         old.close()
+
+
+# what a keep-alive connection the server closed while it sat idle in the
+# pool raises on its next request
+_STALE = (http.client.RemoteDisconnected, ConnectionResetError, BrokenPipeError)
 
 
 def _classify(exc: Exception) -> str:
@@ -185,24 +199,28 @@ def _fetch_one(
     # client ships the raw bytes (job_processor.go:117-118), so we do too
     # (putheader passes bytes through unencoded).
     headers = {"User-Agent": user_agent.encode("utf-8"), "Accept": "*/*"}
-    kind = KIND_TRANSPORT
-    for attempt in (0, 1):  # one recycle for a stale keep-alive connection
-        conn = _checkout(host, port, timeout)
+    conn, pooled = _checkout(host, port, timeout)
+    while True:
         try:
             conn.request("GET", target, headers=headers)
             resp = conn.getresponse()
             body = resp.read()
         except Exception as exc:
             conn.close()
-            kind = _classify(exc)
-            if attempt:
-                return -1, None, kind
+            # a pooled keep-alive connection the server has closed fails
+            # at once: recycle it, sending the GET again on a fresh
+            # connection. Any other failure (a timeout, a refusal, an
+            # error on a fresh connection) is the fetch's outcome: a
+            # second GET would wait as long again on a host already slow.
+            if not (pooled and isinstance(exc, _STALE)):
+                return -1, None, _classify(exc)
+            conn = http.client.HTTPConnection(host, port, timeout=timeout)
+            pooled = False
             continue
         _checkin(host, port, conn)
         if resp.status != 200:
             return resp.status, None, KIND_NON200
         return 200, bytes(body), None
-    return -1, None, kind
 
 
 def _fetch_all(
